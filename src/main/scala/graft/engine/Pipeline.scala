@@ -45,44 +45,13 @@ object Pipeline {
                  fused: Boolean = true,
                  native: Boolean = true,
                  universe: Option[DataFrame] = None): DataFrame = {
-    val ctx0 = CheckContext(spark, docs, schema, universe)
     val (rowLocal, others) = checks.partition(c => fused && c.isInstanceOf[RowLocalCheck])
-
-    // Shared single-scan mode (round-9, guide §2.4/§8): in the fused native
-    // path, ONE wide corpus scan computes the violation array AND every
-    // per-doc projection the corpus checks consume (kinds, type-classes,
-    // refs, class), localCheckpoint-materialized; every subplan then reads
-    // that doc-metadata-sized frame instead of re-scanning the corpus
-    // (measured: the composed pass ran ~7 corpus scans summing to ~10 s at
-    // 800k docs — the scans, not the operators, dominated). Identical rows
-    // by construction: every derived projection uses the same expressions
-    // as the per-check forms (PipelineGoldenSpec three-way equality).
-    // Opt out via spark.graft.validate.sharedScan=false.
     val useShared = rowLocal.nonEmpty && native &&
       spark.conf.getOption("spark.graft.validate.sharedScan").forall(_ != "false")
 
-    if (useShared) {
-      val cc = compiledFor(ctx0, rowLocal, schema)
-      val shared = ctx0.buildSharedScan(Seq(
-        graft.functions.ValidateSpans.validateSpans(col("spans"), cc).as("__viols")))
-      val ctx = ctx0.copy(sharedOpt = Some(shared))
-      val core = shared.select(col("doc_id"), explode(col("__viols")).as("v"))
-        .select(col("v.checkId").as("checkId"), lit("error").as("severity"),
-          col("doc_id").cast("string").as("docId"), col("v.kind").as("kind"),
-          col("v.value").as("value"), col("v.expected").as("expected"),
-          col("v.check").as("check"))
-      val extras = rowLocal.flatMap(c =>
-        c.asInstanceOf[RowLocalCheck].extraFrames(ctx)
-          .map(_.withColumn("check", lit(c.id))))
-      val otherFrames = others.map(c => c.run(ctx).withColumn("check", lit(c.id)))
-      // the union's partition count is the SUM over ~20 branches (~350
-      // partitions of a small frame): every downstream action — the count,
-      // a cache build, the verdict rollup — pays one task per partition in
-      // pure scheduling. A narrow coalesce bounds it at session
-      // parallelism; branch work below the exchanges is unaffected.
-      ((core +: extras) ++ otherFrames).reduce(_ unionByName _)
-        .coalesce(spark.sparkContext.defaultParallelism)
-    } else {
+    if (useShared) violationsWithCore(spark, docs, schema, checks, universe)._1
+    else {
+      val ctx0 = CheckContext(spark, docs, schema, universe)
       val fusedFrames: Seq[DataFrame] =
         if (rowLocal.isEmpty) Nil
         else {
@@ -96,6 +65,55 @@ object Pipeline {
       (fusedFrames ++ otherFrames).reduce(_ unionByName _)
     }
   }
+
+  /** The ONE shared-scan composition, returning (violations, core). A
+    * single wide corpus scan ([[CheckContext.buildSharedScan]]) computes
+    * the fused native violation array (`__viols`) AND every per-doc
+    * projection the corpus checks consume (kinds, type-classes, refs,
+    * class) into one cached frame; every subplan then reads that frame
+    * instead of re-scanning the corpus (measured: the composed pass ran
+    * ~7 corpus scans summing to ~10 s at 800k docs — the scans, not the
+    * operators, dominated). Identical rows by construction: every derived
+    * projection uses the same expressions as the per-check forms
+    * (PipelineGoldenSpec three-way equality).
+    *
+    * `core` is `__viols` exploded from the cached frame — the rows of
+    * [[rowLocalCore]] over `docs` — so a caller that persists both (the
+    * [[ValidatorApp]] full run, whose core feeds the next snapshot's
+    * [[violationsDelta]]) pays one corpus scan for the pair.
+    */
+  def violationsWithCore(spark: SparkSession, docs: DataFrame,
+                         schema: SchemaDef,
+                         checks: Seq[ConstraintCheck] = Checks.all,
+                         universe: Option[DataFrame] = None): (DataFrame, DataFrame) = {
+    val ctx0 = CheckContext(spark, docs, schema, universe)
+    val (rowLocal, others) = checks.partition(_.isInstanceOf[RowLocalCheck])
+    require(rowLocal.nonEmpty, "no row-local checks configured")
+    val shared = ctx0.buildSharedScan(Seq(graft.functions.ValidateSpans
+      .validateSpans(col("spans"), compiledFor(ctx0, rowLocal, schema)).as("__viols")))
+    val ctx = ctx0.copy(sharedOpt = Some(shared))
+    val core = coreRows(shared.select(col("doc_id"), explode(col("__viols")).as("v")))
+    val extras = rowLocal.flatMap(c =>
+      c.asInstanceOf[RowLocalCheck].extraFrames(ctx)
+        .map(_.withColumn("check", lit(c.id))))
+    val otherFrames = others.map(c => c.run(ctx).withColumn("check", lit(c.id)))
+    // the union's partition count is the SUM over ~20 branches (~350
+    // partitions of a small frame): every downstream action — the count,
+    // a cache build, the verdict rollup — pays one task per partition in
+    // pure scheduling. A narrow coalesce bounds it at session
+    // parallelism; branch work below the exchanges is unaffected.
+    (((core +: extras) ++ otherFrames).reduce(_ unionByName _)
+      .coalesce(spark.sparkContext.defaultParallelism), core)
+  }
+
+  /** Violation rows of the fused pass from `(doc_id, v)` — `v` one
+    * exploded element of the native violation array.
+    */
+  private def coreRows(exploded: DataFrame): DataFrame =
+    exploded.select(col("v.checkId").as("checkId"), lit("error").as("severity"),
+      col("doc_id").cast("string").as("docId"), col("v.kind").as("kind"),
+      col("v.value").as("value"), col("v.expected").as("expected"),
+      col("v.check").as("check"))
 
   /** The compiled subject-local constraint set for a row-local check list —
     * strictness and span layout resolved exactly as [[fusedCoreFrame]]'s
@@ -122,32 +140,24 @@ object Pipeline {
   private def fusedCoreFrame(ctx: CheckContext, rowLocal: Seq[ConstraintCheck],
                              native: Boolean, docs: DataFrame,
                              schema: SchemaDef): DataFrame = {
-        if (native) {
-            // the native single-pass expression: compiled validators,
-            // primitive counters, one output array — codegen'd end to end.
-            // Strictness and the optional span-datatype layout flow in from
-            // the configured check / the corpus schema (the datatype seam).
-            val cc = compiledFor(ctx, rowLocal, schema)
-            docs.select(col("doc_id"),
-              explode(graft.functions.ValidateSpans.validateSpans(col("spans"), cc)).as("v"))
-              .select(col("v.checkId").as("checkId"), lit("error").as("severity"),
-                col("doc_id").cast("string").as("docId"), col("v.kind").as("kind"),
-                col("v.value").as("value"), col("v.expected").as("expected"),
-                col("v.check").as("check"))
-          } else {
-            // HOF formulation (kept as the reference semantics oracle)
-            val tagged = rowLocal.map { c =>
-              transform(c.asInstanceOf[RowLocalCheck].violArray(ctx), v => struct(
-                v.getField("checkId").as("checkId"), v.getField("kind").as("kind"),
-                v.getField("value").as("value"), v.getField("expected").as("expected"),
-                lit(c.id).as("check")))
-            }
-            docs.select(col("doc_id"), explode(concat(tagged: _*)).as("v"))
-              .select(col("v.checkId").as("checkId"), lit("error").as("severity"),
-                col("doc_id").cast("string").as("docId"), col("v.kind").as("kind"),
-                col("v.value").as("value"), col("v.expected").as("expected"),
-                col("v.check").as("check"))
-          }
+    if (native) {
+      // the native single-pass expression: compiled validators,
+      // primitive counters, one output array — codegen'd end to end.
+      // Strictness and the optional span-datatype layout flow in from
+      // the configured check / the corpus schema (the datatype seam).
+      val cc = compiledFor(ctx, rowLocal, schema)
+      coreRows(docs.select(col("doc_id"),
+        explode(graft.functions.ValidateSpans.validateSpans(col("spans"), cc)).as("v")))
+    } else {
+      // HOF formulation (kept as the reference semantics oracle)
+      val tagged = rowLocal.map { c =>
+        transform(c.asInstanceOf[RowLocalCheck].violArray(ctx), v => struct(
+          v.getField("checkId").as("checkId"), v.getField("kind").as("kind"),
+          v.getField("value").as("value"), v.getField("expected").as("expected"),
+          lit(c.id).as("check")))
+      }
+      coreRows(docs.select(col("doc_id"), explode(concat(tagged: _*)).as("v")))
+    }
   }
 
   /** Canonical span-sequence digest: md5 of the offset-ordered
@@ -289,20 +299,19 @@ object Pipeline {
 
   /** Full violations assembled around an ALREADY-COMPUTED (typically
     * cached or persisted) row-local core: core ∪ the row-local checks'
-    * extraFrames ∪ the corpus checks, all over `docs`. With the core
-    * cached, writing the core AND the violations costs the fused scan
-    * once — the [[ValidatorApp]] flow that makes every full run's core a
-    * free by-product for the NEXT run's [[violationsDelta]].
+    * extraFrames ∪ the corpus checks, all over `docs` — the delta flow,
+    * whose core is fresh rows over the dirty slice ∪ carried rows. A full
+    * run derives its core from the shared scan instead
+    * ([[violationsWithCore]]).
     */
   def violationsFromCore(spark: SparkSession, docs: DataFrame,
                          schema: SchemaDef, core: DataFrame,
                          checks: Seq[ConstraintCheck] = Checks.all): DataFrame = {
     val ctx0 = CheckContext(spark, docs, schema, None)
-    // the ValidatorApp's full-run and delta flows assemble around a
-    // precomputed core, so the composed corpus checks here get the SAME
-    // shared single-scan treatment as violations() (one wide cached scan
-    // instead of one corpus scan per vocabulary/referential subplan);
-    // same opt-out conf. No __viols column — the core is given.
+    // the composed corpus checks get the SAME shared single-scan
+    // treatment as violations() (one wide cached scan instead of one
+    // corpus scan per vocabulary/referential subplan); same opt-out conf.
+    // No __viols column — the core is given.
     val useShared =
       spark.conf.getOption("spark.graft.validate.sharedScan").forall(_ != "false")
     val ctx = if (useShared) ctx0.copy(sharedOpt = Some(ctx0.buildSharedScan(Nil)))

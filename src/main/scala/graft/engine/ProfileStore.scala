@@ -141,20 +141,22 @@ object ProfileStore {
     } else Some(ColumnStats.mergeableProfile(
       spanMetrics(curDocs, nBuckets).filter(col("bucket").isin(touched: _*)),
       "bucket", MetricCols))
-    // carried rows must describe ONE snapshot — and, when the caller can
-    // name it, THE expected prior snapshot: a mispointed drift.prevProfile
-    // otherwise produced a committed profile silently mixing two corpora
-    // (round-8 advice, medium; the delta path's prevCore lineage gate is
-    // the model)
+    // carried rows must describe at most ONE snapshot — and, when the
+    // caller can name it, THE expected prior snapshot: a mispointed
+    // drift.prevProfile otherwise produced a committed profile silently
+    // mixing two corpora (round-8 advice, medium; the delta path's
+    // prevCore lineage gate is the model). An EMPTY prior profile (an
+    // empty prior corpus) is legal: it carries nothing, and every doc of
+    // the current snapshot is added, so every non-empty bucket is touched.
     val prevRows = read(spark, prevOutDir)
     val prevIds = prevRows.select("snapshotId").distinct()
       .limit(3).collect().map(_.getString(0)).toSeq
-    require(prevIds.size == 1,
+    require(prevIds.size <= 1,
       s"prior profile at $prevOutDir carries ${prevIds.size} distinct " +
         s"snapshotIds (${prevIds.mkString(", ")}) — torn or mixed directory")
-    expectPrevSnapshotId.foreach(want => require(prevIds.head == want,
-      s"prior profile at $prevOutDir describes snapshot '${prevIds.head}', " +
-        s"expected '$want' — mispointed drift.prevProfile"))
+    expectPrevSnapshotId.foreach(want => prevIds.foreach(got => require(got == want,
+      s"prior profile at $prevOutDir describes snapshot '$got', " +
+        s"expected '$want' — mispointed drift.prevProfile")))
     val carried = prevRows.drop("snapshotId")
       .filter(!col("part").isin(touched: _*))
     fresh.map(_.unionByName(carried)).getOrElse(carried)
@@ -217,9 +219,11 @@ object ProfileStore {
   def read(spark: SparkSession, outDir: String): DataFrame = {
     val all = spark.read.parquet(s"$outDir/profile")
     // `run` is partition-discovered — its physical type is whatever the
-    // directory values fit (int for small ids, long for timestamps)
-    val latest = all.agg(max(col("run")).cast("long")).collect()(0).getLong(0)
-    all.filter(col("run") === latest).drop("run")
+    // directory values fit (int for small ids, long for timestamps); an
+    // empty corpus's profile has no rows, hence no max
+    val latest = all.agg(max(col("run")).cast("long")).collect()(0)
+    (if (latest.isNullAt(0)) all else all.filter(col("run") === latest.getLong(0)))
+      .drop("run")
   }
 
   /** The corpus profile folded from the stored per-bucket rows — never

@@ -257,7 +257,7 @@ object ValidatorApp {
     var deltaDiff: Option[org.apache.spark.sql.DataFrame] = None
 
     // (violations, core-to-persist): every FULL run's core is a free
-    // by-product (the fused scan is cached once and feeds both writes), so
+    // by-product (the one shared scan is cached and feeds both writes), so
     // the NEXT run can validate incrementally against it
     val (violationsRaw, coreOpt) =
       if (isDelta) {
@@ -288,9 +288,10 @@ object ValidatorApp {
         (Pipeline.violationsFromCore(spark, all, cfg.schema, cachedCore, checks)
           .cache(), Some(cachedCore))
       } else if (!isResume && hasRowLocal) {
-        val core = Pipeline.rowLocalCore(spark, docs, cfg.schema, checks).cache()
-        (Pipeline.violationsFromCore(spark, docs, cfg.schema, core, checks)
-          .cache(), Some(core))
+        // the core is exploded from the shared scan's cache: no cache of
+        // its own, no second corpus scan
+        val (v, core) = Pipeline.violationsWithCore(spark, docs, cfg.schema, checks)
+        (v.cache(), Some(core))
       } else {
         (Pipeline.violations(spark, docs, cfg.schema, checks,
           universe = universe).cache(), None)
@@ -311,7 +312,7 @@ object ValidatorApp {
       .write.mode("overwrite").parquet(s"$outDir/violations/$runId") }
 
     // persist the row-local core with its lineage so the NEXT snapshot can
-    // run delta against it (reads from the cache — no second fused scan)
+    // run delta against it (reads from a cache — no second fused scan)
     stage("core_persist") { coreOpt.foreach(_
       .withColumn("constraintHash", lit(cfg.schema.constraintHash))
       .withColumn("checksHash", lit(cfg.checksHash))
@@ -403,22 +404,18 @@ object ValidatorApp {
     val snapshotViolations =
       if (isResume) readSnapshot(spark, cfg, outDir, manifest) else violations
 
-    cfg.xmlOut.foreach { p =>
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(p),
-        Reports.xml(snapshotViolations, Seq(sourceLabel),
-          Seq("schema:" + cfg.schema.constraintHash), fixLog = fixLog))
-    }
-    cfg.jsonOut.foreach { p =>
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(p),
-        Reports.json(snapshotViolations, Seq(sourceLabel),
-          Seq("schema:" + cfg.schema.constraintHash), fixLog = fixLog))
+    if (cfg.xmlOut.isDefined || cfg.jsonOut.isDefined) {
+      val rows = Reports.collect(snapshotViolations, fixLog = fixLog)
+      val (datasets, ontologies) =
+        (Seq(sourceLabel), Seq("schema:" + cfg.schema.constraintHash))
+      cfg.xmlOut.foreach(p => java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(p), Reports.renderXml(rows, datasets, ontologies)))
+      cfg.jsonOut.foreach(p => java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(p), Reports.renderJson(rows, datasets, ontologies)))
     }
     fixLog.foreach(_.unpersist())
 
-    val (nErr, nWarn) = stage("reports") {
-      (snapshotViolations.filter(col("severity") === "error").count(),
-        snapshotViolations.filter(col("severity") === "warning").count())
-    }
+    val (nErr, nWarn) = stage("reports") { Reports.severityTotals(snapshotViolations) }
     println(s"[graft] ${cfg.checkKeys.size} checks, $nErr errors, $nWarn warnings → $outDir")
 
     // persist + commit this run's stage-metrics rows (tiny; one file)

@@ -1,6 +1,6 @@
 package graft.report
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** XML / JSON report writers mirroring the reference's envelopes:
@@ -37,28 +37,41 @@ object Reports {
       case c => c.toString
     }
 
-  private def collectOrdered(violations: DataFrame, maxRowsPerCheck: Int) = {
+  /** A report's driver-side rows, collected once and rendered to either
+    * format: violations ordered (checkId, docId, kind, value) and capped
+    * per check, and the fix log's (subject, predicate, object) triples.
+    */
+  final case class ReportRows(rows: Seq[Row], fixes: Seq[(String, String, String)])
+
+  /** Collect a report's rows (see [[xml]] for `fixLog`; the triples are the
+    * reference's deletedNTriples flattening, CheckURIExistence.php:190-211).
+    */
+  def collect(violations: DataFrame, maxRowsPerCheck: Int = 100000,
+              fixLog: Option[DataFrame] = None): ReportRows = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("checkId")
       .orderBy(col("docId").asc_nulls_first, col("kind").asc_nulls_first,
         col("value").asc_nulls_first)
-    violations
+    val rows = violations
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= maxRowsPerCheck)
       .orderBy("checkId", "rn")
       .select("checkId", "severity", "docId", "kind", "value", "expected")
-      .collect()
-  }
-
-  /** (subject, predicate, object) triples of the fix log, ordered — the
-    * reference's deletedNTriples flattening (CheckURIExistence.php:190-211).
-    */
-  private def collectFixes(fixLog: Option[DataFrame], maxRows: Int): Seq[(String, String, String)] =
-    fixLog.toSeq.flatMap { log =>
+      .collect().toSeq
+    val fixes = fixLog.toSeq.flatMap { log =>
       log.select(col("doc_id"), col("kind"), explode(col("deleted_refs")).as("ref"))
-        .orderBy("doc_id", "kind", "ref").limit(maxRows).collect()
+        .orderBy("doc_id", "kind", "ref").limit(maxRowsPerCheck).collect()
         .map(r => (r.getString(0), r.getString(1), r.getString(2)))
     }
+    ReportRows(rows, fixes)
+  }
+
+  /** (errors, warnings) of a violations frame from ONE aggregation. */
+  def severityTotals(violations: DataFrame): (Long, Long) = {
+    val n = violations.groupBy("severity").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    (n.getOrElse("error", 0L), n.getOrElse("warning", 0L))
+  }
 
   /** Reference-shaped XML report string. `fixLog` (the frame
     * [[graft.engine.Fix.uriFixLog]] returns) renders as the reference's
@@ -66,9 +79,13 @@ object Reports {
     */
   def xml(violations: DataFrame, datasets: Seq[String], ontologies: Seq[String],
           maxRowsPerCheck: Int = 100000,
-          fixLog: Option[DataFrame] = None): String = {
-    val rows = collectOrdered(violations, maxRowsPerCheck)
-    val fixes = collectFixes(fixLog, maxRowsPerCheck)
+          fixLog: Option[DataFrame] = None): String =
+    renderXml(collect(violations, maxRowsPerCheck, fixLog), datasets, ontologies)
+
+  /** [[xml]] over already-collected rows. */
+  def renderXml(collected: ReportRows, datasets: Seq[String],
+                ontologies: Seq[String]): String = {
+    val ReportRows(rows, fixes) = collected
     val sb = new StringBuilder("<checks>\n")
     rows.groupBy(r => checkName(r.getString(0))).toSeq.sortBy(_._1).foreach {
       case (name, rs) =>
@@ -123,9 +140,13 @@ object Reports {
     */
   def json(violations: DataFrame, datasets: Seq[String], ontologies: Seq[String],
            maxRowsPerCheck: Int = 100000,
-           fixLog: Option[DataFrame] = None): String = {
-    val rows = collectOrdered(violations, maxRowsPerCheck)
-    val fixes = collectFixes(fixLog, maxRowsPerCheck)
+           fixLog: Option[DataFrame] = None): String =
+    renderJson(collect(violations, maxRowsPerCheck, fixLog), datasets, ontologies)
+
+  /** [[json]] over already-collected rows. */
+  def renderJson(collected: ReportRows, datasets: Seq[String],
+                 ontologies: Seq[String]): String = {
+    val ReportRows(rows, fixes) = collected
     val checks = rows.groupBy(r => checkName(r.getString(0))).toSeq.sortBy(_._1).map {
       case (name, rs) =>
         def entries(sev: String) = rs.filter(_.getString(1) == sev).map { r =>

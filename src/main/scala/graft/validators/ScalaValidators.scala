@@ -130,12 +130,15 @@ object ScalaValidators {
   }
 
   /** EXACT hand evaluation of LanguageRegex
-    * (`^[a-zA-Z]{1,8}(-[a-zA-Z0-9]{1,8})*$`) — full equivalence, no
-    * fallback needed (ScalaValidatorParitySpec fuzzes it against the
-    * pattern).
+    * (`^[a-zA-Z]{1,8}(-[a-zA-Z0-9]{1,8})*$`) under `find()` — full
+    * equivalence, no fallback needed (ScalaValidatorParitySpec fuzzes it
+    * against the pattern). Without MULTILINE, `$` also matches before ONE
+    * final line terminator (`\r\n`, `\n`, `\r`, `\u0085`, `\u2028`,
+    * `\u2029`), as PCRE's `$` does before a final `\n`: "en\n" is a
+    * language tag to the Column form and the reference alike.
     */
   private def languageExact(s: String): Boolean = {
-    val n = s.length
+    val n = s.length - finalTerminatorLength(s)
     var i = 0
     var first = true
     while (i <= n) {
@@ -151,6 +154,16 @@ object ScalaValidators {
       first = false
     }
     false
+  }
+
+  /** Length of the line terminator that ends `s` (0 when none) — where a
+    * non-MULTILINE `$` may match besides the end of input.
+    */
+  private def finalTerminatorLength(s: String): Int = {
+    val n = s.length
+    if (n >= 2 && s.charAt(n - 2) == '\r' && s.charAt(n - 1) == '\n') 2
+    else if (n >= 1 && "\n\r\u0085\u2028\u2029".indexOf(s.charAt(n - 1).toInt) >= 0) 1
+    else 0
   }
 
   private val dateTimeRx = rx(XsdValidators.DateTimeRegex)

@@ -136,6 +136,41 @@ class ProfileStoreSpec extends SparkTestBase {
     docsA.unpersist(); docsB.unpersist()
   }
 
+  test("delta profile over an EMPTY prior profile ≡ full profile; mixed or mispointed priors refused") {
+    val tmp = Files.createTempDirectory("graft-profile-empty").toString
+    val docsB = DocGen.documents(spark, 1500L).toDF().cache()
+    val empty = docsB.limit(0)
+    // an empty prior corpus profiles to zero rows (0 snapshotIds)
+    ProfileStore.writeRun(spark, empty, 8, s"$tmp/outA", 1L, "snap-empty")
+    assert(ProfileStore.read(spark, s"$tmp/outA").count() == 0L)
+    ProfileStore.writeRunDelta(spark, empty, s"$tmp/outA", docsB, 8,
+      s"$tmp/outB", 2L, "snap-b", expectPrevSnapshotId = Some("snap-empty"))
+    ProfileStore.writeRun(spark, docsB, 8, s"$tmp/outFull", 3L, "snap-b")
+    val exact = Seq("part", "column", "n", "nulls", "min_d", "max_d", "min_s", "max_s", "sum_l")
+    def keyed(dir: String) = ProfileStore.read(spark, dir)
+      .select(exact.map(col): _*).collect().map(_.toSeq).toSet
+    assert(keyed(s"$tmp/outB").size == 8 * ProfileStore.MetricCols.size)
+    assert(keyed(s"$tmp/outB") == keyed(s"$tmp/outFull"))
+
+    // more than one snapshotId in the prior: torn or mixed, refused
+    ProfileStore.read(spark, s"$tmp/outFull")
+      .withColumn("snapshotId", when(col("part") === 0, lit("other"))
+        .otherwise(col("snapshotId")))
+      .write.parquet(s"$tmp/outMixed/profile/run=5")
+    val mixed = intercept[IllegalArgumentException] {
+      ProfileStore.writeRunDelta(spark, docsB, s"$tmp/outMixed", docsB, 8,
+        s"$tmp/outC", 6L, "snap-c")
+    }
+    assert(mixed.getMessage.contains("2 distinct snapshotIds"))
+    // one snapshotId, but not the expected one: mispointed, refused
+    val mispointed = intercept[IllegalArgumentException] {
+      ProfileStore.writeRunDelta(spark, docsB, s"$tmp/outFull", docsB, 8,
+        s"$tmp/outD", 7L, "snap-d", expectPrevSnapshotId = Some("snap-a"))
+    }
+    assert(mispointed.getMessage.contains("mispointed"))
+    docsB.unpersist()
+  }
+
   test("bucket-partitioned layout: the delta's touched-bucket filter prunes the scan to the touched directories") {
     val tmp = Files.createTempDirectory("graft-profile-prune").toString
     val docs = DocGen.documents(spark, 2000L).toDF()

@@ -6,6 +6,98 @@ import java.nio.file.Files
 
 class ValidatorAppSpec extends SparkTestBase {
 
+  /** The examples/run.properties check set (10 checks) over the DocGen
+    * fixture schema, with reports, manifest and profile.
+    */
+  private def fullConf(docs: String, out: String): String =
+    s"""data.documents = $docs
+       |data.snapshotId = snap-full
+       |checks = kinds-defined, classes-defined, uri-existence, object-range, domain, datatype, cardinality, some, only, doc-id-unique
+       |schema.kind.txt:title = datatype||http://www.w3.org/2001/XMLSchema#string
+       |schema.kind.txt:count = datatype||http://www.w3.org/2001/XMLSchema#unsignedInt
+       |schema.kind.txt:date = datatype||http://www.w3.org/2001/XMLSchema#dateTime
+       |schema.kind.txt:lang = datatype||http://www.w3.org/2001/XMLSchema#language
+       |schema.kind.txt:score = datatype||dt:score
+       |schema.kind.txt:flag = datatype||http://www.w3.org/2001/XMLSchema#boolean
+       |schema.kind.txt:uri = datatype||http://www.w3.org/2001/XMLSchema#anyURI
+       |schema.kind.txt:note = datatype||
+       |schema.kind.med:image = object|class:Article;class:Page|class:Image
+       |schema.kind.med:link = object||class:Root
+       |schema.kind.med:attach = object||class:Media
+       |schema.kind.med:thumb = object||
+       |schema.class = class:Article, class:Image, class:Video, class:Audio, class:Page, class:Post, class:Media, class:Content, class:Root
+       |schema.subclass = class:Image<class:Media, class:Video<class:Media, class:Audio<class:Media
+       |schema.subclass = class:Article<class:Content, class:Page<class:Content, class:Post<class:Content
+       |schema.subclass = class:Media<class:Root, class:Content<class:Root
+       |schema.restriction = class:Article|txt:title|min|1|http://www.w3.org/2001/XMLSchema#string|
+       |schema.restriction = class:Article|med:image|max|2||class:Image
+       |schema.restriction = class:Article|txt:date|exact|1|http://www.w3.org/2001/XMLSchema#dateTime|
+       |schema.restriction = class:Article|txt:lang|some|0|http://www.w3.org/2001/XMLSchema#language|
+       |schema.restriction = class:Article|txt:score|only|0|dt:score|
+       |schema.restriction = class:Article|med:attach|some|0||class:Video
+       |schema.restriction = class:Article|med:attach|only|0||class:Video
+       |schema.facet = dt:score|http://www.w3.org/2001/XMLSchema#decimal||0|100
+       |output.xml = $out/report.xml
+       |output.json = $out/report.json
+       |manifest = $out/manifest.jsonl
+       |buckets = 8
+       |profile.enabled = true
+       |""".stripMargin
+
+  /** Run the app once in full mode over a fresh DocGen corpus. */
+  private def fullRun(n: Long): (String, ValidatorConfig) = {
+    val tmp = Files.createTempDirectory("graft-full").toString
+    DocGen.documents(spark, n).toDF().write.mode("overwrite").parquet(s"$tmp/docs")
+    Files.writeString(java.nio.file.Paths.get(s"$tmp/run.properties"),
+      fullConf(s"$tmp/docs", s"$tmp/out"))
+    val cfg = ValidatorConfig.load(s"$tmp/run.properties")
+    ValidatorApp.run(spark, cfg, s"$tmp/out")
+    (tmp, cfg)
+  }
+
+  private def assertSameMultiset(got: org.apache.spark.sql.DataFrame,
+                                 want: org.apache.spark.sql.DataFrame, what: String): Unit = {
+    val cols = want.columns.sorted.map(org.apache.spark.sql.functions.col)
+    val (g, w) = (got.select(cols: _*), want.select(cols: _*))
+    val (extra, missing) = (g.exceptAll(w).count(), w.exceptAll(g).count())
+    assert(extra == 0 && missing == 0, s"$what: $extra extra, $missing missing rows")
+  }
+
+  test("full run: core, violations and verdicts equal the library's forms") {
+    val (tmp, cfg) = fullRun(3000L)
+    val out = s"$tmp/out"
+    val docs = spark.read.parquet(s"$tmp/docs")
+    val checks = cfg.configuredChecks
+    val coreRuns = new java.io.File(s"$out/core").listFiles().filter(_.isDirectory)
+    assert(coreRuns.length == 1)
+    val core = spark.read.parquet(coreRuns(0).getAbsolutePath)
+    assert(core.select("constraintHash", "checksHash").distinct().collect().toSeq
+      .map(r => (r.getString(0), r.getString(1))) ==
+      Seq((cfg.schema.constraintHash, cfg.checksHash)))
+    assertSameMultiset(core.drop("constraintHash", "checksHash"),
+      Pipeline.rowLocalCore(spark, docs, cfg.schema, checks), "core")
+    val committed = ValidatorApp.readSnapshot(spark, cfg, out,
+      Some(new Manifest(s"$out/manifest.jsonl")))
+    val want = Pipeline.violations(spark, docs, cfg.schema, checks)
+    assert(want.count() > core.count()) // corpus checks fire beyond the core
+    assertSameMultiset(committed, want, "violations")
+    assertSameMultiset(ValidatorApp.readVerdicts(spark, out),
+      Pipeline.verdicts(spark, docs, cfg.schema, cfg.snapshotId, cfg.nBuckets, checks),
+      "verdicts")
+  }
+
+  test("full run: core and violations from one corpus scan, per the run's metrics rows") {
+    val (tmp, _) = fullRun(1200L)
+    val scans = spark.read.parquet(s"$tmp/out/metrics").collect()
+      .map(r => r.getAs[String]("stage") -> r.getAs[Long]("scans")).toMap
+    // the shared scan feeds the violations write and the core write
+    // reads its cache; the one other scan is DocIdUnique's doc_id column.
+    // A separate core scan (and cache) would make it 3.
+    assert(scans("core_persist") == 0L, s"core_persist scans: $scans")
+    assert(scans("validate_persist") + scans("core_persist") == 2L,
+      s"validate_persist + core_persist scans: $scans")
+  }
+
   test("config round-trip: dvt.ini-equivalent properties file → SchemaDef + pipeline") {
     val tmp = Files.createTempDirectory("graft-app").toString
     DocGen.documents(spark, 2000L).toDF()

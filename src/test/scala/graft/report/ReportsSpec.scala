@@ -54,6 +54,48 @@ class ReportsSpec extends SparkTestBase {
     !row.isNullAt(0) && row.getStruct(0).getSeq[Any](0).nonEmpty
   }
 
+  private def fixLogDf = {
+    val session = spark
+    import session.implicits._
+    Seq(("doc:000000000007", "med:link", Seq("doc:missing:1", "doc:<&>")),
+      ("doc:000000000003", "med:link", Seq("doc:missing:2")))
+      .toDF("doc_id", "kind", "deleted_refs")
+  }
+
+  test("one collected row set renders byte-identically to xml/json, with fixes and a cap") {
+    val (ds, onto) = (Seq("ds:a", "ds:b"), Seq("onto:x"))
+    for ((cap, fixLog) <- Seq((100000, None), (100000, Some(fixLogDf)), (1, Some(fixLogDf)))) {
+      val rows = Reports.collect(violDf, cap, fixLog)
+      assert(Reports.renderXml(rows, ds, onto) == Reports.xml(violDf, ds, onto, cap, fixLog))
+      assert(Reports.renderJson(rows, ds, onto) == Reports.json(violDf, ds, onto, cap, fixLog))
+      assert(rows.rows.groupBy(_.getString(0)).values.forall(_.size <= cap))
+      assert(rows.fixes.size == fixLog.map(_ => math.min(cap, 3)).getOrElse(0))
+    }
+    // the cap keeps the FIRST rows of the (docId, kind, value) order, and
+    // the fix block renders under URI-EXISTENCE
+    val capped = Reports.collect(violDf, 1, Some(fixLogDf))
+    assert(capped.rows.map(_.getString(4)) == Seq(null, "3", "doc:<&>"))
+    assert(capped.fixes == Seq(("doc:000000000003", "med:link", "doc:missing:2")))
+    val x = Reports.renderXml(capped, ds, onto)
+    assert(x.contains("<fixes>") && x.contains("<subject>doc:000000000003</subject>"))
+    assert(!x.contains("doc:missing:1"))
+    assert(ujsonLikeParse(Reports.renderJson(capped, ds, onto)))
+  }
+
+  test("severity totals: one groupBy equals the two filtered counts") {
+    import org.apache.spark.sql.functions.col
+    val noWarnings = violDf.filter(col("severity") =!= "warning")
+    val none = violDf.limit(0)
+    for (df <- Seq(violDf, noWarnings, none)) {
+      val want = (df.filter(col("severity") === "error").count(),
+        df.filter(col("severity") === "warning").count())
+      assert(Reports.severityTotals(df) == want)
+    }
+    assert(Reports.severityTotals(violDf) == ((3L, 1L)))
+    assert(Reports.severityTotals(noWarnings) == ((3L, 0L)))
+    assert(Reports.severityTotals(none) == ((0L, 0L)))
+  }
+
   test("checkName strips the numeric code") {
     assert(Reports.checkName("URI-EXISTENCE-100") == "URI-EXISTENCE")
     assert(Reports.checkName("OWL-RESTRICTION-MAX-101") == "OWL-RESTRICTION-MAX")

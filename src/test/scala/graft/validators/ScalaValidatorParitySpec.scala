@@ -25,12 +25,30 @@ class ScalaValidatorParitySpec extends SparkTestBase {
       "Family Guy@12", "dGhpcyBpcyBhIHRlc3Q=", "dGhpcyBpcyBhIHRlc3Q-",
       // decimal(38,0) precision edge: 38 digits fit, 39 overflow, and
       // leading zeros don't count toward precision
-      "9" * 38, "9" * 39, "-" + "9" * 38, "-" + "9" * 39, "0" * 39, "0" * 5 + "1" * 38)
+      "9" * 38, "9" * 39, "-" + "9" * 38, "-" + "9" * 39, "0" * 39, "0" * 5 + "1" * 38,
+      // a non-MULTILINE `$` also matches before one final line terminator
+      "en\n", "en-GB\r\n", "en\r", "en\u0085", "en\u2028", "en\u2029",
+      "en\n\n", "en\n\r", "\n", "en-\n", "e\nn")
     val fuzz = (0 until 200).map { _ =>
       val len = rnd.nextInt(12)
       (0 until len).map(_ => "0123456789+-.eEazAZ:# @<&".charAt(rnd.nextInt(25))).mkString
     }
     corpus ++ fuzz
+  }
+
+  test("language: a final line terminator is accepted as the Column form's rlike accepts it") {
+    val session = spark
+    import session.implicits._
+    val lang = graft.model.SchemaDef.XSD + "language"
+    val cases = Seq("en" -> true, "en\n" -> true, "en-GB\r\n" -> true,
+      "en\r" -> true, "en\u2028" -> true, "en\n\n" -> false, "en\n\r" -> false,
+      "\n" -> false, "en-\n" -> false, "e\nn" -> false)
+    val column = cases.map(_._1).toDF("v")
+      .select(XsdValidators.byDatatype(lang)(col("v"))).collect().map(_.getBoolean(0))
+    cases.lazyZip(column).foreach { case ((v, want), c) =>
+      assert(c == want, s"column form on ${v.map(_.toInt)}")
+      assert(ScalaValidators.forDatatype(lang)(v) == want, s"scala form on ${v.map(_.toInt)}")
+    }
   }
 
   test("ScalaValidators == XsdValidators on corpus + fuzz inputs, all datatypes") {
