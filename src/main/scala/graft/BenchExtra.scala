@@ -85,11 +85,6 @@ object BenchExtra {
     bench("vf_scan_spans") { noop(docs.select(col("spans"))) }
     bench("vf_core") { noop(Pipeline.rowLocalCore(spark, docs, schema)) }
     bench("vf_full") { Pipeline.violations(spark, docs, schema).count() }
-    bench("vf_full_noshare") {
-      spark.conf.set("spark.graft.validate.sharedScan", "false")
-      try Pipeline.violations(spark, docs, schema).count()
-      finally spark.conf.unset("spark.graft.validate.sharedScan")
-    }
     bench("vf_full_noaqe") {
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       try Pipeline.violations(spark, docs, schema).count()

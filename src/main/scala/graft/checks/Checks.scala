@@ -3,7 +3,6 @@ package graft.checks
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model._
-import graft.validators.XsdValidators
 
 /** The reference's check inventory (SURVEY.md §2.8) re-expressed as Spark
   * plans over the `documents` table. Key inversion vs the reference: where
@@ -21,8 +20,8 @@ import graft.validators.XsdValidators
   *    single-scan and shuffle-free: all restrictions evaluate row-locally
   *    into an array of violation structs, exploded once. The reference's
   *    `group by ?s having count(...)` (CheckOwlRestrictionMax.php:153-164)
-  *    degenerates to `size(filter(spans.kind, ...))` because the grouping
-  *    key is the row key. The domain check needs NO join at all — the
+  *    degenerates to a per-row count of the property's spans because the
+  *    grouping key is the row key. The domain check needs NO join at all — the
   *    allowed (kind → classes) table is driver-known and compiles into the
   *    predicate.
   *  - Vocabulary checks (defined kinds/classes) shuffle only the distinct
@@ -76,7 +75,6 @@ final case class CheckContext(
       st.fieldNames.indexOf("datatype")
     case _ => -1
   }
-  def hasSpanDatatype: Boolean = spanDatatypeOrd >= 0
 
   /** Number of fields in the span struct (4, or 5 with the datatype seam). */
   lazy val spanArity: Int = docs.schema.find(_.name == "spans").map(_.dataType) match {
@@ -357,28 +355,33 @@ final case class CheckContext(
     else col("targetCls").isin(
       schema.subClosure.getOrElse(classExpr, Set(classExpr)).toSeq: _*)
 
-  /** Lexical validator for a datatype URI, facet-aware. */
-  def validatorFor(dt: String): Column => Column =
-    schema.facets.find(_.datatype == dt) match {
-      case Some(f) => XsdValidators.facet(f)
-      case None    => XsdValidators.forDatatype(dt)
+  /** The native fused violation array of the row-local checks `rowLocal`:
+    * ONE [[graft.functions.ValidateSpans]] expression over `spans`, its
+    * constraint set compiled for exactly these checks — strictness from
+    * the configured datatype check, span layout (arity, optional
+    * `datatype` field) from the corpus schema (the datatype seam).
+    */
+  def fusedViolations(rowLocal: Seq[ConstraintCheck]): Column = {
+    val strictDt = rowLocal.exists {
+      case c: CheckDatatypeImpl => c.strict
+      case _ => false
     }
+    graft.functions.ValidateSpans.validateSpans(col("spans"),
+      graft.functions.CompiledConstraints.from(schema, rowLocal.map(_.id).toSet,
+        strictDt = strictDt, spanArity = spanArity, dtOrdinal = spanDatatypeOrd))
+  }
+
+  /** Violation rows of the fused row-local pass over `docs` (no extras):
+    * a pure per-document function of (spans, schema).
+    */
+  def rowLocalCore(rowLocal: Seq[ConstraintCheck]): DataFrame =
+    CheckContext.coreRows(docs, fusedViolations(rowLocal))
 
   def violation(checkId: String, severity: String, docId: Column, kind: Column,
                 value: Column, expected: Column): Seq[Column] = Seq(
     lit(checkId).as("checkId"), lit(severity).as("severity"),
     docId.cast("string").as("docId"), kind.cast("string").as("kind"),
     value.cast("string").as("value"), expected.cast("string").as("expected"))
-
-  /** Explode a row-local array of violation structs
-    * (checkId, kind, value, expected) into standard violation rows —
-    * the shared tail of every single-scan subject-local check.
-    */
-  def explodeViolations(violArray: Column): DataFrame =
-    docs.select(col("doc_id"), explode(violArray).as("v"))
-      .select(violation(null, "error", col("doc_id"), col("v.kind"),
-        col("v.value"), col("v.expected")).patch(0,
-        Seq(col("v.checkId").as("checkId")), 1): _*)
 
   /** A violation struct literal for the row-local array pattern. */
   def vStruct(checkId: String, kind: Column, value: Column, expected: Column): Column =
@@ -389,14 +392,18 @@ final case class CheckContext(
   def emptyViolations: DataFrame =
     docs.limit(0).select(violation("NONE", "error",
       lit(null), lit(null), lit(null), lit(null)): _*)
-
-  /** Typed empty violation-struct array. */
-  def emptyVArray: Column = array().cast(CheckContext.VArrayType)
 }
 
 object CheckContext {
-  val VArrayType =
-    "array<struct<checkId:string,kind:string,value:string,expected:string>>"
+  /** Violation rows (with the owning `check`) from `frame`'s `doc_id` and
+    * the fused violation array `viols` — one row per array element.
+    */
+  def coreRows(frame: DataFrame, viols: Column): DataFrame =
+    frame.select(col("doc_id"), explode(viols).as("v"))
+      .select(col("v.checkId").as("checkId"), lit("error").as("severity"),
+        col("doc_id").cast("string").as("docId"), col("v.kind").as("kind"),
+        col("v.value").as("value"), col("v.expected").as("expected"),
+        col("v.check").as("check"))
 
   /** The current composed pass's registered caches (see
     * [[CheckContext.buildSharedScan]]); bounded to one pass per JVM —
@@ -426,20 +433,20 @@ sealed trait ConstraintCheck {
   def configure(params: Map[String, String]): ConstraintCheck = this
 }
 
-/** A check whose error path is a row-local violation-struct array. Such
-  * checks are FUSABLE: [[graft.engine.Pipeline.violations]] concatenates the
-  * arrays of all row-local checks into one projection and explodes once —
-  * all subject-local validation in a single scan of the table.
+/** A check whose error path is row-local: a pure function of one
+  * document's spans, evaluated by the native
+  * [[graft.functions.ValidateSpans]] pass. Such checks FUSE:
+  * [[graft.engine.Pipeline.violations]] compiles all row-local checks into
+  * one expression, exploded once — all subject-local validation in a
+  * single scan of the table. Alone, a check runs the same pass compiled
+  * for itself.
   */
 trait RowLocalCheck extends ConstraintCheck {
-  /** `array<struct<checkId,kind,value,expected>>` of this row's violations. */
-  def violArray(ctx: CheckContext): Column
   /** Non-row-local extras (warning passes etc.); default none. */
   def extraFrames(ctx: CheckContext): Seq[DataFrame] = Nil
-  final def run(ctx: CheckContext): DataFrame = {
-    val base = ctx.explodeViolations(violArray(ctx))
-    extraFrames(ctx).foldLeft(base)(_ unionByName _)
-  }
+  final def run(ctx: CheckContext): DataFrame =
+    (ctx.rowLocalCore(Seq(this)).drop("check") +: extraFrames(ctx))
+      .reduce(_ unionByName _)
 }
 
 /** Undefined-kind check (CheckPropertiesDefined.php:41-84):
@@ -549,22 +556,6 @@ object CheckObjectRange extends ConstraintCheck {
   */
 object CheckDomain extends RowLocalCheck {
   val id = "OBJECT-DATATYPE-PROPERTIES-DOMAIN"
-  def violArray(ctx: CheckContext): Column = {
-    val domainKinds = ctx.schema.kinds.filter(_.domain.nonEmpty)
-    if (domainKinds.isEmpty) return ctx.emptyVArray
-    val cls = coalesce(ctx.clsCol, lit(SchemaDef.OWL_THING))
-    def allowed(k: KindDef): Seq[String] =
-      k.domain.flatMap(d => ctx.schema.subClosure.getOrElse(d, Set(d))).distinct
-    // row-local: distinct used domain-kinds whose (kind, cls) is not allowed
-    val badKinds = filter(
-      array_distinct(filter(ctx.field("kind"),
-        k => k.isin(domainKinds.map(_.kind): _*))),
-      k => !domainKinds.map(kd =>
-        k === kd.kind && cls.isin(allowed(kd): _*)).reduce(_ || _))
-    transform(badKinds, k =>
-      ctx.vStruct(s"$id-100", k, cls, lit("subject class in kind's domain")))
-  }
-
   /** `-50`: distinct used kinds whose declared domain is empty (or that are
     * undefined in the schema), excluding the reference's predicate filter
     * (rdf:type analogue + the two excluded URIs).
@@ -586,8 +577,8 @@ object CheckDomain extends RowLocalCheck {
   * warning `-50` (:104-115).
   *
   * Lexical validity (`-101`, facet-aware for custom datatypes) evaluates in
-  * a single scan, shuffle-free: offending spans are filtered row-locally
-  * pre-explode with one CASE dispatch per kind.
+  * a single scan, shuffle-free: offending spans are selected row-locally,
+  * pre-explode, by each kind's compiled validator.
   *
   * Strict mode (`datatype?mode=strict`, dvt-style per-check param) engages
   * when the corpus carries the span-level `datatype` annotation column:
@@ -609,59 +600,6 @@ class CheckDatatypeImpl(val strict: Boolean) extends RowLocalCheck {
     else if (params.get("mode").contains("loose")) new CheckDatatypeImpl(false)
     else this
 
-  def violArray(ctx: CheckContext): Column = {
-    val dtKinds = ctx.schema.kinds.filter(k => k.kindType == "datatype" && k.range != null)
-    if (dtKinds.isEmpty) return ctx.emptyVArray
-
-    def validOf(kind: Column, text: Column): Column =
-      dtKinds.foldLeft(lit(true)) { (acc, k) =>
-        when(kind === k.kind, ctx.validatorFor(k.range)(text)).otherwise(acc)
-      }
-    // the declared range: doubles as the violation's `expected` field
-    def expectedOf(kind: Column): Column =
-      dtKinds.foldLeft(lit(null).cast("string")) { (acc, k) =>
-        when(kind === k.kind, lit(k.range)).otherwise(acc)
-      }
-
-    val strictOn = strict && ctx.hasSpanDatatype
-    val spans =
-      if (strictOn) ctx.zipped("kind", "text", "datatype")
-      else ctx.zipped("kind", "text")
-    val isDtKind = (p: Column) =>
-      p.getField("kind").isin(dtKinds.map(_.kind): _*) && p.getField("text").isNotNull
-
-    if (!strictOn) {
-      val badSpans = filter(spans, p => isDtKind(p) &&
-        !coalesce(validOf(p.getField("kind"), p.getField("text")), lit(false)))
-      transform(badSpans, p =>
-        ctx.vStruct(s"$id-101", p.getField("kind"), p.getField("text"),
-          expectedOf(p.getField("kind"))))
-    } else {
-      val xsdString = SchemaDef.XSD + "string"
-      val customRanges = dtKinds.map(_.range).filter(ctx.schema.isCustomDatatype).distinct
-      def asserted(p: Column): Column =
-        coalesce(p.getField("datatype"), lit(SchemaDef.RDFS + "Literal"))
-      def whitelisted(p: Column): Column =
-        SchemaDef.VirtuosoCoercions.foldLeft(lit(false)) { case (acc, (range, dts)) =>
-          when(expectedOf(p.getField("kind")) === range,
-            asserted(p).isin(dts.toSeq: _*)).otherwise(acc)
-        }
-      def mismatch(p: Column): Column =
-        asserted(p) =!= expectedOf(p.getField("kind")) &&
-          asserted(p) =!= xsdString && !whitelisted(p)
-      def skipLexical(p: Column): Column = mismatch(p) ||
-        (expectedOf(p.getField("kind")).isin(customRanges: _*) && asserted(p) === xsdString)
-
-      val flagged = filter(spans, p => isDtKind(p) && (mismatch(p) ||
-        (!skipLexical(p) &&
-          !coalesce(validOf(p.getField("kind"), p.getField("text")), lit(false)))))
-      transform(flagged, p =>
-        ctx.vStruct(null, p.getField("kind"), p.getField("text"),
-          expectedOf(p.getField("kind"))).withField("checkId",
-          when(mismatch(p), lit(s"$id-100")).otherwise(lit(s"$id-101"))))
-    }
-  }
-
   override def extraFrames(ctx: CheckContext): Seq[DataFrame] = {
     val noRange = ctx.schema.kinds.filter(k => k.kindType == "datatype" && k.range == null).map(_.kind)
     if (noRange.isEmpty) Nil
@@ -682,8 +620,8 @@ object CheckDatatype extends CheckDatatypeImpl(true)
 
 /** Cardinality restrictions (CheckOwlRestriction{Max,Min,Exact}.php): the
   * reference's `group by ?s ?onProperty having count(...)` is re-expressed
-  * shuffle-free as `size(filter(spans.kind, == p))` — the grouping key is
-  * the row key — and ALL restrictions evaluate in ONE scan via the
+  * shuffle-free as a per-row count of the property's spans — the grouping
+  * key is the row key — and ALL restrictions evaluate in ONE scan via the
   * violation-array pattern. Includes the zero-occurrence edge cases the
   * reference handles with separate `filter not exists` queries
   * (CheckOwlRestrictionMin.php:211-223, Exact:208-220).
@@ -697,86 +635,16 @@ object CheckDatatype extends CheckDatatypeImpl(true)
   * intent is the cardinality N — an exactly-0 restriction is satisfied by
   * zero occurrences). This engine implements the intent: EXACT-102 fires
   * when count = 0 and the declared cardinality is non-zero.
+  *
+  * Alongside the counts, the reference runs a lexical-validity pass over
+  * the restricted property's values on instances of the class
+  * (CheckOwlRestrictionMax.php:244-550, Min:370-612, Exact:368-610):
+  * every distinct value failing the dataRange validator is an error —
+  * MAX-102 / MIN-104 / EXACT-104. Also row-local here (distinct within
+  * the row, which IS the subject).
   */
 object CheckCardinality extends RowLocalCheck {
   val id = "OWL-RESTRICTION-CARD"
-
-  /** Data-range (and unqualified) restrictions evaluate row-locally: spans
-    * carry no datatype annotations in our model (the expected datatype is
-    * schema-side), so datatype-qualified counts equal unqualified counts —
-    * documented deviation from the reference's `datatype(?value)` filter
-    * (CheckOwlRestrictionMax.php:122-150).
-    *
-    * Alongside the counts, the reference runs a lexical-validity pass over
-    * the restricted property's values on instances of the class
-    * (CheckOwlRestrictionMax.php:244-550, Min:370-612, Exact:368-610):
-    * every distinct value failing the dataRange validator is an error —
-    * MAX-102 / MIN-104 / EXACT-104. Also row-local here (distinct within
-    * the row, which IS the subject).
-    */
-  def violArray(ctx: CheckContext): Column = {
-    val rs = ctx.schema.restrictions.filter(r =>
-      Set("min", "max", "exact").contains(r.rtype) && r.classExpr == null)
-    if (rs.isEmpty) return ctx.emptyVArray
-    val cls = ctx.clsCol
-    val counted = rs.flatMap { r =>
-      val applicable = ctx.schema.subClosure.getOrElse(r.onClass, Set(r.onClass)).toSeq
-      // datatype-qualified count when the corpus carries annotations
-      // (datatype(?value) filter, CheckOwlRestrictionMax.php:122-150;
-      // unannotated values compare as xsd:string); unqualified otherwise
-      val accept = ctx.schema.qualifiedDtAccept(r.dataRange)
-      val cnt =
-        if (ctx.hasSpanDatatype && accept != null)
-          size(filter(ctx.zipped("kind", "datatype"), p =>
-            p.getField("kind") === r.onProperty &&
-              coalesce(p.getField("datatype"), lit(SchemaDef.XSD + "string"))
-                .isin(accept.toSeq: _*)))
-        else size(filter(ctx.field("kind"), k => k === r.onProperty))
-      val app = cls.isin(applicable: _*)
-      r.rtype match {
-        case "max" => Seq(
-          when(app && cnt > r.n, ctx.vStruct("OWL-RESTRICTION-MAX-100",
-            lit(r.onProperty), cnt, lit(s"at most ${r.n} ${r.onProperty}"))))
-        case "min" => Seq(
-          when(app && cnt > 0 && cnt < r.n, ctx.vStruct("OWL-RESTRICTION-MIN-100",
-            lit(r.onProperty), cnt, lit(s"at least ${r.n} ${r.onProperty}"))),
-          when(app && cnt === 0, ctx.vStruct("OWL-RESTRICTION-MIN-102",
-            lit(r.onProperty), cnt, lit(s"at least ${r.n} ${r.onProperty}"))))
-        case "exact" => Seq(
-          when(app && cnt > 0 && cnt =!= r.n, ctx.vStruct("OWL-RESTRICTION-EXACT-100",
-            lit(r.onProperty), cnt, lit(s"exactly ${r.n} ${r.onProperty}"))),
-          when(app && cnt === 0 && r.n != 0, ctx.vStruct("OWL-RESTRICTION-EXACT-102",
-            lit(r.onProperty), cnt, lit(s"exactly ${r.n} ${r.onProperty}"))))
-      }
-    }
-    val perValue = rs.filter(_.dataRange != null).map { r =>
-      val applicable = ctx.schema.subClosure.getOrElse(r.onClass, Set(r.onClass)).toSeq
-      val valid = ctx.validatorFor(r.dataRange)
-      val vid = s"OWL-RESTRICTION-${r.rtype.toUpperCase}-${if (r.rtype == "max") 102 else 104}"
-      // the reference's validity query carries the same datatypeFilter as
-      // the count query (CheckOwlRestrictionMax.php:244-252) — with
-      // annotations present, only accepted-datatype values are validated
-      val accept = ctx.schema.qualifiedDtAccept(r.dataRange)
-      val useDt = ctx.hasSpanDatatype && accept != null
-      val zippedSpans =
-        if (useDt) ctx.zipped("kind", "text", "datatype")
-        else ctx.zipped("kind", "text")
-      def dtOk(p: Column): Column =
-        if (!useDt) lit(true)
-        else coalesce(p.getField("datatype"), lit(SchemaDef.XSD + "string"))
-          .isin(accept.toSeq: _*)
-      val offending = array_distinct(transform(
-        filter(zippedSpans, p =>
-          p.getField("kind") === r.onProperty && p.getField("text").isNotNull &&
-            dtOk(p) && !coalesce(valid(p.getField("text")), lit(false))),
-        p => p.getField("text")))
-      when(cls.isin(applicable: _*),
-        transform(offending, t =>
-          ctx.vStruct(vid, lit(r.onProperty), t, lit(r.dataRange))))
-        .otherwise(ctx.emptyVArray)
-    }
-    concat(filter(array(counted: _*), v => v.isNotNull) +: perValue: _*)
-  }
 
   /** Class-qualified restrictions (owl:onClass): only values whose TARGET's
     * class falls in the qualifying closure count — this genuinely needs the
@@ -860,32 +728,11 @@ object CheckCardinality extends RowLocalCheck {
 /** Existential restriction (CheckOwlRestrictionSome.php): each instance of
   * the restricted class needs at least one value of the property that is
   * lexically valid for the data range (:150-162, :252-522). Single scan;
-  * `exists(...)` short-circuits like the reference's early-exit loop
-  * (:504-509).
+  * the first valid value ends the search, like the reference's early-exit
+  * loop (:504-509).
   */
 object CheckSome extends RowLocalCheck {
   val id = "OWL-RESTRICTION-SOME"
-  def violArray(ctx: CheckContext): Column = {
-    val rs = ctx.schema.restrictions.filter(r => r.rtype == "some" && r.dataRange != null)
-    if (rs.isEmpty) return ctx.emptyVArray
-    val cls = ctx.clsCol
-    val structs = rs.flatMap { r =>
-      val applicable = ctx.schema.subClosure.getOrElse(r.onClass, Set(r.onClass)).toSeq
-      val valid = ctx.validatorFor(r.dataRange)
-      val app = cls.isin(applicable: _*)
-      val nProp = size(filter(ctx.field("kind"), k => k === r.onProperty))
-      val anyValid = exists(
-        filter(ctx.zipped("kind", "text"), p => p.getField("kind") === r.onProperty),
-        p => coalesce(valid(p.getField("text")), lit(false)))
-      Seq(
-        when(app && nProp === 0, ctx.vStruct(s"$id-100", lit(r.onProperty),
-          lit(null), lit(s"some ${r.dataRange} value for ${r.onProperty}"))),
-        when(app && nProp > 0 && !anyValid, ctx.vStruct(s"$id-102", lit(r.onProperty),
-          lit(null), lit(s"some valid ${r.dataRange} value for ${r.onProperty}"))))
-    }
-    filter(array(structs: _*), v => v.isNotNull)
-  }
-
   /** Object variant (owl:someValuesFrom a CLASS, :626-715): an instance of
     * the restricted class that USES the property but has no value whose
     * target's class falls in the class-expression closure → SOME-101. The
@@ -922,24 +769,6 @@ object CheckSome extends RowLocalCheck {
   */
 object CheckOnly extends RowLocalCheck {
   val id = "OWL-RESTRICTION-ONLY"
-  def violArray(ctx: CheckContext): Column = {
-    val rs = ctx.schema.restrictions.filter(r => r.rtype == "only" && r.dataRange != null)
-    if (rs.isEmpty) return ctx.emptyVArray
-    val cls = ctx.clsCol
-    val perR = rs.map { r =>
-      val applicable = ctx.schema.subClosure.getOrElse(r.onClass, Set(r.onClass)).toSeq
-      val valid = ctx.validatorFor(r.dataRange)
-      val offending = filter(ctx.zipped("kind", "text"), p =>
-        p.getField("kind") === r.onProperty &&
-          !coalesce(valid(p.getField("text")), lit(false)))
-      when(cls.isin(applicable: _*),
-        transform(offending, p => ctx.vStruct(s"$id-100", p.getField("kind"),
-          p.getField("text"), lit(r.dataRange))))
-        .otherwise(ctx.emptyVArray)
-    }
-    flatten(array(perR: _*))
-  }
-
   /** Object variant (owl:allValuesFrom a CLASS, :580-750): every value of
     * the property on an instance of the restricted class whose target's
     * class is outside the class-expression closure (untyped targets

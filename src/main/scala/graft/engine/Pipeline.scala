@@ -32,39 +32,25 @@ object Pipeline {
   /** Run the given checks; returns the union of violation rows.
     * Dataset-level violations (no docId) come out with docId null.
     *
-    * When `fused` (default), all [[graft.checks.RowLocalCheck]]s evaluate in
-    * ONE shared scan: their per-row violation arrays concatenate into a
-    * single projection exploded once — subject-local validation of the whole
-    * constraint set costs one pass over the table regardless of how many
-    * checks are configured (the reference made 1-3 HTTP queries per
-    * property/restriction). Non-row-local checks (vocabulary distincts,
-    * referential joins) keep their own minimal-ReadSchema scans.
+    * All [[graft.checks.RowLocalCheck]]s evaluate in ONE shared scan
+    * ([[violationsWithCore]]): their constraint set compiles into a single
+    * native expression exploded once — subject-local validation of the
+    * whole constraint set costs one pass over the table regardless of how
+    * many checks are configured (the reference made 1-3 HTTP queries per
+    * property/restriction) — and the corpus checks (vocabulary distincts,
+    * referential joins) read the same cached scan. A check list with no
+    * row-local check has nothing to share the scan with: each check runs
+    * its own minimal-ReadSchema plan.
     */
   def violations(spark: SparkSession, docs: DataFrame, schema: SchemaDef,
                  checks: Seq[ConstraintCheck] = Checks.all,
-                 fused: Boolean = true,
-                 native: Boolean = true,
-                 universe: Option[DataFrame] = None): DataFrame = {
-    val (rowLocal, others) = checks.partition(c => fused && c.isInstanceOf[RowLocalCheck])
-    val useShared = rowLocal.nonEmpty && native &&
-      spark.conf.getOption("spark.graft.validate.sharedScan").forall(_ != "false")
-
-    if (useShared) violationsWithCore(spark, docs, schema, checks, universe)._1
+                 universe: Option[DataFrame] = None): DataFrame =
+    if (checks.exists(_.isInstanceOf[RowLocalCheck]))
+      violationsWithCore(spark, docs, schema, checks, universe)._1
     else {
-      val ctx0 = CheckContext(spark, docs, schema, universe)
-      val fusedFrames: Seq[DataFrame] =
-        if (rowLocal.isEmpty) Nil
-        else {
-          val one = fusedCoreFrame(ctx0, rowLocal, native, docs, schema)
-          val extras = rowLocal.flatMap(c =>
-            c.asInstanceOf[RowLocalCheck].extraFrames(ctx0)
-              .map(_.withColumn("check", lit(c.id))))
-          one +: extras
-        }
-      val otherFrames = others.map(c => c.run(ctx0).withColumn("check", lit(c.id)))
-      (fusedFrames ++ otherFrames).reduce(_ unionByName _)
+      val ctx = CheckContext(spark, docs, schema, universe)
+      checks.map(c => c.run(ctx).withColumn("check", lit(c.id))).reduce(_ unionByName _)
     }
-  }
 
   /** The ONE shared-scan composition, returning (violations, core). A
     * single wide corpus scan ([[CheckContext.buildSharedScan]]) computes
@@ -89,10 +75,9 @@ object Pipeline {
     val ctx0 = CheckContext(spark, docs, schema, universe)
     val (rowLocal, others) = checks.partition(_.isInstanceOf[RowLocalCheck])
     require(rowLocal.nonEmpty, "no row-local checks configured")
-    val shared = ctx0.buildSharedScan(Seq(graft.functions.ValidateSpans
-      .validateSpans(col("spans"), compiledFor(ctx0, rowLocal, schema)).as("__viols")))
+    val shared = ctx0.buildSharedScan(Seq(ctx0.fusedViolations(rowLocal).as("__viols")))
     val ctx = ctx0.copy(sharedOpt = Some(shared))
-    val core = coreRows(shared.select(col("doc_id"), explode(col("__viols")).as("v")))
+    val core = CheckContext.coreRows(shared, col("__viols"))
     val extras = rowLocal.flatMap(c =>
       c.asInstanceOf[RowLocalCheck].extraFrames(ctx)
         .map(_.withColumn("check", lit(c.id))))
@@ -104,60 +89,6 @@ object Pipeline {
     // parallelism; branch work below the exchanges is unaffected.
     (((core +: extras) ++ otherFrames).reduce(_ unionByName _)
       .coalesce(spark.sparkContext.defaultParallelism), core)
-  }
-
-  /** Violation rows of the fused pass from `(doc_id, v)` — `v` one
-    * exploded element of the native violation array.
-    */
-  private def coreRows(exploded: DataFrame): DataFrame =
-    exploded.select(col("v.checkId").as("checkId"), lit("error").as("severity"),
-      col("doc_id").cast("string").as("docId"), col("v.kind").as("kind"),
-      col("v.value").as("value"), col("v.expected").as("expected"),
-      col("v.check").as("check"))
-
-  /** The compiled subject-local constraint set for a row-local check list —
-    * strictness and span layout resolved exactly as [[fusedCoreFrame]]'s
-    * native branch does.
-    */
-  private def compiledFor(ctx: CheckContext, rowLocal: Seq[ConstraintCheck],
-                          schema: SchemaDef): graft.functions.CompiledConstraints = {
-    val strictDt = rowLocal.exists {
-      case c: graft.checks.CheckDatatypeImpl => c.strict
-      case _ => false
-    }
-    graft.functions.CompiledConstraints.from(
-      schema, rowLocal.map(_.id).toSet,
-      strictDt = strictDt,
-      spanArity = ctx.spanArity,
-      dtOrdinal = ctx.spanDatatypeOrd)
-  }
-
-  /** The fused row-local pass itself (no extras, no corpus checks) —
-    * extracted so [[violationsDelta]] can run it over the dirty slice
-    * alone. Its rows are PURE per-document functions of (spans, schema):
-    * exactly the property that makes digest-based carry-forward sound.
-    */
-  private def fusedCoreFrame(ctx: CheckContext, rowLocal: Seq[ConstraintCheck],
-                             native: Boolean, docs: DataFrame,
-                             schema: SchemaDef): DataFrame = {
-    if (native) {
-      // the native single-pass expression: compiled validators,
-      // primitive counters, one output array — codegen'd end to end.
-      // Strictness and the optional span-datatype layout flow in from
-      // the configured check / the corpus schema (the datatype seam).
-      val cc = compiledFor(ctx, rowLocal, schema)
-      coreRows(docs.select(col("doc_id"),
-        explode(graft.functions.ValidateSpans.validateSpans(col("spans"), cc)).as("v")))
-    } else {
-      // HOF formulation (kept as the reference semantics oracle)
-      val tagged = rowLocal.map { c =>
-        transform(c.asInstanceOf[RowLocalCheck].violArray(ctx), v => struct(
-          v.getField("checkId").as("checkId"), v.getField("kind").as("kind"),
-          v.getField("value").as("value"), v.getField("expected").as("expected"),
-          lit(c.id).as("check")))
-      }
-      coreRows(docs.select(col("doc_id"), explode(concat(tagged: _*)).as("v")))
-    }
   }
 
   /** Canonical span-sequence digest: md5 of the offset-ordered
@@ -228,12 +159,10 @@ object Pipeline {
     * persist it beside each snapshot's results.
     */
   def rowLocalCore(spark: SparkSession, docs: DataFrame, schema: SchemaDef,
-                   checks: Seq[ConstraintCheck] = Checks.all,
-                   native: Boolean = true): DataFrame = {
-    val ctx = CheckContext(spark, docs, schema, None)
+                   checks: Seq[ConstraintCheck] = Checks.all): DataFrame = {
     val rowLocal = checks.filter(_.isInstanceOf[RowLocalCheck])
     require(rowLocal.nonEmpty, "no row-local checks configured")
-    fusedCoreFrame(ctx, rowLocal, native, docs, schema)
+    CheckContext(spark, docs, schema, None).rowLocalCore(rowLocal)
   }
 
   /** INCREMENTAL validation between snapshots (north rule: resumable from
@@ -269,7 +198,6 @@ object Pipeline {
                       prevCore: DataFrame, curDocs: DataFrame,
                       schema: SchemaDef,
                       checks: Seq[ConstraintCheck] = Checks.all,
-                      native: Boolean = true,
                       precomputedDiff: Option[DataFrame] = None): (DataFrame, DataFrame) = {
     val diffAll = precomputedDiff.getOrElse(
       snapshotDiffWithCounts(prevDocs, curDocs).localCheckpoint())
@@ -289,7 +217,7 @@ object Pipeline {
     val dirty = curDocs.join(
       diff.filter(col("status").isin("added", "changed")).select("doc_id"),
       Seq("doc_id"), "left_semi")
-    val freshCore = rowLocalCore(spark, dirty, schema, checks, native)
+    val freshCore = rowLocalCore(spark, dirty, schema, checks)
     val unchanged = diff.filter(col("status") === "unchanged")
       .select(col("doc_id").cast("string").as("docId"))
     val carried = prevCore.join(unchanged, Seq("docId"), "left_semi")
@@ -310,12 +238,9 @@ object Pipeline {
     val ctx0 = CheckContext(spark, docs, schema, None)
     // the composed corpus checks get the SAME shared single-scan
     // treatment as violations() (one wide cached scan instead of one
-    // corpus scan per vocabulary/referential subplan); same opt-out conf.
-    // No __viols column — the core is given.
-    val useShared =
-      spark.conf.getOption("spark.graft.validate.sharedScan").forall(_ != "false")
-    val ctx = if (useShared) ctx0.copy(sharedOpt = Some(ctx0.buildSharedScan(Nil)))
-              else ctx0
+    // corpus scan per vocabulary/referential subplan). No __viols column —
+    // the core is given.
+    val ctx = ctx0.copy(sharedOpt = Some(ctx0.buildSharedScan(Nil)))
     val (rowLocal, others) = checks.partition(_.isInstanceOf[RowLocalCheck])
     val extraFrames = rowLocal.flatMap(c =>
       c.asInstanceOf[RowLocalCheck].extraFrames(ctx)

@@ -61,6 +61,9 @@ object ProfileStore {
       (if (docs.columns.contains("bucket")) col("bucket").cast("int")
        else pmod(xxhash64(col("doc_id")), lit(nBuckets)).cast("int")).as("bucket"))
 
+  /** Rows [[validateTrustedBucket]] compares. */
+  private[engine] val TrustedBucketSample = 1000
+
   /** Fail fast when a TRUSTED `bucket` column is not the
     * [[writeBucketPartitioned]] layout: spot-check a driver-sized sample
     * for equality with `pmod(xxhash64(doc_id), nBuckets)` (which also
@@ -68,13 +71,18 @@ object ProfileStore {
     * sample keeps the check at driver cost while catching both failure
     * modes the advice names (wrong bucket count; unrelated column named
     * `bucket`); a full-scan assert would cost what the pruning saves.
+    *
+    * The sample is bounded BEFORE the comparison: a limit above a
+    * mismatch filter stops early only once it has found mismatches, so
+    * on a valid column it would read the whole corpus.
     */
-  private def validateTrustedBucket(docs: DataFrame, nBuckets: Int): Unit =
+  private[engine] def validateTrustedBucket(docs: DataFrame, nBuckets: Int): Unit =
     if (docs.columns.contains("bucket")) {
       val bad = docs.select(col("doc_id"), col("bucket").cast("long").as("b"),
           pmod(xxhash64(col("doc_id")), lit(nBuckets)).as("want"))
-        .filter(col("b").isNull || col("b") =!= col("want"))
-        .select("doc_id", "b", "want").limit(3).collect()
+        .limit(TrustedBucketSample).collect()
+        .filter(r => r.isNullAt(1) || r.getLong(1) != r.getLong(2))
+        .take(3)
       require(bad.isEmpty,
         s"trusted 'bucket' column disagrees with pmod(xxhash64(doc_id), " +
           s"$nBuckets) — wrong bucket count or an unrelated column? " +

@@ -16,12 +16,14 @@ import graft.validators.ScalaValidators
   * cardinality incl. zero-cases, some, only) evaluated in ONE native
   * codegen'd expression over the spans array.
   *
-  * Why: the higher-order-function formulation (RowLocalCheck.violArray) is
+  * Why: the higher-order-function formulation of the same checks is
   * CodegenFallback — interpreted per span, allocation-heavy, and it stops
   * scaling past ~8 local cores (GC pressure). This expression makes one
   * tight pass per row: compiled regex validators, primitive counters, and a
-  * single output array. Semantics are IDENTICAL to the HOF path — asserted
-  * by the golden spec's three-way equality (fused / unfused / native).
+  * single output array. The HOF formulation is kept with the tests as the
+  * semantics oracle: the golden three-way equality (this pass in the
+  * shared scan / the HOF arrays fused / each check alone through the HOF
+  * arrays) and the single-check comparison (RowLocalRunOracleSpec).
   *
   * Output: array<struct<checkId,kind,value,expected,check>> where `check`
   * is the owning check family id (for per-check verdict rollups).

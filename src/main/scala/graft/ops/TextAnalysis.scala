@@ -38,36 +38,18 @@ object TextAnalysis {
     "es" -> Seq("el", "la", "los", "las", "de", "y", "es", "que", "en", "un", "una", "por", "con")
   )
 
-  /** Per-language stopword hit count (distinct hits — `array_intersect`). */
-  def langScore(text: Column, lang: String): Column =
-    size(array_intersect(
-      split(lower(text), "[^a-zA-Zà-ÿÀ-ß]+"),
-      typedLit(Stopwords(lang))))
-
-  /** Heuristic language id: argmax of stopword votes; "und" when no
-    * language scores a hit. Ties break in fixed order en>fr>de>es.
+  /** Heuristic language id: argmax of per-language distinct stopword
+    * hits; "und" when no language scores a hit. Ties break in fixed order
+    * en>fr>de>es.
     *
-    * Round-9: evaluated by the native single-pass
-    * [[graft.functions.LangIdExpr]] — the Column formulation below (kept
-    * as [[langIdColumns]] for the parity spec) runs four
-    * `split(lower(text))` + `array_intersect` trees per row and its
-    * generated code dominated the cold bench stage. Identical verdicts
-    * (TextSignalsParitySpec + the q_langid/q_lang_group oracles).
+    * Evaluated by the native single-pass [[graft.functions.LangIdExpr]]:
+    * the Column formulation (kept with the tests as the parity oracle)
+    * runs four `split(lower(text))` + `array_intersect` trees per row and
+    * its generated code dominated the cold bench stage. Identical
+    * verdicts (TextSignalsParitySpec + the q_langid/q_lang_group oracles).
     */
   def langId(text: Column): Column =
     graft.functions.TextSignalsCols.langId(text)
-
-  /** The original Column formulation of [[langId]] — the parity oracle of
-    * the native expression.
-    */
-  def langIdColumns(text: Column): Column = {
-    val langs = Seq("en", "fr", "de", "es")
-    val scores = langs.map(l => langScore(text, l))
-    val best = scores.reduce((a, b) => greatest(a, b))
-    langs.zip(scores).foldRight(lit("und")) { case ((l, s), acc) =>
-      when(s === best && best > 0, lit(l)).otherwise(acc)
-    }
-  }
 
   // ------------------------------------------------------------------
   // script profile (mixed-script signal)
@@ -121,36 +103,18 @@ object TextAnalysis {
     size(regexp_extract_all(text, lit("[.,;:!?]"), lit(0)))
   def nUpper(text: Column): Column =
     size(regexp_extract_all(text, lit("[A-Z]"), lit(0)))
-  def nStopwordsEn(text: Column): Column =
-    size(array_intersect(split(lower(text), "[^a-zA-Z]+"), typedLit(Stopwords("en"))))
 
   /** Composite quality score in [0,1]: length band + punctuation sanity +
     * stopword presence + case sanity. Heuristic weights in the spirit of
     * C4/Gopher-style quality filters.
     *
-    * Round-9: native single-pass [[graft.functions.QualityScoreExpr]];
-    * the Column formulation stays as [[qualityScoreColumns]] (parity
-    * oracle). Identical doubles (same operations in the same order).
+    * Evaluated by the native single-pass
+    * [[graft.functions.QualityScoreExpr]]; the Column formulation is kept
+    * with the tests as the parity oracle. Identical doubles (same
+    * operations in the same order).
     */
   def qualityScore(text: Column): Column =
     graft.functions.TextSignalsCols.qualityScore(text)
-
-  /** The original Column formulation of [[qualityScore]] — the parity
-    * oracle of the native expression.
-    */
-  def qualityScoreColumns(text: Column): Column = {
-    val toks = tokenCount(text).cast("double")
-    val chars = nChars(text).cast("double")
-    val meanWordLen = when(toks > 0, chars / toks).otherwise(lit(0.0))
-    val lengthOk = when(toks.between(5, 10000), 1.0).otherwise(0.0)
-    val wordLenOk = when(meanWordLen.between(2.5, 12.0), 1.0).otherwise(0.0)
-    val punctRatio = when(chars > 0, nPunct(text).cast("double") / toks).otherwise(lit(0.0))
-    val punctOk = when(punctRatio <= 0.5, 1.0).otherwise(0.0)
-    val stopOk = when(nStopwordsEn(text) >= 2, 1.0).otherwise(0.0)
-    val upperRatio = when(chars > 0, nUpper(text).cast("double") / chars).otherwise(lit(0.0))
-    val caseOk = when(upperRatio <= 0.3, 1.0).otherwise(0.0)
-    (lengthOk + wordLenOk + punctOk + stopOk + caseOk) / 5.0
-  }
 
   // ------------------------------------------------------------------
   // repetition / diversity signals

@@ -32,15 +32,14 @@ object StreamingValidator {
     Seq(CheckDomain, CheckDatatype, CheckCardinality, CheckSome, CheckOnly)
 
   /** Violation stream from a streaming documents DataFrame (same schema as
-    * the batch table): the native single-pass ValidateSpans expression —
-    * one stateless projection, identical semantics to the batch row-local
-    * path, INCLUDING the span-datatype seam (strict mode + qualified
-    * counts engage when the stream's span struct carries the annotation
-    * field, exactly as in Pipeline.violations).
+    * the batch table): the batch row-local core
+    * ([[CheckContext.rowLocalCore]], one native ValidateSpans projection)
+    * — stateless, INCLUDING the span-datatype seam (strict mode +
+    * qualified counts engage when the stream's span struct carries the
+    * annotation field, exactly as in Pipeline.violations).
     */
   def violationStream(spark: SparkSession, docs: DataFrame, schema: SchemaDef,
                       checks: Seq[ConstraintCheck] = StatelessChecks): DataFrame = {
-    import org.apache.spark.sql.functions.{col, explode, lit}
     // only row-local checks stream through the fused expression — a
     // vocabulary/referential check passed here would otherwise compile to
     // an EMPTY constraint set and silently never run
@@ -48,22 +47,7 @@ object StreamingValidator {
     require(nonRowLocal.isEmpty,
       s"violationStream takes row-local checks only; got ${nonRowLocal.map(_.id).mkString(", ")} " +
         "(use danglingRefStream for the referential check; vocabulary checks need batch distincts)")
-    val ctx = CheckContext(spark, docs, schema) // schema introspection only
-    val strictDt = checks.exists {
-      case c: CheckDatatypeImpl => c.strict
-      case _ => false
-    }
-    val cc = graft.functions.CompiledConstraints.from(
-      schema, checks.map(_.id).toSet,
-      strictDt = strictDt,
-      spanArity = ctx.spanArity,
-      dtOrdinal = ctx.spanDatatypeOrd)
-    docs.select(col("doc_id"),
-      explode(graft.functions.ValidateSpans.validateSpans(col("spans"), cc)).as("v"))
-      .select(col("v.checkId").as("checkId"), lit("error").as("severity"),
-        col("doc_id").cast("string").as("docId"), col("v.kind").as("kind"),
-        col("v.value").as("value"), col("v.expected").as("expected"),
-        col("v.check").as("check"))
+    CheckContext(spark, docs, schema).rowLocalCore(checks)
   }
 
   /** Streaming referential check: dangling media_refs relative to a static

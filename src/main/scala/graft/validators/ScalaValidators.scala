@@ -3,14 +3,14 @@ package graft.validators
 import java.util.regex.Pattern
 import graft.model.{FacetDef, SchemaDef}
 
-/** JVM-side (String => Boolean) twins of the Column validators in
-  * [[XsdValidators]] — same regex constants, same semantics — used by the
-  * native single-pass validation expression
-  * ([[graft.functions.ValidateSpans]]), where a compiled
-  * `String => Boolean` beats an interpreted Catalyst lambda tree by an
-  * order of magnitude. Parity with the Column versions is asserted by
-  * `ValidatorParitySpec` (corpus) and `ScalaValidatorParitySpec`
-  * (cross-check on randomized inputs).
+/** The engine's lexical validators, (String => Boolean) over the regex
+  * constants of [[XsdValidators]] — used by the native single-pass
+  * validation expression ([[graft.functions.ValidateSpans]]), where a
+  * compiled `String => Boolean` beats an interpreted Catalyst lambda tree
+  * by an order of magnitude. Their reference oracle is the Column
+  * formulation kept with the tests (`XsdColumnOracle`): parity is asserted
+  * by `ValidatorParitySpec` (reference corpus) and
+  * `ScalaValidatorParitySpec` (cross-check on randomized inputs).
   */
 object ScalaValidators {
 
@@ -221,8 +221,8 @@ object ScalaValidators {
     }
   }
 
-  /** Precision cap 38 mirrors the Column twin's `try_cast(decimal(38,0))`
-    * (XsdValidators.integer): both paths reject integers whose significant
+  /** Precision cap 38 mirrors the Column oracle's `try_cast(decimal(38,0))`
+    * (`XsdColumnOracle.integer`): both paths reject integers whose significant
     * digits exceed Spark's max decimal precision.
     */
   val integer: String => Boolean = { s =>
@@ -244,7 +244,7 @@ object ScalaValidators {
 
   private val base64ShapeRx = rx(XsdValidators.Base64ShapeRegex)
 
-  /** Decode-reencode equivalence matching the Column validator exactly
+  /** Decode-reencode equivalence matching the Column oracle exactly
     * (shape guard + MIME decode + strict re-encode) — Check.php:102-112.
     */
   val base64Binary: String => Boolean = { s =>
@@ -296,7 +296,7 @@ object ScalaValidators {
   def forDatatype(dt: String): String => Boolean =
     byDatatype.getOrElse(dt, _ => true)
 
-  /** XSP facet conjunction — same semantics as [[XsdValidators.facet]]. */
+  /** XSP facet conjunction — same semantics as `XsdColumnOracle.facet`. */
   def facet(f: FacetDef): String => Boolean = {
     val base: String => Boolean = if (f.base != null) forDatatype(f.base) else _ => true
     val pat: String => Boolean =
@@ -337,7 +337,9 @@ object ScalaValidators {
     }
   }
 
-  /** Facet-aware dispatch mirroring CheckContext.validatorFor. */
+  /** Facet-aware dispatch: a datatype the schema defines by facets
+    * validates through [[facet]], any other through [[forDatatype]].
+    */
   def validatorFor(schema: SchemaDef, dt: String): String => Boolean =
     schema.facets.find(_.datatype == dt) match {
       case Some(f) => facet(f)

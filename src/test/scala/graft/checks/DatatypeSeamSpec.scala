@@ -135,14 +135,14 @@ class DatatypeSeamSpec extends SparkTestBase {
   }
 
   test("native ≡ HOF ≡ per-check on the annotated corpus, strict and loose") {
-    def sets(checks: Seq[ConstraintCheck], fused: Boolean, native: Boolean) =
-      Pipeline.violations(spark, annotated, schema, checks, fused, native).collect()
+    def sets(df: org.apache.spark.sql.DataFrame) =
+      df.collect()
         .map(r => (r.getString(0), r.getString(1), r.getString(2),
           r.getString(3), r.getString(4), r.getString(6))).toSet
     for (checks <- Seq(strictChecks, looseChecks)) {
-      val nat = sets(checks, fused = true, native = true)
-      val hof = sets(checks, fused = true, native = false)
-      val per = sets(checks, fused = false, native = false)
+      val nat = sets(Pipeline.violations(spark, annotated, schema, checks))
+      val hof = sets(HofOracle.fusedViolations(spark, annotated, schema, checks))
+      val per = sets(HofOracle.perCheckViolations(spark, annotated, schema, checks))
       assert(nat == hof,
         s"native vs HOF: missing=${(hof -- nat).take(3)} extra=${(nat -- hof).take(3)}")
       assert(hof == per)

@@ -172,13 +172,13 @@ class PipelineGoldenSpec extends SparkTestBase {
 
   test("native, HOF-fused, and per-check paths produce identical violation sets") {
     val docs = DocGen.documents(spark, 3000L).toDF()
-    def collectSet(fused: Boolean, native: Boolean) =
-      Pipeline.violations(spark, docs, schema, fused = fused, native = native).collect()
+    def collectSet(df: org.apache.spark.sql.DataFrame) =
+      df.collect()
         .map(r => (r.getString(0), r.getString(1), r.getString(2),
           r.getString(3), r.getString(4), r.getString(6))).toSet
-    val nativeSet = collectSet(fused = true, native = true)
-    val hofSet = collectSet(fused = true, native = false)
-    val perCheck = collectSet(fused = false, native = false)
+    val nativeSet = collectSet(Pipeline.violations(spark, docs, schema))
+    val hofSet = collectSet(HofOracle.fusedViolations(spark, docs, schema))
+    val perCheck = collectSet(HofOracle.perCheckViolations(spark, docs, schema))
     assert(nativeSet == hofSet,
       s"native vs HOF: missing=${(hofSet -- nativeSet).take(3)} extra=${(nativeSet -- hofSet).take(3)}")
     assert(hofSet == perCheck)

@@ -203,6 +203,37 @@ class ProfileStoreSpec extends SparkTestBase {
       8L * ProfileStore.MetricCols.size)
   }
 
+  test("trusted bucket check reads a bounded sample of a valid corpus; wrong bucket counts and unrelated columns refused") {
+    val tmp = Files.createTempDirectory("graft-profile-trust").toString
+    val n = 40L * ProfileStore.TrustedBucketSample
+    val docs = DocGen.documents(spark, n).toDF()
+    ProfileStore.writeBucketPartitioned(docs, 8, s"$tmp/docsPart")
+    val part = spark.read.parquet(s"$tmp/docsPart")
+    // rows the check's scan reads, from the executors' input metrics
+    val read = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) read.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+    }
+    org.apache.spark.sql.graft.shims.waitForListeners(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      ProfileStore.validateTrustedBucket(part, 8)
+      org.apache.spark.sql.graft.shims.waitForListeners(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(read.get > 0 && read.get < n / 4,
+      s"a valid bucket column must be checked on a sample: read ${read.get} of $n rows")
+    // the sample still catches both failure modes
+    val wrongCount = intercept[IllegalArgumentException] {
+      ProfileStore.validateTrustedBucket(part, 16)
+    }
+    assert(wrongCount.getMessage.contains("disagrees with pmod(xxhash64(doc_id), 16)"))
+    val unrelated = intercept[IllegalArgumentException] {
+      ProfileStore.validateTrustedBucket(docs.withColumn("bucket", length(col("doc_id"))), 8)
+    }
+    assert(unrelated.getMessage.contains("wrong bucket count or an unrelated column"))
+  }
+
   test("committed profile read: a torn writer without its artifact record is invisible") {
     val tmp = Files.createTempDirectory("graft-profile-commit").toString
     DocGen.documents(spark, 1200L).toDF()

@@ -34,9 +34,9 @@ class TextSignalsParitySpec extends SparkTestBase {
     val df = (texts.map(Option(_)) :+ None).toDF("text")
     val rows = df.select(
       TextAnalysis.langId(col("text")).as("lid_native"),
-      TextAnalysis.langIdColumns(col("text")).as("lid_col"),
+      TextColumnOracle.langIdColumns(col("text")).as("lid_col"),
       TextAnalysis.qualityScore(col("text")).as("q_native"),
-      TextAnalysis.qualityScoreColumns(col("text")).as("q_col"),
+      TextColumnOracle.qualityScoreColumns(col("text")).as("q_col"),
       col("text")).collect()
     rows.foreach { r =>
       assert(r.getString(0) == r.getString(1),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions.col
 
 /** Cross-check: the JVM-side validators ([[ScalaValidators]], used by the
   * native ValidateSpans expression) agree with the Column validators
-  * ([[XsdValidators]], the reference-parity implementation) on randomized
+  * ([[XsdColumnOracle]], the reference-parity implementation) on randomized
   * and corpus inputs for every datatype.
   */
 class ScalaValidatorParitySpec extends SparkTestBase {
@@ -44,7 +44,7 @@ class ScalaValidatorParitySpec extends SparkTestBase {
       "en\r" -> true, "en\u2028" -> true, "en\n\n" -> false, "en\n\r" -> false,
       "\n" -> false, "en-\n" -> false, "e\nn" -> false)
     val column = cases.map(_._1).toDF("v")
-      .select(XsdValidators.byDatatype(lang)(col("v"))).collect().map(_.getBoolean(0))
+      .select(XsdColumnOracle.byDatatype(lang)(col("v"))).collect().map(_.getBoolean(0))
     cases.lazyZip(column).foreach { case ((v, want), c) =>
       assert(c == want, s"column form on ${v.map(_.toInt)}")
       assert(ScalaValidators.forDatatype(lang)(v) == want, s"scala form on ${v.map(_.toInt)}")
@@ -55,7 +55,7 @@ class ScalaValidatorParitySpec extends SparkTestBase {
     val session = spark
     import session.implicits._
     val df = samples.toDF("v")
-    XsdValidators.byDatatype.foreach { case (dt, colFn) =>
+    XsdColumnOracle.byDatatype.foreach { case (dt, colFn) =>
       val colResults = df.select(colFn(col("v"))).collect()
         .map(r => !r.isNullAt(0) && r.getBoolean(0))
       val scalaFn = ScalaValidators.forDatatype(dt)

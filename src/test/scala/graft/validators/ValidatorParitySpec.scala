@@ -113,37 +113,37 @@ class ValidatorParitySpec extends SparkTestBase {
   )
 
   private val fns: Map[String, Column => Column] = Map(
-    "unsignedInt" -> XsdValidators.unsignedInt _,
-    "base64Binary" -> XsdValidators.base64Binary _,
-    "dateTime" -> XsdValidators.dateTime _,
-    "dateTimeStamp" -> XsdValidators.dateTimeStamp _,
-    "anyURI" -> XsdValidators.anyURI _,
-    "boolean" -> XsdValidators.boolean _,
-    "byte" -> XsdValidators.byteT _,
-    "unsignedByte" -> XsdValidators.unsignedByte _,
-    "decimal" -> XsdValidators.decimalT _,
-    "double" -> XsdValidators.doubleT _,
-    "float" -> XsdValidators.floatT _,
-    "int" -> XsdValidators.intT _,
-    "integer" -> XsdValidators.integer _,
-    "nonNegativeInteger" -> XsdValidators.nonNegativeInteger _,
-    "nonPositiveInteger" -> XsdValidators.nonPositiveInteger _,
-    "positiveInteger" -> XsdValidators.positiveInteger _,
-    "negativeInteger" -> XsdValidators.negativeInteger _,
-    "short" -> XsdValidators.shortT _,
-    "unsignedShort" -> XsdValidators.unsignedShort _,
-    "long" -> XsdValidators.longT _,
-    "unsignedLong" -> XsdValidators.unsignedLong _,
-    "hexBinary" -> XsdValidators.hexBinary _,
-    "language" -> XsdValidators.language _,
-    "Name" -> XsdValidators.nameT _,
-    "NCName" -> XsdValidators.ncName _,
-    "NMTOKEN" -> XsdValidators.nmtoken _,
-    "string" -> XsdValidators.stringT _,
-    "XMLLiteral" -> XsdValidators.xmlLiteral _,
-    "token" -> XsdValidators.token _,
-    "normalizedString" -> XsdValidators.normalizedString _,
-    "PlainLiteral" -> XsdValidators.plainLiteral _
+    "unsignedInt" -> XsdColumnOracle.unsignedInt _,
+    "base64Binary" -> XsdColumnOracle.base64Binary _,
+    "dateTime" -> XsdColumnOracle.dateTime _,
+    "dateTimeStamp" -> XsdColumnOracle.dateTimeStamp _,
+    "anyURI" -> XsdColumnOracle.anyURI _,
+    "boolean" -> XsdColumnOracle.boolean _,
+    "byte" -> XsdColumnOracle.byteT _,
+    "unsignedByte" -> XsdColumnOracle.unsignedByte _,
+    "decimal" -> XsdColumnOracle.decimalT _,
+    "double" -> XsdColumnOracle.doubleT _,
+    "float" -> XsdColumnOracle.floatT _,
+    "int" -> XsdColumnOracle.intT _,
+    "integer" -> XsdColumnOracle.integer _,
+    "nonNegativeInteger" -> XsdColumnOracle.nonNegativeInteger _,
+    "nonPositiveInteger" -> XsdColumnOracle.nonPositiveInteger _,
+    "positiveInteger" -> XsdColumnOracle.positiveInteger _,
+    "negativeInteger" -> XsdColumnOracle.negativeInteger _,
+    "short" -> XsdColumnOracle.shortT _,
+    "unsignedShort" -> XsdColumnOracle.unsignedShort _,
+    "long" -> XsdColumnOracle.longT _,
+    "unsignedLong" -> XsdColumnOracle.unsignedLong _,
+    "hexBinary" -> XsdColumnOracle.hexBinary _,
+    "language" -> XsdColumnOracle.language _,
+    "Name" -> XsdColumnOracle.nameT _,
+    "NCName" -> XsdColumnOracle.ncName _,
+    "NMTOKEN" -> XsdColumnOracle.nmtoken _,
+    "string" -> XsdColumnOracle.stringT _,
+    "XMLLiteral" -> XsdColumnOracle.xmlLiteral _,
+    "token" -> XsdColumnOracle.token _,
+    "normalizedString" -> XsdColumnOracle.normalizedString _,
+    "PlainLiteral" -> XsdColumnOracle.plainLiteral _
   )
 
   test("validator parity corpus (Check.php:955-1227) passes in one Spark job") {
@@ -172,7 +172,7 @@ class ValidatorParitySpec extends SparkTestBase {
     val session = spark
     import session.implicits._
     val df = Seq("anything", "", "<>&").toDF("value")
-    val n = df.filter(XsdValidators.anySimpleType($"value")).count()
+    val n = df.filter(XsdColumnOracle.anySimpleType($"value")).count()
     assert(n == 3)
   }
 
@@ -183,17 +183,17 @@ class ValidatorParitySpec extends SparkTestBase {
 
     val bounded = FacetDef("dt:bounded", base = "http://www.w3.org/2001/XMLSchema#integer",
       minInclusive = "0", maxExclusive = "10")
-    val got = df.withColumn("ok", XsdValidators.facet(bounded)($"value"))
+    val got = df.withColumn("ok", XsdColumnOracle.facet(bounded)($"value"))
       .collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap
     assert(got == Map("5" -> true, "15" -> false, "abc" -> false, "5x" -> false))
 
     val patterned = FacetDef("dt:pat", pattern = "^[a-z]+$", minLength = 2, maxLength = 3)
-    val got2 = df.withColumn("ok", XsdValidators.facet(patterned)($"value"))
+    val got2 = df.withColumn("ok", XsdColumnOracle.facet(patterned)($"value"))
       .collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap
     assert(got2 == Map("5" -> false, "15" -> false, "abc" -> true, "5x" -> false))
 
     val exactLen = FacetDef("dt:len", length = 2)
-    val got3 = df.withColumn("ok", XsdValidators.facet(exactLen)($"value"))
+    val got3 = df.withColumn("ok", XsdColumnOracle.facet(exactLen)($"value"))
       .collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap
     assert(got3 == Map("5" -> false, "15" -> true, "abc" -> false, "5x" -> true))
   }

@@ -30,16 +30,16 @@ class ValidatorPropertySpec extends SparkTestBase {
       n <- Gen.chooseNum(0L, 1000000L)
       suffix <- Gen.oneOf(".0", "e3", " ", "x", "--")
     } yield s"$n$suffix", 200)
-    assert(evalAll(XsdValidators.integer, valid).forall(identity))
-    assert(evalAll(XsdValidators.integer, invalid).forall(!_))
+    assert(evalAll(XsdColumnOracle.integer, valid).forall(identity))
+    assert(evalAll(XsdColumnOracle.integer, invalid).forall(!_))
   }
 
   test("bounded ints: in-range accepted, out-of-range rejected (byte)") {
     val in = genCases(Gen.chooseNum(-128, 127).map(_.toString), 150)
     val out = genCases(Gen.oneOf(
       Gen.chooseNum(128, 100000), Gen.chooseNum(-100000, -129)).map(_.toString), 150)
-    assert(evalAll(XsdValidators.byteT, in).forall(identity))
-    assert(evalAll(XsdValidators.byteT, out).forall(!_))
+    assert(evalAll(XsdColumnOracle.byteT, in).forall(identity))
+    assert(evalAll(XsdColumnOracle.byteT, out).forall(!_))
   }
 
   test("decimal: constructed decimals accepted; comma/space mutations rejected") {
@@ -53,8 +53,8 @@ class ValidatorPropertySpec extends SparkTestBase {
       ip <- Gen.chooseNum(0, 9999)
       bad <- Gen.oneOf(s"$ip,5", s"$ip 5", s"${ip}e", "", "+", ".")
     } yield bad, 200)
-    assert(evalAll(XsdValidators.decimalT, valid).forall(identity))
-    assert(evalAll(XsdValidators.decimalT, invalid).forall(!_))
+    assert(evalAll(XsdColumnOracle.decimalT, valid).forall(identity))
+    assert(evalAll(XsdColumnOracle.decimalT, invalid).forall(!_))
   }
 
   test("dateTime: constructed ISO forms accepted; corrupted separators rejected") {
@@ -77,22 +77,22 @@ class ValidatorPropertySpec extends SparkTestBase {
       bad <- Gen.oneOf(f"$y%04d-13", f"$y%04d-00", f"$y%04d-01-32",
         f"$y%04d-01-00", f"$y%04d/01/01", f"$y%04d-01-01T25:00:00Z")
     } yield bad, 200)
-    assert(evalAll(XsdValidators.dateTime, valid).forall(identity))
-    assert(evalAll(XsdValidators.dateTime, invalid).forall(!_))
+    assert(evalAll(XsdColumnOracle.dateTime, valid).forall(identity))
+    assert(evalAll(XsdColumnOracle.dateTime, invalid).forall(!_))
   }
 
   test("hexBinary round-trip: hex of random bytes accepted; odd-length rejected") {
     val valid = genCases(Gen.listOfN(8, Gen.chooseNum(0, 255))
       .map(_.map(b => f"$b%02x").mkString), 150)
     val invalid = valid.map(_.drop(1)) // odd length
-    assert(evalAll(XsdValidators.hexBinary, valid).forall(identity))
-    assert(evalAll(XsdValidators.hexBinary, invalid).forall(!_))
+    assert(evalAll(XsdColumnOracle.hexBinary, valid).forall(identity))
+    assert(evalAll(XsdColumnOracle.hexBinary, invalid).forall(!_))
   }
 
   test("boolean: exactly the four lexical forms") {
     val all = genCases(Gen.oneOf("true", "false", "0", "1", "TRUE", "False",
       "yes", "no", "t", ""), 300)
-    val results = evalAll(XsdValidators.boolean, all)
+    val results = evalAll(XsdColumnOracle.boolean, all)
     all.zip(results).foreach { case (v, ok) =>
       assert(ok == Set("true", "false", "0", "1").contains(v), s"boolean('$v')")
     }
@@ -106,7 +106,7 @@ class ValidatorPropertySpec extends SparkTestBase {
     } yield if (hasSub) s"$p-$sub" else p, 200)
     val invalid = genCases(
       Gen.choose(9, 20).flatMap(n => Gen.listOfN(n, Gen.alphaChar).map(_.mkString)), 100)
-    assert(evalAll(XsdValidators.language, valid).forall(identity))
-    assert(evalAll(XsdValidators.language, invalid).forall(!_))
+    assert(evalAll(XsdColumnOracle.language, valid).forall(identity))
+    assert(evalAll(XsdColumnOracle.language, invalid).forall(!_))
   }
 }
