@@ -180,12 +180,13 @@ final class Manifest(path: String) {
       }
       .toSeq.groupBy(_._1).view.mapValues { recs =>
         // duplicate (kind, key, run) records would concat their file lists
-        // and double-read every row downstream (round-8 advice): the file
-        // listing is the commit point, so the FIRST record for a run wins
-        // and later duplicates are ignored (re-commits of the same run are
-        // idempotent by construction; a conflicting re-commit is a caller
-        // bug surfaced by the dedup below never mixing listings)
-        recs.head._2
+        // and double-read every row downstream: the file listing is the
+        // commit point, so exactly ONE record per run is read, and it is
+        // the LAST. A retried commit rewrites the run directory with
+        // `mode("overwrite")` (new part-file names, the earlier attempt's
+        // files deleted) and then records again, so only the latest
+        // record lists files that exist.
+        recs.last._2
       }.toMap
   }
 

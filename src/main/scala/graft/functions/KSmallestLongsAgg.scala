@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Bounded k-smallest aggregate: the k smallest long values of the group,
   * returned as an ASCENDING array. A custom `TypedImperativeAggregate`
-  * (same pattern as [[graft.stats.KllSketchAgg]]) whose state is a max-heap
+  * (same pattern as [[graft.stats.FreqSketchAgg]]) whose state is a max-heap
   * of AT MOST k elements — so partial aggregation (map-side combine) keeps
   * every task's state bounded by k, and merging two partials is O(k log k).
   *

@@ -17,8 +17,8 @@ import org.apache.spark.sql.types._
   * summation order and can't hash-oracle, but quantize-to-long first and
   * the per-dimension sums are exact under ANY partitioning (Long addition
   * is associative-commutative; overflow needs 2^53-scale mass — far past
-  * any real corpus × quantization). Same TypedImperativeAggregate frame as
-  * [[KllSketchAgg]]: map-side combine, one dim-sized state per task.
+  * any real corpus × quantization). A custom TypedImperativeAggregate:
+  * map-side combine, one dim-sized state per task.
   *
   * Rows shorter than `dim` contribute their prefix; longer rows are
   * truncated at `dim`; null rows are skipped.

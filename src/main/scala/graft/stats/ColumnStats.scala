@@ -122,9 +122,10 @@ object ColumnStats {
       case org.apache.spark.sql.types.BooleanType => true
       case _ => false
     })
-    // ONE aggregation pass: the KLL TypedImperativeAggregate forces the
-    // whole pass into (interpreted) ObjectHashAggregate, but with the
-    // spread exchange above, the partial aggregation runs AFTER it —
+    // ONE aggregation pass: the built-in `kll_sketch_agg_double` is a
+    // typed imperative aggregate, so it forces the whole pass into
+    // (interpreted) ObjectHashAggregate, but with the spread exchange
+    // above, the partial aggregation runs AFTER it —
     // 32-way — and the serial cost is just the unsplittable single-task
     // read feeding the exchange. Splitting into per-family passes was
     // measured to double that serial read and lose (2.4 s vs 1.4 s).
@@ -153,8 +154,8 @@ object ColumnStats {
   }
 
   /** MERGEABLE per-part column profile — the stats twin of the KLL-merge
-    * drift path ([[KllMergeAgg]]): one row per (part, column) whose every
-    * field either merges EXACTLY or sketch-merges, so snapshot N+1's
+    * drift path ([[KllMergeAgg.kll_merge]]): one row per (part, column)
+    * whose every field either merges EXACTLY or sketch-merges, so snapshot N+1's
     * corpus profile is yesterday's stored profile rows + today's
     * increment's rows, never a rescan of history. Per (part, column):
     *
@@ -172,11 +173,11 @@ object ColumnStats {
     *    `approx_count_distinct` scalar: two scalar estimates cannot be
     *    combined, two sketches union losslessly (register-wise max);
     *  - `kll` — numeric columns only: a KLL quantile-sketch blob
-    *    ([[KllSketchAgg]]), so merged snapshot profiles answer KS/PSI
-    *    distribution drift ([[DriftStats.ksStatistic]]/[[DriftStats.psi]])
+    *    ([[KllSketchAgg.kll_sketch]]), so merged snapshot profiles answer
+    *    KS/PSI distribution drift ([[DriftStats.ksStatistic]]/[[DriftStats.psi]])
     *    without rescanning either snapshot;
-    *  - `theta` — a theta value-set blob ([[ThetaSketchAgg]]): per-column
-    *    vocabulary CHURN between snapshots (appeared/disappeared/common,
+    *  - `theta` — a theta value-set blob ([[ThetaSketchAgg.theta_sketch]]):
+    *    per-column vocabulary CHURN between snapshots (appeared/disappeared/common,
     *    [[ProfileDrift.byPart]]'s `values_*` columns), which HLL cannot;
     *  - `freq` — a frequent-items blob ([[FreqSketchAgg]], 256 counters):
     *    per-column dominant-VALUE counts, so value-share drift reads from
@@ -185,10 +186,10 @@ object ColumnStats {
     * Known estimate-plane caveat: Spark's `hll_sketch_agg` (DataSketches
     * underneath) silently skips the EMPTY STRING like a null, so
     * `distinct_est` undercounts by exactly one when "" occurs — the exact
-    * channels (`n`, `nulls`, min/max, sums) are unaffected. The engine's
-    * own theta aggregate escapes the input to count "" correctly
-    * ([[ThetaSketchAgg.escape]]); the HLL column rides the built-in and
-    * inherits its contract.
+    * channels (`n`, `nulls`, min/max, sums) are unaffected. The theta
+    * facade escapes the input in front of the built-in to count ""
+    * correctly ([[ThetaSketchAgg.escape]]); the HLL column has no escape
+    * and inherits the built-in's contract.
     *
     * ONE groupBy(part) over the corpus (map-side combined); the wide
     * group-count-sized result is localCheckpoint-materialized before the
@@ -419,7 +420,8 @@ object ProfileDrift {
 
 /** KS / PSI distribution-drift comparison between two KLL sketches
   * (reference-free north-star capability; sketches come from
-  * [[ColumnStats.profile]] or [[KllSketchAgg.kll_sketch]]).
+  * [[ColumnStats.profile]] or [[KllSketchAgg.kll_sketch]], Spark's
+  * built-in `kll_sketch_agg_double`).
   */
 object DriftStats {
 

@@ -18,9 +18,9 @@ import org.apache.spark.sql.types.{BinaryType, DataType}
   * at most `maxMapSize` counters, so the per-partition state is KBs no
   * matter how many distinct items flow through — at 10^12 rows the exact
   * group-count needs a full shuffle of every distinct key; this needs one
-  * shuffle of fixed-size blobs. Same `TypedImperativeAggregate` frame as
-  * [[KllSketchAgg]]: map-side combine + cross-partition merge come from
-  * the aggregate framework.
+  * shuffle of fixed-size blobs. A custom `TypedImperativeAggregate`:
+  * map-side combine + cross-partition merge come from the aggregate
+  * framework.
   *
   * Error contract (DataSketches): every item with true count >
   * `getMaximumError()` of the total stream is reported under
@@ -89,8 +89,9 @@ object FreqSketchAgg {
 /** Merges a column of SERIALIZED frequent-items sketch blobs — the stored
   * per-day/per-source heavy-hitter directory path: snapshot N+1's corpus
   * heavy hitters are yesterday's stored blobs merged with today's
-  * increment's blob, never a rescan of history (the [[KllMergeAgg]]
-  * pattern on the frequency plane). Null/empty blobs are skipped.
+  * increment's blob, never a rescan of history (the
+  * [[KllMergeAgg.kll_merge]] pattern on the frequency plane). Null/empty
+  * blobs are skipped.
   */
 case class FreqMergeAgg(
     child: Expression,

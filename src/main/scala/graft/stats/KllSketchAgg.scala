@@ -1,71 +1,22 @@
 package graft.stats
 
-import org.apache.datasketches.kll.KllDoublesSketch
-import org.apache.datasketches.memory.Memory
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.graft.shims
-import org.apache.spark.sql.types.{BinaryType, DataType}
+import org.apache.spark.sql.functions.{kll_merge_agg_double, kll_sketch_agg_double, length, when}
 
-/** KLL quantile-sketch aggregate (north star: histogram sketches for KS/PSI
-  * distribution-drift checks). A custom Catalyst
-  * `TypedImperativeAggregate` — the ONE place the engine needs Catalyst-level
-  * custom code (SURVEY.md §4.3): partial aggregation (map-side combine) and
-  * cross-partition merge come from the aggregate framework, so sketching a
-  * column over 10^12 rows is a single shuffle of ~KB-sized sketch states.
+/** KLL quantile sketch of a column (north star: histogram sketches for
+  * KS/PSI distribution-drift checks): Spark's built-in
+  * `kll_sketch_agg_double`, DataSketches underneath. Partial aggregation
+  * (map-side combine) and cross-partition merge come from the aggregate
+  * framework, so sketching a column over 10^12 rows is a single shuffle of
+  * ~KB-sized sketch states. NULL values are skipped.
   *
   * Result: the sketch's serialized bytes (heapify with
   * [[DriftStats.sketchOf]] to query quantiles/ranks).
   */
-case class KllSketchAgg(
-    child: Expression,
-    k: Int = 200,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KllDoublesSketch] with UnaryLike[Expression] {
-
-  override def createAggregationBuffer(): KllDoublesSketch =
-    KllDoublesSketch.newHeapInstance(k)
-
-  override def update(buffer: KllDoublesSketch, input: InternalRow): KllDoublesSketch = {
-    val v = child.eval(input)
-    if (v != null) buffer.update(v.asInstanceOf[Double])
-    buffer
-  }
-
-  override def merge(buffer: KllDoublesSketch, other: KllDoublesSketch): KllDoublesSketch = {
-    buffer.merge(other)
-    buffer
-  }
-
-  override def eval(buffer: KllDoublesSketch): Any = buffer.toByteArray
-
-  override def serialize(buffer: KllDoublesSketch): Array[Byte] = buffer.toByteArray
-
-  override def deserialize(bytes: Array[Byte]): KllDoublesSketch =
-    KllDoublesSketch.heapify(Memory.wrap(bytes))
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "kll_sketch"
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): KllSketchAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): KllSketchAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): KllSketchAgg =
-    copy(child = newChild)
-}
-
 object KllSketchAgg {
   /** Column-level entry point: `df.agg(kll_sketch($"x"))`. */
   def kll_sketch(c: Column, k: Int = 200): Column =
-    shims.column(
-      KllSketchAgg(shims.expression(c.cast("double")), k)
-        .toAggregateExpression())
+    kll_sketch_agg_double(c.cast("double"), k)
 }
 
 /** Merges a column of SERIALIZED KLL sketch blobs into one sketch — the
@@ -74,60 +25,16 @@ object KllSketchAgg {
   * check merges the history's blobs into a corpus baseline WITHOUT ever
   * rescanning the raw rows (mergeability is the whole point of the sketch;
   * KLL merge preserves the rank-error bound of the largest k involved).
-  * Same TypedImperativeAggregate frame as [[KllSketchAgg]]: map-side
-  * combine + one ~KB-state shuffle over the (tiny) profile table.
+  * Spark's built-in `kll_merge_agg_double`; NULL and zero-length blobs
+  * are skipped (the built-in rejects a zero-length blob).
   *
   * Counts (`getN`), min and max of the merged sketch are EXACT — equal to
   * the whole-corpus values — so the merge path carries a DuckDB oracle;
   * quantiles are within KLL error of a whole-corpus sketch
   * (KllMergeSpec).
   */
-case class KllMergeAgg(
-    child: Expression,
-    k: Int = 200,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KllDoublesSketch] with UnaryLike[Expression] {
-
-  override def createAggregationBuffer(): KllDoublesSketch =
-    KllDoublesSketch.newHeapInstance(k)
-
-  override def update(buffer: KllDoublesSketch, input: InternalRow): KllDoublesSketch = {
-    val v = child.eval(input)
-    if (v != null) {
-      val bytes = v.asInstanceOf[Array[Byte]]
-      if (bytes.nonEmpty)
-        buffer.merge(KllDoublesSketch.heapify(Memory.wrap(bytes)))
-    }
-    buffer
-  }
-
-  override def merge(buffer: KllDoublesSketch, other: KllDoublesSketch): KllDoublesSketch = {
-    buffer.merge(other)
-    buffer
-  }
-
-  override def eval(buffer: KllDoublesSketch): Any = buffer.toByteArray
-
-  override def serialize(buffer: KllDoublesSketch): Array[Byte] = buffer.toByteArray
-
-  override def deserialize(bytes: Array[Byte]): KllDoublesSketch =
-    KllDoublesSketch.heapify(Memory.wrap(bytes))
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "kll_merge"
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): KllMergeAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): KllMergeAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): KllMergeAgg =
-    copy(child = newChild)
-}
-
 object KllMergeAgg {
   /** `profiles.agg(kll_merge($"kll"))` — merge stored sketch blobs. */
   def kll_merge(c: Column, k: Int = 200): Column =
-    shims.column(KllMergeAgg(shims.expression(c), k).toAggregateExpression())
+    kll_merge_agg_double(when(length(c) > 0, c), k)
 }

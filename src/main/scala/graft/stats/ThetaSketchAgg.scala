@@ -1,14 +1,9 @@
 package graft.stats
 
 import org.apache.datasketches.memory.Memory
-import org.apache.datasketches.theta.{CompactSketch, SetOperation, Sketches, Union}
+import org.apache.datasketches.theta.{CompactSketch, SetOperation, Sketches}
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.graft.shims
-import org.apache.spark.sql.types.{BinaryType, DataType}
+import org.apache.spark.sql.functions.{concat, length, lit, theta_sketch_agg, theta_union_agg, when}
 
 /** Theta sketch aggregate — the SET-OPERATION member of the engine's
   * mergeable-sketch family (KLL = quantiles, HLL = cardinality,
@@ -25,138 +20,48 @@ import org.apache.spark.sql.types.{BinaryType, DataType}
   * intersections and differences are exact integers, the regime the
   * DuckDB oracle pins (`q_vocab_churn`); beyond it estimates carry the
   * documented relative standard error ≈ 1/sqrt(nominalEntries)
-  * (ThetaSketchSpec bounds it). Same `TypedImperativeAggregate` frame as
-  * [[KllSketchAgg]]: map-side combine, KB-sized shuffled state.
+  * (ThetaSketchSpec bounds it). Spark's built-in `theta_sketch_agg`:
+  * map-side combine, KB-sized shuffled state.
   *
   * NULL values are skipped.
   */
-case class ThetaSketchAgg(
-    child: Expression,
-    nominalEntries: Int = 4096,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Union] with UnaryLike[Expression] {
-
-  require(nominalEntries >= 16 && (nominalEntries & (nominalEntries - 1)) == 0,
-    s"nominalEntries=$nominalEntries must be a power of 2 >= 16")
-
-  // a Union buffer accepts raw item updates AND sketch merges — one
-  // buffer type serves both aggregate phases
-  override def createAggregationBuffer(): Union =
-    SetOperation.builder().setNominalEntries(nominalEntries).buildUnion()
-
-  override def update(buffer: Union, input: InternalRow): Union = {
-    val v = child.eval(input)
-    if (v != null) buffer.update(ThetaSketchAgg.escape(v.toString))
-    buffer
-  }
-
-  override def merge(buffer: Union, other: Union): Union = {
-    buffer.union(other.getResult)
-    buffer
-  }
-
-  override def eval(buffer: Union): Any = buffer.getResult.toByteArray
-
-  override def serialize(buffer: Union): Array[Byte] = buffer.getResult.toByteArray
-
-  override def deserialize(bytes: Array[Byte]): Union = {
-    val u = SetOperation.builder().setNominalEntries(nominalEntries).buildUnion()
-    u.union(Sketches.heapifySketch(Memory.wrap(bytes)))
-    u
-  }
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "theta_sketch"
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): ThetaSketchAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): ThetaSketchAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): ThetaSketchAgg =
-    copy(child = newChild)
-}
-
 object ThetaSketchAgg {
-  /** DataSketches `update(String)` silently REJECTS the empty string
-    * (like null), which would erase "" from every set estimate — a real
-    * value in a vocabulary (an empty lang tag IS the anomaly to catch).
-    * Injective escape: "" → NUL, and a NUL-prefixed value gains one more
-    * NUL, so distinctness is preserved for every input (found by
-    * SketchPropertySpec's grouping-invariance fuzz).
+  /** DataSketches silently REJECTS the empty string (like null), which
+    * would erase "" from every set estimate — a real value in a vocabulary
+    * (an empty lang tag IS the anomaly to catch). Injective escape: "" →
+    * NUL, and a NUL-prefixed value gains one more NUL, so distinctness is
+    * preserved for every input (found by SketchPropertySpec's
+    * grouping-invariance fuzz). Stored blobs hash the escaped values, so
+    * the escape must not change: a new one would no longer union with
+    * them (SketchCompatSpec).
     */
-  private[stats] def escape(s: String): String =
-    if (s.isEmpty) "\u0000"
-    else if (s.charAt(0) == '\u0000') "\u0000" + s
-    else s
+  private[stats] def escape(s: Column): Column =
+    when(s === "", lit("\u0000"))
+      .when(s.startsWith("\u0000"), concat(lit("\u0000"), s))
+      .otherwise(s)
+
+  /** The built-ins' size parameter: log2 of a power-of-2 `nominalEntries`. */
+  private[stats] def lgNomEntries(nominalEntries: Int): Int = {
+    require(nominalEntries >= 16 && (nominalEntries & (nominalEntries - 1)) == 0,
+      s"nominalEntries=$nominalEntries must be a power of 2 >= 16")
+    Integer.numberOfTrailingZeros(nominalEntries)
+  }
 
   /** `df.agg(theta_sketch($"v"))` — serialized theta sketch of distincts. */
   def theta_sketch(c: Column, nominalEntries: Int = 4096): Column =
-    shims.column(
-      ThetaSketchAgg(shims.expression(c.cast("string")), nominalEntries)
-        .toAggregateExpression())
+    theta_sketch_agg(escape(c.cast("string")), lgNomEntries(nominalEntries))
 }
 
 /** Merges a column of SERIALIZED theta sketch blobs — the stored-directory
-  * path ([[KllMergeAgg]]'s pattern on the set plane): per-day/per-source
-  * value-set sketches union without rescanning raw rows. Null/empty blobs
-  * are skipped.
+  * path ([[KllMergeAgg.kll_merge]]'s pattern on the set plane):
+  * per-day/per-source value-set sketches union without rescanning raw
+  * rows. Spark's built-in `theta_union_agg`; NULL and zero-length blobs
+  * are skipped (the built-in rejects a zero-length blob).
   */
-case class ThetaMergeAgg(
-    child: Expression,
-    nominalEntries: Int = 4096,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Union] with UnaryLike[Expression] {
-
-  require(nominalEntries >= 16 && (nominalEntries & (nominalEntries - 1)) == 0,
-    s"nominalEntries=$nominalEntries must be a power of 2 >= 16")
-
-  override def createAggregationBuffer(): Union =
-    SetOperation.builder().setNominalEntries(nominalEntries).buildUnion()
-
-  override def update(buffer: Union, input: InternalRow): Union = {
-    val v = child.eval(input)
-    if (v != null) {
-      val bytes = v.asInstanceOf[Array[Byte]]
-      if (bytes.nonEmpty)
-        buffer.union(Sketches.heapifySketch(Memory.wrap(bytes)))
-    }
-    buffer
-  }
-
-  override def merge(buffer: Union, other: Union): Union = {
-    buffer.union(other.getResult)
-    buffer
-  }
-
-  override def eval(buffer: Union): Any = buffer.getResult.toByteArray
-
-  override def serialize(buffer: Union): Array[Byte] = buffer.getResult.toByteArray
-
-  override def deserialize(bytes: Array[Byte]): Union = {
-    val u = SetOperation.builder().setNominalEntries(nominalEntries).buildUnion()
-    u.union(Sketches.heapifySketch(Memory.wrap(bytes)))
-    u
-  }
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def prettyName: String = "theta_merge"
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): ThetaMergeAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): ThetaMergeAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): ThetaMergeAgg =
-    copy(child = newChild)
-}
-
 object ThetaMergeAgg {
   /** `blobs.agg(theta_merge($"theta"))` — union stored sketch blobs. */
   def theta_merge(c: Column, nominalEntries: Int = 4096): Column =
-    shims.column(ThetaMergeAgg(shims.expression(c), nominalEntries).toAggregateExpression())
+    theta_union_agg(when(length(c) > 0, c), ThetaSketchAgg.lgNomEntries(nominalEntries))
 }
 
 /** Driver-side set operations over serialized theta sketches. */

@@ -504,8 +504,8 @@ object StreamingValidator {
     * batch snapshots' blobs — into corpus heavy hitters without
     * re-reading events. Batch≡stream parity (merged blobs vs one batch
     * sketch, exact regime) asserted in StreamingValidatorSpec. The same
-    * shape works verbatim for [[graft.stats.ThetaSketchAgg]] value-set
-    * blobs.
+    * shape works verbatim for [[graft.stats.ThetaSketchAgg.theta_sketch]]
+    * value-set blobs.
     */
   def freqSketchStream(docs: DataFrame, itemCol: String,
                        maxMapSize: Int = 1024,
@@ -518,7 +518,7 @@ object StreamingValidator {
       .agg(graft.stats.FreqSketchAgg.freq_sketch(col(itemCol), maxMapSize)
         .as("freq"))
 
-  /** Streaming THETA value-set twin ([[graft.stats.ThetaSketchAgg]]):
+  /** Streaming THETA value-set twin ([[graft.stats.ThetaSketchAgg.theta_sketch]]):
     * one set sketch blob of the column's distinct values per event-time
     * window, emitted on watermark close — the ingest face of the
     * vocabulary directory. Stored window blobs union via

@@ -319,6 +319,28 @@ class ProfileStoreSpec extends SparkTestBase {
     }
   }
 
+  test("committed profile read: a retried commit of the same run reads the retry's rows") {
+    val tmp = Files.createTempDirectory("graft-profile-retry").toString
+    val m = new Manifest(s"$tmp/manifest.jsonl")
+    import scala.jdk.CollectionConverters._
+    // a retry rewrites the run directory (new part-file names, the first
+    // attempt's files deleted) and then records the run again
+    def commit(nDocs: Long): Unit = {
+      ProfileStore.writeRun(spark, DocGen.documents(spark, nDocs).toDF(), 4,
+        s"$tmp/out", 1L, "snap-r")
+      val dir = java.nio.file.Paths.get(s"$tmp/out/profile/run=1")
+      val files = scala.util.Using.resource(Files.list(dir))(
+        _.iterator().asScala.map(_.toString)
+          .filter(_.endsWith(".parquet")).toSeq.sorted)
+      m.recordArtifact("profile", "snap-r", "chash", 1L, files, "khash")
+    }
+    commit(600L)
+    commit(900L)
+    val rows = ProfileStore.readCommitted(spark, m, "snap-r", "chash", "khash").get
+    assert(rows.count() == 4L * ProfileStore.MetricCols.size)
+    assert(rows.filter(col("column") === "doc_id").agg(sum("n")).collect()(0).getLong(0) == 900L)
+  }
+
   test("drift.prevProfile without profile.enabled is refused") {
     val tmp = Files.createTempDirectory("graft-profile-bad").toString
     DocGen.documents(spark, 100L).toDF()

@@ -55,6 +55,12 @@ class KllMergeSpec extends SparkTestBase {
     val withJunk = DriftStats.sketchOf(
       DriftStats.mergeSketches(blobs ++ Seq(null, Array.emptyByteArray)))
     assert(withJunk.getN == 1200000L)
+    // and so does the aggregate path
+    val aggWithJunk = DriftStats.sketchOf(daily.select("kll")
+      .unionByName(spark.range(1).select(lit(null).cast("binary").as("kll")))
+      .unionByName(spark.range(1).select(lit(Array.emptyByteArray).as("kll")))
+      .agg(KllMergeAgg.kll_merge(col("kll"))).collect()(0).getAs[Array[Byte]](0))
+    assert(aggWithJunk.getN == 1200000L)
   }
 
   test("a merged baseline drift-checks a new day without rescanning history") {

@@ -19,7 +19,8 @@ class SketchPropertySpec extends SparkTestBase {
   // mixed-shape rows: nullable long, nullable string, fractional
   private def rows(seed: Int) = genCases(for {
     k <- Gen.option(Gen.chooseNum(-1000L, 1000L))
-    s <- Gen.option(Gen.oneOf("a", "b", "cc", "dddd", "", "Z9", "~", " "))
+    s <- Gen.option(Gen.oneOf("a", "b", "cc", "dddd", "", "Z9", "~", " ",
+      "\u0000", "\u0000a"))
     f <- Gen.chooseNum(-50, 50).map(_ / 7.0)
   } yield (k, s, f), 600 + seed)
 

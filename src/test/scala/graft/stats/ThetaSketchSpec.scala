@@ -86,6 +86,13 @@ class ThetaSketchSpec extends SparkTestBase {
     assert(churn.values.forall(_.getBoolean(7)))
   }
 
+  test("nominalEntries must be a power of 2 >= 16") {
+    Seq(0, 8, 100, 4095).foreach { n =>
+      intercept[IllegalArgumentException](ThetaSketchAgg.theta_sketch(col("v"), n))
+      intercept[IllegalArgumentException](ThetaMergeAgg.theta_merge(col("v"), n))
+    }
+  }
+
   test("nulls are skipped") {
     val bytes = spark.range(1000)
       .select(when(col("id") % 2 === 0, lit(null)).otherwise(col("id") % 7).as("v"))
