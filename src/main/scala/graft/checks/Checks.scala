@@ -822,12 +822,15 @@ object CheckFieldTypeDefined extends ConstraintCheck {
   * primary keys across the corpus, detected with two-phase salted
   * aggregation so one hot doc_id can't overload a reducer. The reference has
   * no analogue (Virtuoso enforces graph-level uniqueness); this is an
-  * engine-native table-integrity check.
+  * engine-native table-integrity check. In the composed pass it reads
+  * `doc_id` from the shared scan's cache (one row per row of `docs`)
+  * instead of scanning the corpus again.
   */
 object CheckDocIdUnique extends ConstraintCheck {
   val id = "DOC-ID-UNIQUE"
   def run(ctx: CheckContext): DataFrame = {
-    graft.engine.Skew.duplicateKeys(ctx.docs.select("doc_id"), "doc_id")
+    val ids = ctx.sharedOpt.getOrElse(ctx.docs).select("doc_id")
+    graft.engine.Skew.duplicateKeys(ids, "doc_id")
       .select(ctx.violation(s"$id-100", "error", col("doc_id"), lit(null),
         col("key_count"), lit("doc_id occurs once")): _*)
   }

@@ -82,72 +82,55 @@ object Pipeline {
       c.asInstanceOf[RowLocalCheck].extraFrames(ctx)
         .map(_.withColumn("check", lit(c.id))))
     val otherFrames = others.map(c => c.run(ctx).withColumn("check", lit(c.id)))
-    // the union's partition count is the SUM over ~20 branches (~350
-    // partitions of a small frame): every downstream action — the count,
-    // a cache build, the verdict rollup — pays one task per partition in
-    // pure scheduling. A narrow coalesce bounds it at session
-    // parallelism; branch work below the exchanges is unaffected.
-    (((core +: extras) ++ otherFrames).reduce(_ unionByName _)
-      .coalesce(spark.sparkContext.defaultParallelism), core)
-  }
-
-  /** Canonical span-sequence digest: md5 of the offset-ordered
-    * (kind, text, media_ref, offset) serialization — the per-row invariant
-    * itself (BASELINE input_hint: span-sequence equality on
-    * (kind, text, media_ref, order)) as one comparable value. Control-char
-    * separators (0x00 null marker, 0x01 field, 0x02 span) keep distinct
-    * sequences from colliding through concatenation; row-local, codegen'd.
-    *
-    * A NULL spans array digests to a distinct non-null SENTINEL, never to
-    * NULL: md5(NULL) would make [[snapshotDiff]] decide presence from the
-    * digest instead of the join — a doc whose spans went non-null → NULL
-    * between snapshots would read as "removed" (and silently drop from
-    * both delta slices), and a null-spans doc would read as "added" even
-    * when unchanged. The sentinel starts with 0x03, so it can never
-    * collide with an md5 hex digest (including the empty-array digest).
-    */
-  def spanDigest(spans: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val ordered = array_sort(spans, (l, r) =>
-      when(l.getField("offset") < r.getField("offset"), -1)
-        .when(l.getField("offset") > r.getField("offset"), 1)
-        .otherwise(0))
-    when(spans.isNull, lit("\u0003nullspans"))
-      .otherwise(md5(concat_ws("\u0002", transform(ordered, s => concat_ws("\u0001",
-        coalesce(s.getField("kind"), lit("\u0000")),
-        coalesce(s.getField("text"), lit("\u0000")),
-        coalesce(s.getField("media_ref"), lit("\u0000")),
-        s.getField("offset").cast("string"))))))
+    (coalescedUnion(spark, (core +: extras) ++ otherFrames), core)
   }
 
   /** Snapshot-to-snapshot document diff: `(doc_id, status)` with status ∈
     * added | removed | changed | unchanged, change detected through
-    * [[spanDigest]] equality. ONE full-outer join on the unique doc_id
-    * (digests are row-local) — this frame is also the natural audit
-    * artifact to persist beside a snapshot's results.
+    * [[graft.functions.SpanDigest]] equality (the offset-ordered span
+    * sequence, serialized injectively, as a 128-bit digest). ONE
+    * full-outer join on the unique doc_id (digests are row-local) — this
+    * frame is also the natural audit artifact to persist beside a
+    * snapshot's results.
     */
   def snapshotDiff(prev: DataFrame, cur: DataFrame): DataFrame =
     snapshotDiffWithCounts(prev, cur).select("doc_id", "status")
 
   /** [[snapshotDiff]] plus per-side doc_id multiplicities (`__np`/`__nc`)
     * — the guard columns [[violationsDelta]] needs. Digests aggregate per
-    * doc_id (min) BEFORE the join: a snapshot holding duplicate doc_ids —
+    * doc_id BEFORE the join: a snapshot holding duplicate doc_ids —
     * precisely what the DocIdUnique check exists to flag — would otherwise
     * fan the full-outer join out, labelling one doc "changed" AND
     * "unchanged" simultaneously and double-counting its violations across
     * the delta slices. The groupBy adds no exchange beyond the join's own
-    * hash partitioning on doc_id (same key, partial agg map-side).
+    * hash partitioning on doc_id (same key, partial agg map-side), and
+    * its two fixed-width `min`s plan as a `HashAggregate`.
+    *
+    * Presence comes from the counts (a side's count is NULL after the
+    * join iff the doc_id is absent there), and digests compare null-safe:
+    * a NULL spans array digests to NULL, so spans non-null → NULL reads
+    * "changed" and NULL → NULL reads "unchanged", never added/removed.
+    *
+    * `min` of `hi` and of `lo` are taken separately, so a group's two
+    * halves can come from two different rows — but only when the group
+    * has two rows, i.e. the doc_id is duplicated on that side (`__np` or
+    * `__nc` > 1), and [[violationsDelta]] refuses exactly that case. For a
+    * unique doc_id each half is its one row's.
     */
   private[engine] def snapshotDiffWithCounts(prev: DataFrame, cur: DataFrame): DataFrame = {
-    def digests(df: DataFrame, d: String, n: String): DataFrame =
-      df.groupBy(col("doc_id"))
-        .agg(min(spanDigest(col("spans"))).as(d), count(lit(1)).as(n))
-    digests(prev, "__dp", "__np")
-      .join(digests(cur, "__dc", "__nc"), Seq("doc_id"), "full_outer")
+    def digests(df: DataFrame, side: String): DataFrame =
+      df.select(col("doc_id"),
+          graft.functions.SpanDigest.spanDigest(col("spans")).as("__d"))
+        .groupBy(col("doc_id"))
+        .agg(min(col("__d.hi")).as(s"__h$side"), min(col("__d.lo")).as(s"__l$side"),
+          count(lit(1)).as(s"__n$side"))
+    digests(prev, "p")
+      .join(digests(cur, "c"), Seq("doc_id"), "full_outer")
       .select(col("doc_id"),
-        when(col("__dp").isNull, "added")
-          .when(col("__dc").isNull, "removed")
-          .when(col("__dp") =!= col("__dc"), "changed")
-          .otherwise("unchanged").as("status"),
+        when(col("__np").isNull, "added")
+          .when(col("__nc").isNull, "removed")
+          .when(col("__hp") <=> col("__hc") && col("__lp") <=> col("__lc"), "unchanged")
+          .otherwise("changed").as("status"),
         coalesce(col("__np"), lit(0L)).as("__np"),
         coalesce(col("__nc"), lit(0L)).as("__nc"))
   }
@@ -184,11 +167,9 @@ object Pipeline {
     *
     * Returns (violations, core): `violations` ≡ a from-scratch
     * `violations(cur)` row-for-row (PipelineDeltaSpec), `core` is what to
-    * persist for the NEXT delta. The diff frame is localCheckpoint-
-    * materialized — it is consumed twice (dirty and unchanged slices), and
-    * it is doc_id+status-sized.
-    */
-  /** `precomputedDiff`: an already-materialized
+    * persist for the NEXT delta ([[deltaCore]]).
+    *
+    * `precomputedDiff`: an already-materialized
     * [[snapshotDiffWithCounts]] frame for the SAME (prev, cur) pair —
     * callers that need the diff twice (the app's delta mode also derives
     * the profile's touched buckets from it) compute it once instead of
@@ -199,14 +180,33 @@ object Pipeline {
                       schema: SchemaDef,
                       checks: Seq[ConstraintCheck] = Checks.all,
                       precomputedDiff: Option[DataFrame] = None): (DataFrame, DataFrame) = {
+    val core = deltaCore(spark, prevDocs, prevCore, curDocs, schema, checks,
+      precomputedDiff)
+    (violationsFromCore(spark, curDocs, schema, core, checks), core)
+  }
+
+  /** The row-local core of `curDocs` assembled incrementally — fresh rows
+    * over the added/changed slice ∪ `prevCore`'s rows of unchanged docs —
+    * without the corpus checks [[violationsDelta]] adds around it: a caller
+    * that caches the core before composing the violations (the app) builds
+    * the composition once, over the cached core. The diff frame is
+    * localCheckpoint-materialized when not given — it is consumed twice
+    * (dirty and unchanged slices), and it is doc_id+status-sized.
+    */
+  def deltaCore(spark: SparkSession, prevDocs: DataFrame,
+                prevCore: DataFrame, curDocs: DataFrame,
+                schema: SchemaDef,
+                checks: Seq[ConstraintCheck] = Checks.all,
+                precomputedDiff: Option[DataFrame] = None): DataFrame = {
     val diffAll = precomputedDiff.getOrElse(
       snapshotDiffWithCounts(prevDocs, curDocs).localCheckpoint())
     // delta mode REQUIRES doc_id-unique snapshots (what DocIdUnique flags):
     // duplicate ids would have fanned the diff join out, putting one doc in
     // both the fresh-scan and carried-core slices and double-counting its
-    // violations vs a from-scratch run. Fail loudly — the caller should run
-    // full validation (which reports the DocIdUnique violation) instead.
-    // The probe scans the already-materialized doc_id-sized checkpoint.
+    // violations vs a from-scratch run (and would let the diff's per-half
+    // digest mins mix two rows). Fail loudly — the caller should run full
+    // validation (which reports the DocIdUnique violation) instead. The
+    // probe scans the already-materialized doc_id-sized checkpoint.
     val dup = diffAll.filter(col("__np") > 1 || col("__nc") > 1)
       .select("doc_id", "__np", "__nc").limit(3).collect()
     require(dup.isEmpty,
@@ -221,8 +221,7 @@ object Pipeline {
     val unchanged = diff.filter(col("status") === "unchanged")
       .select(col("doc_id").cast("string").as("docId"))
     val carried = prevCore.join(unchanged, Seq("docId"), "left_semi")
-    val core = freshCore.unionByName(carried)
-    (violationsFromCore(spark, curDocs, schema, core, checks), core)
+    freshCore.unionByName(carried)
   }
 
   /** Full violations assembled around an ALREADY-COMPUTED (typically
@@ -230,7 +229,8 @@ object Pipeline {
     * extraFrames ∪ the corpus checks, all over `docs` — the delta flow,
     * whose core is fresh rows over the dirty slice ∪ carried rows. A full
     * run derives its core from the shared scan instead
-    * ([[violationsWithCore]]).
+    * ([[violationsWithCore]]); both unions get the same shape
+    * ([[coalescedUnion]]).
     */
   def violationsFromCore(spark: SparkSession, docs: DataFrame,
                          schema: SchemaDef, core: DataFrame,
@@ -246,8 +246,19 @@ object Pipeline {
       c.asInstanceOf[RowLocalCheck].extraFrames(ctx)
         .map(_.withColumn("check", lit(c.id))))
     val otherFrames = others.map(c => c.run(ctx).withColumn("check", lit(c.id)))
-    (core +: (extraFrames ++ otherFrames)).reduce(_ unionByName _)
+    coalescedUnion(spark, core +: (extraFrames ++ otherFrames))
   }
+
+  /** The composed pass's union of violation frames, coalesced to session
+    * parallelism. Uncoalesced, its partition count is the SUM over ~20
+    * branches (~350 partitions of a small frame): every downstream action
+    * — the write (one part file per partition), a cache build, the
+    * verdict rollup — pays one task per partition in pure scheduling. A
+    * narrow coalesce bounds it; branch work below the exchanges is
+    * unaffected.
+    */
+  private def coalescedUnion(spark: SparkSession, frames: Seq[DataFrame]): DataFrame =
+    frames.reduce(_ unionByName _).coalesce(spark.sparkContext.defaultParallelism)
 
   /** Per-bucket, per-check verdicts (north rule: per-partition pass/fail +
     * metrics + lineage). Doc-level violations roll up by bucket; dataset-

@@ -130,18 +130,28 @@ object ProfileStore {
     * directories (plan-asserted in ProfileStoreSpec). The diff join is
     * digest-sized; the touched-bucket set is ≤ nBuckets ints on the
     * driver.
+    *
+    * When the diff touches EVERY bucket nothing is carried, and the run
+    * writes exactly what [[writeRun]] writes, without reading the prior
+    * profile. The prior-profile guards (one snapshotId, the expected one)
+    * cover CARRIED rows only — a full [[writeRun]] with a drift prior
+    * never ran them either — so they run only when some bucket is carried.
+    * With 64 buckets any increment of more than a few hundred random docs
+    * touches all of them.
     */
   def writeRunDelta(spark: SparkSession, prevDocs: DataFrame,
                     prevOutDir: String, curDocs: DataFrame, nBuckets: Int,
                     outDir: String, runNum: Long, snapshotId: String,
                     precomputedDiff: Option[DataFrame] = None,
                     expectPrevSnapshotId: Option[String] = None): Unit = {
-    validateTrustedBucket(curDocs, nBuckets)
     val touched = precomputedDiff
       .getOrElse(Pipeline.snapshotDiff(prevDocs, curDocs))
       .filter(col("status") =!= "unchanged")
       .select(pmod(xxhash64(col("doc_id")), lit(nBuckets)).cast("int").as("bucket"))
       .distinct().collect().map(_.getInt(0)).toSeq
+    if (touched.size == nBuckets)
+      return writeRun(spark, curDocs, nBuckets, outDir, runNum, snapshotId)
+    validateTrustedBucket(curDocs, nBuckets)
     val fresh = if (touched.isEmpty) {
       // nothing changed: carry everything (an empty-frame mergeableProfile
       // would still demand a groupBy over zero rows)

@@ -176,6 +176,60 @@ object ValidatorApp {
     id
   }
 
+  /** The lineage columns every persisted core carries. */
+  private val LineageCols = Seq("constraintHash", "checksHash")
+
+  /** Delta mode's lineage gate: a prior core from a different schema or
+    * check set would carry stale verdicts forward silently. Decided from
+    * the parquet FOOTERS of the core's files (parquet-hadoop, on the Spark
+    * driver, which also lists the files; the fixed read schema skips
+    * schema inference), so no Spark job runs and no row is read:
+    * every row group of every file must carry, for both lineage columns,
+    * zero nulls and min = max = the expected value — exactly "every row's
+    * lineage equals the config's". A file with no row groups passes: a
+    * fully-clean prior run (zero row-local violations) persists an empty
+    * core, which carries nothing forward, and the gate must not make
+    * incremental validation unusable after the happy path. A row group
+    * without statistics for a lineage column cannot be decided, so it is
+    * refused, naming the file.
+    */
+  private[engine] def coreLineageGate(spark: SparkSession, coreDir: String,
+                                      constraintHash: String,
+                                      checksHash: String): Unit = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.io.api.Binary
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val want = LineageCols.zip(Seq(constraintHash, checksHash))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val lineageSchema = StructType(LineageCols.map(StructField(_, StringType)))
+    for (file <- spark.read.schema(lineageSchema).parquet(coreDir).inputFiles) {
+      val footer = scala.util.Using.resource(ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(new java.net.URI(file)), conf)))(_.getFooter)
+      for (block <- footer.getBlocks.asScala if block.getRowCount > 0;
+           (name, expected) <- want) {
+        val stats = block.getColumns.asScala
+          .find(_.getPath.toDotString == name).map(_.getStatistics)
+        require(stats.exists(s => s != null && !s.isEmpty && s.isNumNullsSet),
+          s"delta.prevCore file $file has a row group without $name " +
+            "statistics — its lineage cannot be checked")
+        val s = stats.get
+        def str(v: Any): String = v match {
+          case b: Binary => b.toStringUsingUTF8
+          case other => String.valueOf(other)
+        }
+        val (lo, hi) =
+          if (s.hasNonNullValue) (str(s.genericGetMin), str(s.genericGetMax))
+          else ("NULL", "NULL")
+        require(s.getNumNulls == 0 && lo == expected && hi == expected,
+          s"delta.prevCore lineage $name in $file is [$lo, $hi] with " +
+            s"${s.getNumNulls} NULLs; it does not match this config " +
+            s"($constraintHash, $checksHash) — the previous core must come " +
+            "from the same schema + check set")
+      }
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(configPath, outDir) = args.take(2)
     val cfg = ValidatorConfig.load(configPath)
@@ -185,6 +239,17 @@ object ValidatorApp {
 
   def run(spark: SparkSession, cfg: ValidatorConfig, outDir: String): Unit = {
     val checks = cfg.configuredChecks
+
+    // INCREMENTAL (delta) mode: the fused span scan covers only docs that
+    // changed since delta.prevDocuments, the prior core carries forward.
+    // Its lineage gate runs FIRST, from the prior core's footers: a
+    // mispointed core is refused before any Spark job (even the corpus
+    // read's schema inference) starts.
+    val isDelta = cfg.deltaPrevDocuments.isDefined
+    require(cfg.deltaPrevDocuments.isDefined == cfg.deltaPrevCore.isDefined,
+      "delta.prevDocuments and delta.prevCore must be set together")
+    cfg.deltaPrevCore.foreach(
+      coreLineageGate(spark, _, cfg.schema.constraintHash, cfg.checksHash))
 
     // bucketed catalog table preferred: the doc_id universe side of the
     // referential joins then scans pre-hashed buckets shuffle-free
@@ -242,13 +307,8 @@ object ValidatorApp {
     // refs in remaining buckets can point at docs in completed buckets
     val universe = if (isResume) Some(all) else None
 
-    // INCREMENTAL (delta) mode: the fused span scan covers only docs that
-    // changed since delta.prevDocuments, the prior core carries forward.
-    // Mutually exclusive with bucket-resume: resume finishes an
-    // interrupted run of ONE snapshot, delta steps BETWEEN snapshots.
-    val isDelta = cfg.deltaPrevDocuments.isDefined
-    require(cfg.deltaPrevDocuments.isDefined == cfg.deltaPrevCore.isDefined,
-      "delta.prevDocuments and delta.prevCore must be set together")
+    // delta mode is mutually exclusive with bucket-resume: resume finishes
+    // an interrupted run of ONE snapshot, delta steps BETWEEN snapshots.
     require(!(isDelta && isResume),
       "delta mode cannot combine with a manifest bucket-resume")
     val hasRowLocal = checks.exists(_.isInstanceOf[graft.checks.RowLocalCheck])
@@ -263,30 +323,17 @@ object ValidatorApp {
       if (isDelta) {
         require(hasRowLocal, "delta mode needs at least one row-local check")
         val prev = spark.read.parquet(cfg.deltaPrevDocuments.get)
-        val prevCoreRaw = spark.read.parquet(cfg.deltaPrevCore.get)
-        // lineage gate: a core from a different schema or check set would
-        // carry stale verdicts forward silently. An EMPTY core is legal —
-        // a fully-clean prior run (zero row-local violations) persists zero
-        // rows, and an empty core trivially carries nothing forward; the
-        // gate must not make incremental validation unusable after the
-        // happy path (lineage columns live in the data, so an empty core
-        // has no lineage rows to check).
-        val lineage = prevCoreRaw.select("constraintHash", "checksHash")
-          .distinct().collect()
-        require(lineage.isEmpty || (lineage.length == 1 &&
-          lineage(0).getString(0) == cfg.schema.constraintHash &&
-          lineage(0).getString(1) == cfg.checksHash),
-          s"delta.prevCore lineage ${lineage.toSeq} does not match this " +
-            s"config (${cfg.schema.constraintHash}, ${cfg.checksHash}) — " +
-            "the previous core must come from the same schema + check set")
-        val prevCore = prevCoreRaw.drop("constraintHash", "checksHash")
+        // lineage already gated from the footers at the top of run()
+        val prevCore = spark.read.parquet(cfg.deltaPrevCore.get).drop(LineageCols: _*)
         val diffAll = Pipeline.snapshotDiffWithCounts(prev, all).localCheckpoint()
         deltaDiff = Some(diffAll)
-        val (v, core) = Pipeline.violationsDelta(spark, prev, prevCore, all,
-          cfg.schema, checks, precomputedDiff = Some(diffAll))
-        val cachedCore = core.cache()
-        (Pipeline.violationsFromCore(spark, all, cfg.schema, cachedCore, checks)
-          .cache(), Some(cachedCore))
+        // the core alone, cached, then ONE composition over it
+        // (violationsDelta would also build a violations frame over the
+        // uncached core, registering a shared scan this branch never uses)
+        val core = Pipeline.deltaCore(spark, prev, prevCore, all,
+          cfg.schema, checks, precomputedDiff = Some(diffAll)).cache()
+        (Pipeline.violationsFromCore(spark, all, cfg.schema, core, checks)
+          .cache(), Some(core))
       } else if (!isResume && hasRowLocal) {
         // the core is exploded from the shared scan's cache: no cache of
         // its own, no second corpus scan

@@ -73,6 +73,55 @@ class PipelineDeltaSpec extends SparkTestBase {
     assert(gone == Seq("removed"), gone.toString)
   }
 
+  test("snapshotDiff: a separator inside a field is a change, and the NULL-offset order is total") {
+    val session = spark
+    import session.implicits._
+    import graft.model.{Document, Span}
+    val odd = DocGen.docId(N + 500)
+    def with1(spans: Span*): DataFrame =
+      prevDocs.unionByName(Seq(Document(odd, spans)).toDF())
+    // joined with 0x01 separators both read "txt:count␁abc␁1…"; the cur
+    // span fails unsignedInt, so reading the doc "unchanged" would carry
+    // its prior (violation-free) core rows forward
+    val prev = with1(Span("txt:count\u0001abc", "1", null, 0)).localCheckpoint()
+    val cur = with1(Span("txt:count", "abc\u00011", null, 0)).localCheckpoint()
+    def status(p: DataFrame, c: DataFrame): Seq[String] = Pipeline.snapshotDiff(p, c)
+      .filter(col("doc_id") === odd).select("status").collect().map(_.getString(0)).toSeq
+    assert(status(prev, cur) == Seq("changed"))
+    val prevCore = Pipeline.rowLocalCore(spark, prev, DocGen.schema)
+    val (delta, _) = Pipeline.violationsDelta(spark, prev, prevCore, cur, DocGen.schema)
+    def rows(df: DataFrame) = df.filter(col("docId") === odd).collect().map(key).sorted.toSeq
+    val full = rows(Pipeline.violations(spark, cur, DocGen.schema))
+    assert(full.exists(_.contains("DATATYPE")), s"fixture must fire a datatype row: $full")
+    assert(rows(delta) == full)
+
+    // NULL offsets sort first, the rest by offset: [2, NULL, 1] and
+    // [1, NULL, 2] over the same spans are one sequence (a comparator
+    // returning 0 against NULL is no total order and keeps both orders)
+    val (a, n, b) = (Span("txt:title", "a", null, 2), Span("txt:note", "n", null, 0),
+      Span("txt:title", "b", null, 1))
+    def nullOff(spans: Span*): DataFrame = with1(spans: _*)
+      .withColumn("spans", when(col("doc_id") === odd, transform(col("spans"), s =>
+        s.withField("offset", when(s.getField("kind") === "txt:note", lit(null))
+          .otherwise(s.getField("offset"))))).otherwise(col("spans")))
+    assert(status(nullOff(a, n, b), nullOff(b, n, a)) == Seq("unchanged"))
+    assert(status(nullOff(a, n, b), nullOff(n, a, b)) == Seq("unchanged"))
+    assert(status(nullOff(a, n, b), nullOff(a, b, n)) == Seq("unchanged"))
+  }
+
+  test("snapshotDiff: an annotated span's datatype is part of the compared sequence") {
+    // strict-mode DATATYPE verdicts read the annotation, so a datatype-only
+    // edit must re-validate the doc
+    val prev = DocGen.annotatedDocuments(spark, 200L).toDF()
+    val edited = DocGen.docId(5)
+    val cur = prev.withColumn("spans", when(col("doc_id") === edited,
+      transform(col("spans"), s => s.withField("datatype", lit("xsd:other"))))
+      .otherwise(col("spans")))
+    val changed = Pipeline.snapshotDiff(prev, cur).filter(col("status") =!= "unchanged")
+      .select("doc_id", "status").collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    assert(changed == Seq((edited, "changed")), changed.toString)
+  }
+
   test("violationsDelta refuses duplicated doc_ids instead of double-counting") {
     val prev = prevDocs.localCheckpoint()
     val dupCur = curDocs.unionByName(curDocs.filter(num === 7)).localCheckpoint()

@@ -90,11 +90,11 @@ class ValidatorAppSpec extends SparkTestBase {
     val (tmp, _) = fullRun(1200L)
     val scans = spark.read.parquet(s"$tmp/out/metrics").collect()
       .map(r => r.getAs[String]("stage") -> r.getAs[Long]("scans")).toMap
-    // the shared scan feeds the violations write and the core write
-    // reads its cache; the one other scan is DocIdUnique's doc_id column.
-    // A separate core scan (and cache) would make it 3.
+    // the shared scan feeds the violations write (DocIdUnique reads its
+    // cached doc_id) and the core write reads its cache. A DocIdUnique scan
+    // of its own would make it 2; a separate core scan (and cache), 3.
     assert(scans("core_persist") == 0L, s"core_persist scans: $scans")
-    assert(scans("validate_persist") + scans("core_persist") == 2L,
+    assert(scans("validate_persist") + scans("core_persist") == 1L,
       s"validate_persist + core_persist scans: $scans")
   }
 
@@ -301,6 +301,12 @@ class ValidatorAppSpec extends SparkTestBase {
     val mismatch = d.join(f, Seq("check", "checkId", "docId", "kind", "value", "bucket"), "full")
       .filter(!(d("count") <=> f("count"))).count()
     assert(mismatch == 0, s"delta app run differs from full on $mismatch keys")
+    // the delta union is coalesced like the full run's: one violation
+    // part file per core at most, not one per union branch partition
+    val parts = new java.io.File(s"$tmp/o2/violations").listFiles()
+      .filter(_.isDirectory).flatMap(_.listFiles()).count(_.getName.endsWith(".parquet"))
+    assert(parts >= 1 && parts <= spark.sparkContext.defaultParallelism,
+      s"delta run wrote $parts violation part files")
     // the delta run wrote ITS core (for the next snapshot) with lineage
     val core2 = spark.read.parquet(coreDir(s"$tmp/o2"))
     assert(core2.select("constraintHash").distinct().count() == 1)
@@ -340,5 +346,85 @@ class ValidatorAppSpec extends SparkTestBase {
     intercept[IllegalArgumentException] {
       ValidatorApp.run(spark, ValidatorConfig.load(s"$tmp/o4.properties"), s"$tmp/o4")
     }
+  }
+
+  /** A core-shaped frame (violation columns + lineage) of `n` rows. */
+  private def fakeCore(n: Int, constraintHash: String, checksHash: String): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions._
+    spark.range(n).select(
+      lit("DATATYPE-PROPERTIES-DATATYPE-101").as("checkId"), lit("error").as("severity"),
+      concat(lit("doc:"), col("id").cast("string")).as("docId"), lit("txt:count").as("kind"),
+      lit("abc").as("value"), lit("xsd:unsignedInt").as("expected"),
+      lit("DATATYPE-PROPERTIES-DATATYPE").as("check"),
+      lit(constraintHash).as("constraintHash"), lit(checksHash).as("checksHash"))
+  }
+
+  test("delta lineage gate: a mismatched core is refused from its footers before any Spark job starts") {
+    val tmp = Files.createTempDirectory("graft-gate").toString
+    DocGen.documents(spark, 300L).toDF().write.parquet(s"$tmp/prev")
+    DocGen.documents(spark, 310L).toDF().write.parquet(s"$tmp/cur")
+    Files.writeString(java.nio.file.Paths.get(s"$tmp/run.properties"),
+      fullConf(s"$tmp/cur", s"$tmp/out") +
+        s"delta.prevDocuments = $tmp/prev\ndelta.prevCore = $tmp/core\n")
+    val cfg = ValidatorConfig.load(s"$tmp/run.properties")
+    fakeCore(50, cfg.schema.constraintHash, "another-check-set")
+      .write.parquet(s"$tmp/core")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.graft.shims.waitForListeners(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val ex = intercept[IllegalArgumentException](ValidatorApp.run(spark, cfg, s"$tmp/out"))
+      assert(ex.getMessage.contains("does not match this config") &&
+        ex.getMessage.contains("another-check-set"), ex.getMessage)
+      org.apache.spark.sql.graft.shims.waitForListeners(spark)
+      assert(jobs.get == 0, s"${jobs.get} Spark jobs ran before the refusal")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("delta lineage gate: two checksHash values across or within files, NULL lineage and missing statistics are refused") {
+    import org.apache.spark.sql.functions._
+    val tmp = Files.createTempDirectory("graft-gate-files").toString
+    val (ch, kh) = ("c0ffee", "k1")
+    def gate(dir: String): Unit = ValidatorApp.coreLineageGate(spark, s"$tmp/$dir", ch, kh)
+    def refused(dir: String): String =
+      intercept[IllegalArgumentException](gate(dir)).getMessage
+
+    fakeCore(40, ch, kh).coalesce(1).write.parquet(s"$tmp/ok")
+    gate("ok")
+    // an empty core (no row groups) carries nothing and passes
+    fakeCore(0, ch, kh).write.parquet(s"$tmp/empty")
+    gate("empty")
+
+    // two files, each internally uniform, one from another check set
+    fakeCore(40, ch, kh).coalesce(1).write.parquet(s"$tmp/two")
+    fakeCore(40, ch, "k2").coalesce(1).write.mode("append").parquet(s"$tmp/two")
+    assert(new java.io.File(s"$tmp/two").listFiles().count(_.getName.endsWith(".parquet")) == 2)
+    assert(refused("two").contains("[k2, k2]"))
+    // both values inside one file's row group
+    fakeCore(40, ch, kh).withColumn("checksHash",
+        when(col("docId") === "doc:7", lit("k2")).otherwise(col("checksHash")))
+      .coalesce(1).write.parquet(s"$tmp/mixed")
+    assert(refused("mixed").contains("[k1, k2]"))
+
+    // NULL lineage: some rows, and all rows
+    fakeCore(40, ch, kh).withColumn("constraintHash",
+        when(col("docId") === "doc:3", lit(null).cast("string")).otherwise(col("constraintHash")))
+      .coalesce(1).write.parquet(s"$tmp/somenull")
+    assert(refused("somenull").contains("1 NULLs"))
+    fakeCore(40, ch, kh).withColumn("checksHash", lit(null).cast("string"))
+      .coalesce(1).write.parquet(s"$tmp/allnull")
+    assert(refused("allnull").contains("[NULL, NULL]"))
+
+    // a row group without statistics cannot be decided: refused, naming the file
+    fakeCore(40, ch, kh).coalesce(1).write
+      .option("parquet.column.statistics.enabled", "false").parquet(s"$tmp/nostats")
+    val file = new java.io.File(s"$tmp/nostats").listFiles()
+      .filter(_.getName.endsWith(".parquet")).head.getName
+    val msg = refused("nostats")
+    assert(msg.contains("without") && msg.contains(file), msg)
   }
 }
