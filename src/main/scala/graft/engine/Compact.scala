@@ -1,7 +1,6 @@
 package graft.engine
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
 /** Output-dir compaction — the Iceberg `rewrite_data_files` +
@@ -95,8 +94,7 @@ object Compact {
     val runNum = ValidatorApp.nextRunId(outDir)
     val runId = s"run=$runNum"
     snapshot
-      .withColumn("bucket", when(col("docId").isNotNull,
-        pmod(xxhash64(col("docId")), lit(cfg.nBuckets)).cast("int")).otherwise(lit(-1)))
+      .withColumn("bucket", Pipeline.violationBucket(cfg.nBuckets))
       .write.mode("overwrite").parquet(s"$outDir/violations/$runId")
 
     // verdicts recomputed over the full corpus (nDocs per bucket comes from

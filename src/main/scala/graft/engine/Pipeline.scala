@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.checks.{CheckContext, Checks, ConstraintCheck, RowLocalCheck}
 import graft.model.SchemaDef
@@ -19,15 +19,26 @@ object Pipeline {
 
   val DefaultBuckets = 64
 
-  /** docs + a `bucket` column. Hashes the CANONICAL (string-cast) form of
-    * doc_id: violation rows and verdicts carry `docId` as a string, so every
-    * bucket derivation in the system must hash the same bytes — a non-string
-    * doc_id hashed in its native type would land in a different bucket than
-    * its own violations (xxhash64 of long ≠ xxhash64 of its decimal string).
+  /** THE bucket key of a doc id: `pmod(xxhash64(id), nBuckets)` over the
+    * CANONICAL (string-cast) form of the id. Violation rows and verdicts
+    * carry `docId` as a string, so every bucket derivation in the system
+    * must hash the same bytes — a non-string doc_id hashed in its native
+    * type would land in a different bucket than its own violations
+    * (xxhash64 of long ≠ xxhash64 of its decimal string). For a string id
+    * the cast is a no-op the optimizer removes.
     */
+  def bucketOf(id: Column, nBuckets: Int): Column =
+    pmod(xxhash64(id.cast("string")), lit(nBuckets)).cast("int")
+
+  /** A violation row's bucket: its doc's, or -1 for dataset-level rows
+    * (docId null).
+    */
+  def violationBucket(nBuckets: Int): Column =
+    when(col("docId").isNotNull, bucketOf(col("docId"), nBuckets)).otherwise(lit(-1))
+
+  /** docs + their `bucket` column ([[bucketOf]] of doc_id). */
   def withBucket(docs: DataFrame, nBuckets: Int = DefaultBuckets): DataFrame =
-    docs.withColumn("bucket",
-      pmod(xxhash64(col("doc_id").cast("string")), lit(nBuckets)).cast("int"))
+    docs.withColumn("bucket", bucketOf(col("doc_id"), nBuckets))
 
   /** Run the given checks; returns the union of violation rows.
     * Dataset-level violations (no docId) come out with docId null.
@@ -280,9 +291,7 @@ object Pipeline {
                    nBuckets: Int = DefaultBuckets,
                    checks: Seq[ConstraintCheck] = Checks.all): DataFrame = {
     val viols = violations
-      .withColumn("bucket",
-        when(col("docId").isNotNull,
-          pmod(xxhash64(col("docId")), lit(nBuckets)).cast("int")).otherwise(lit(-1)))
+      .withColumn("bucket", violationBucket(nBuckets))
 
     val violCounts = viols.groupBy("bucket", "check")
       .agg(count(lit(1)).as("nViolations"))

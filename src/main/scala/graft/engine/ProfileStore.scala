@@ -59,7 +59,7 @@ object ProfileStore {
           (acc, s) => acc + when(s.getField("media_ref").isNotNull, 1L).otherwise(0L)))
         .as("n_media"),
       (if (docs.columns.contains("bucket")) col("bucket").cast("int")
-       else pmod(xxhash64(col("doc_id")), lit(nBuckets)).cast("int")).as("bucket"))
+       else Pipeline.bucketOf(col("doc_id"), nBuckets)).as("bucket"))
 
   /** Rows [[validateTrustedBucket]] compares. */
   private[engine] val TrustedBucketSample = 1000
@@ -79,9 +79,9 @@ object ProfileStore {
   private[engine] def validateTrustedBucket(docs: DataFrame, nBuckets: Int): Unit =
     if (docs.columns.contains("bucket")) {
       val bad = docs.select(col("doc_id"), col("bucket").cast("long").as("b"),
-          pmod(xxhash64(col("doc_id")), lit(nBuckets)).as("want"))
+          Pipeline.bucketOf(col("doc_id"), nBuckets).as("want"))
         .limit(TrustedBucketSample).collect()
-        .filter(r => r.isNullAt(1) || r.getLong(1) != r.getLong(2))
+        .filter(r => r.isNullAt(1) || r.getLong(1) != r.getInt(2))
         .take(3)
       require(bad.isEmpty,
         s"trusted 'bucket' column disagrees with pmod(xxhash64(doc_id), " +
@@ -97,8 +97,7 @@ object ProfileStore {
     * directories (ProfileStoreSpec plan-asserts the pruning).
     */
   def writeBucketPartitioned(docs: DataFrame, nBuckets: Int, path: String): Unit =
-    docs.withColumn("bucket",
-        pmod(xxhash64(col("doc_id")), lit(nBuckets)).cast("int"))
+    Pipeline.withBucket(docs, nBuckets)
       .write.mode("overwrite").partitionBy("bucket").parquet(path)
 
   /** Write this run's profile rows (with snapshot lineage) under
@@ -147,7 +146,7 @@ object ProfileStore {
     val touched = precomputedDiff
       .getOrElse(Pipeline.snapshotDiff(prevDocs, curDocs))
       .filter(col("status") =!= "unchanged")
-      .select(pmod(xxhash64(col("doc_id")), lit(nBuckets)).cast("int").as("bucket"))
+      .select(Pipeline.bucketOf(col("doc_id"), nBuckets).as("bucket"))
       .distinct().collect().map(_.getInt(0)).toSeq
     if (touched.size == nBuckets)
       return writeRun(spark, curDocs, nBuckets, outDir, runNum, snapshotId)
@@ -250,18 +249,6 @@ object ProfileStore {
   def corpusProfile(spark: SparkSession, outDir: String): DataFrame =
     ColumnStats.mergeProfiles(read(spark, outDir).drop("snapshotId"))
 
-  /** [[corpusProfile]] over the MANIFEST-COMMITTED rows ([[readCommitted]])
-    * — the isolation guarantee held at this entry point too (round-8
-    * verdict nit: the listing-based readers saw torn writers). None when
-    * nothing is committed.
-    */
-  def corpusProfileCommitted(spark: SparkSession, m: Manifest,
-                             snapshotId: String, constraintHash: String,
-                             checksHash: String = "",
-                             asOfRun: Long = Long.MaxValue): Option[DataFrame] =
-    readCommitted(spark, m, snapshotId, constraintHash, checksHash, asOfRun)
-      .map(df => ColumnStats.mergeProfiles(df.drop("snapshotId")))
-
   /** Per-BUCKET drift between two runs' stored profiles
     * ([[graft.stats.ProfileDrift.byPart]] over the stored rows): localizes
     * WHICH partition of the corpus moved — the grouped twin of
@@ -272,16 +259,6 @@ object ProfileStore {
     graft.stats.ProfileDrift.byPart(
       read(spark, prevOutDir).drop("snapshotId"),
       read(spark, curOutDir).drop("snapshotId"))
-
-  /** [[driftReportByBucket]] over two MANIFEST-COMMITTED profiles. */
-  def driftReportByBucketCommitted(spark: SparkSession,
-                                   prev: (Manifest, String, String, String),
-                                   cur: (Manifest, String, String, String)): Option[DataFrame] =
-    for {
-      p <- readCommitted(spark, prev._1, prev._2, prev._3, prev._4)
-      c <- readCommitted(spark, cur._1, cur._2, cur._3, cur._4)
-    } yield graft.stats.ProfileDrift.byPart(
-      p.drop("snapshotId"), c.drop("snapshotId"))
 
   /** Snapshot-over-snapshot drift from two STORED profiles (no corpus
     * access): per metric column — exact row/null counts both sides, exact
@@ -294,18 +271,6 @@ object ProfileStore {
                   curOutDir: String): DataFrame =
     driftFromCorpusProfiles(spark, corpusProfile(spark, prevOutDir),
       corpusProfile(spark, curOutDir))
-
-  /** [[driftReport]] over two MANIFEST-COMMITTED profiles (isolation at
-    * every drift entry point, round-8 verdict nit). None when either side
-    * has no committed profile.
-    */
-  def driftReportCommitted(spark: SparkSession,
-                           prev: (Manifest, String, String, String),
-                           cur: (Manifest, String, String, String)): Option[DataFrame] =
-    for {
-      p <- corpusProfileCommitted(spark, prev._1, prev._2, prev._3, prev._4)
-      c <- corpusProfileCommitted(spark, cur._1, cur._2, cur._3, cur._4)
-    } yield driftFromCorpusProfiles(spark, p, c)
 
   private def driftFromCorpusProfiles(spark: SparkSession,
                                       prevProfile: DataFrame,

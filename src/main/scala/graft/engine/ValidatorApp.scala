@@ -53,8 +53,7 @@ object ValidatorApp {
     val winners = spark.read.parquet(s"$outDir/verdicts")
       .groupBy(col("partitionId").as("bucket")).agg(max(col("run")).as("run"))
     val raw = spark.read.parquet(s"$outDir/violations")
-    val derived = when(col("docId").isNotNull,
-      pmod(xxhash64(col("docId")), lit(nBuckets)).cast("int")).otherwise(lit(-1))
+    val derived = Pipeline.violationBucket(nBuckets)
     val bucketed =
       if (raw.columns.contains("bucket"))
         raw.withColumn("bucket", coalesce(col("bucket"), derived))
@@ -72,15 +71,14 @@ object ValidatorApp {
     all.join(broadcast(winners), Seq("partitionId", "run")).drop("run")
   }
 
-  /** SNAPSHOT-ISOLATED violations read (round-3 verdict item 5): the file
-    * set AND the per-bucket winning run are resolved from the MANIFEST, not
-    * from directory listing — an interleaved writer that is mid-write or
-    * crashed before its commit record is invisible, so a concurrent reader
-    * can neither double-count nor see a torn run. This is the Iceberg
-    * snapshot-read shape on the JSONL manifest ([[Manifest.recordFiles]] is
-    * the commit point, appended only after the run's parquet is durable).
-    */
-  /** `asOfRun` (TIME TRAVEL): resolve the snapshot exactly as it stood
+  /** SNAPSHOT-ISOLATED violations read: the file set AND the per-bucket
+    * winning run are resolved from the MANIFEST, not from directory
+    * listing — an interleaved writer that is mid-write or crashed before
+    * its commit record is invisible, so a concurrent reader can neither
+    * double-count nor see a torn run. This is the Iceberg snapshot-read
+    * shape on the JSONL manifest ([[Manifest.recordFiles]] is the commit
+    * point, appended only after the run's parquet is durable).
+    * `asOfRun` (TIME TRAVEL): resolve the snapshot exactly as it stood
     * after that run's manifest commit — later resumes' and compactions'
     * records are ignored, so a reproduction job sees the same rows the
     * original consumer read, even after the directory has moved on.
@@ -89,10 +87,15 @@ object ValidatorApp {
   def readViolationsCommitted(spark: SparkSession, outDir: String, m: Manifest,
                               snapshotId: String, constraintHash: String,
                               checksHash: String = "",
-                              asOfRun: Long = Long.MaxValue): org.apache.spark.sql.DataFrame = {
+                              asOfRun: Long = Long.MaxValue): org.apache.spark.sql.DataFrame =
+    committedViolations(spark, outDir,
+      m.committedSnapshot(snapshotId, constraintHash, checksHash, asOfRun))
+
+  /** The violations of a committed (files, per-bucket winning run) pair. */
+  private def committedViolations(spark: SparkSession, outDir: String,
+                                  committed: (Seq[String], Map[Int, Long])): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
-    val files = m.committedFiles(snapshotId, constraintHash, checksHash, asOfRun)
-    val bucketRuns = m.committedBucketRuns(snapshotId, constraintHash, checksHash, asOfRun)
+    val (files, bucketRuns) = committed
     if (files.isEmpty || bucketRuns.isEmpty)
       // empty but TYPED: direct callers select violation columns, and a
       // zero-column emptyDataFrame would turn "nothing committed yet" into
@@ -111,18 +114,24 @@ object ValidatorApp {
 
   /** The preferred whole-snapshot read: the manifest-committed file set
     * when the manifest carries commit records (isolated from interleaved
-    * writers), else the directory union with last-run-wins.
+    * writers), else the directory union with last-run-wins. One read of
+    * the manifest.
     */
   def readSnapshot(spark: SparkSession, cfg: ValidatorConfig, outDir: String,
                    manifest: Option[Manifest]): org.apache.spark.sql.DataFrame =
     manifest
-      .filter(m => m.committedFiles(cfg.snapshotId,
-          cfg.schema.constraintHash, cfg.checksHash).nonEmpty &&
-        m.committedBucketRuns(cfg.snapshotId,
-          cfg.schema.constraintHash, cfg.checksHash).nonEmpty)
-      .map(m => readViolationsCommitted(spark, outDir, m,
-        cfg.snapshotId, cfg.schema.constraintHash, cfg.checksHash))
+      .map(_.committedSnapshot(cfg.snapshotId, cfg.schema.constraintHash,
+        cfg.checksHash))
+      .filter { case (files, bucketRuns) => files.nonEmpty && bucketRuns.nonEmpty }
+      .map(committedViolations(spark, outDir, _))
       .getOrElse(readViolations(spark, outDir, cfg.nBuckets))
+
+  /** A written run directory's parquet files, sorted: the listing its
+    * commit record names.
+    */
+  private def parquetFiles(dir: String): Seq[String] =
+    scala.util.Using.resource(java.nio.file.Files.list(java.nio.file.Paths.get(dir)))(
+      _.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toSeq.sorted)
 
   /** The ONE run-commit protocol (used by [[run]] and [[Compact.compact]]):
     * append the run's parquet file listing (commit point for snapshot
@@ -133,12 +142,8 @@ object ValidatorApp {
   private[engine] def commitRun(spark: SparkSession, m: Manifest,
                                 cfg: ValidatorConfig, outDir: String,
                                 runNum: Long): Unit = {
-    val dir = java.nio.file.Paths.get(s"$outDir/violations/run=$runNum")
-    val files = scala.util.Using.resource(java.nio.file.Files.list(dir))(
-      _.iterator().asScala.map(_.toString)
-        .filter(_.endsWith(".parquet")).toSeq.sorted)
-    m.recordFiles(cfg.snapshotId, cfg.schema.constraintHash, runNum, files,
-      cfg.checksHash)
+    m.recordFiles(cfg.snapshotId, cfg.schema.constraintHash, runNum,
+      parquetFiles(s"$outDir/violations/run=$runNum"), cfg.checksHash)
     val stats = spark.read.parquet(s"$outDir/verdicts/run=$runNum")
       .filter(col("partitionId") >= 0)
       .groupBy("partitionId")
@@ -240,14 +245,21 @@ object ValidatorApp {
   def run(spark: SparkSession, cfg: ValidatorConfig, outDir: String): Unit = {
     val checks = cfg.configuredChecks
 
+    // a config that cannot run is refused before any side effect (the
+    // run-id reservation, a write, a manifest record)
+    val isDelta = cfg.deltaPrevDocuments.isDefined
+    require(cfg.deltaPrevDocuments.isDefined == cfg.deltaPrevCore.isDefined,
+      "delta.prevDocuments and delta.prevCore must be set together")
+    val hasRowLocal = checks.exists(_.isInstanceOf[graft.checks.RowLocalCheck])
+    require(!isDelta || hasRowLocal, "delta mode needs at least one row-local check")
+    require(cfg.profileEnabled || cfg.driftPrevProfile.isEmpty,
+      "drift.prevProfile needs profile.enabled=true (drift reads stored profiles)")
+
     // INCREMENTAL (delta) mode: the fused span scan covers only docs that
     // changed since delta.prevDocuments, the prior core carries forward.
     // Its lineage gate runs FIRST, from the prior core's footers: a
     // mispointed core is refused before any Spark job (even the corpus
     // read's schema inference) starts.
-    val isDelta = cfg.deltaPrevDocuments.isDefined
-    require(cfg.deltaPrevDocuments.isDefined == cfg.deltaPrevCore.isDefined,
-      "delta.prevDocuments and delta.prevCore must be set together")
     cfg.deltaPrevCore.foreach(
       coreLineageGate(spark, _, cfg.schema.constraintHash, cfg.checksHash))
 
@@ -268,6 +280,10 @@ object ValidatorApp {
     // was in the manifest to filter), so every dataset-level result for this
     // (snapshot, constraintHash) is already durably written by it.
     val isResume = done.nonEmpty
+    // delta mode is mutually exclusive with bucket-resume: resume finishes
+    // an interrupted run of ONE snapshot, delta steps BETWEEN snapshots.
+    require(!(isDelta && isResume),
+      "delta mode cannot combine with a manifest bucket-resume")
     val docs =
       if (!isResume) all
       else Pipeline.resumable(spark, all, manifest.get, cfg.snapshotId,
@@ -307,11 +323,6 @@ object ValidatorApp {
     // refs in remaining buckets can point at docs in completed buckets
     val universe = if (isResume) Some(all) else None
 
-    // delta mode is mutually exclusive with bucket-resume: resume finishes
-    // an interrupted run of ONE snapshot, delta steps BETWEEN snapshots.
-    require(!(isDelta && isResume),
-      "delta mode cannot combine with a manifest bucket-resume")
-    val hasRowLocal = checks.exists(_.isInstanceOf[graft.checks.RowLocalCheck])
     // delta mode's snapshot diff is consumed twice (violation slices AND
     // the profile's touched buckets) — computed once, carried here
     var deltaDiff: Option[org.apache.spark.sql.DataFrame] = None
@@ -321,7 +332,6 @@ object ValidatorApp {
     // the NEXT run can validate incrementally against it
     val (violationsRaw, coreOpt) =
       if (isDelta) {
-        require(hasRowLocal, "delta mode needs at least one row-local check")
         val prev = spark.read.parquet(cfg.deltaPrevDocuments.get)
         // lineage already gated from the footers at the top of run()
         val prevCore = spark.read.parquet(cfg.deltaPrevCore.get).drop(LineageCols: _*)
@@ -354,8 +364,7 @@ object ValidatorApp {
     // the winning run per bucket from the verdicts table and join on this
     // column — no bucket recompute, no window over the violations corpus
     stage("validate_persist") { violations
-      .withColumn("bucket", when(col("docId").isNotNull,
-        pmod(xxhash64(col("docId")), lit(cfg.nBuckets)).cast("int")).otherwise(lit(-1)))
+      .withColumn("bucket", Pipeline.violationBucket(cfg.nBuckets))
       .write.mode("overwrite").parquet(s"$outDir/violations/$runId") }
 
     // persist the row-local core with its lineage so the NEXT snapshot can
@@ -386,10 +395,20 @@ object ValidatorApp {
     stage("manifest_commit") {
       manifest.foreach(m => commitRun(spark, m, cfg, outDir, runNum)) }
 
+    // an artifact's commit: the SAME files-record protocol as the
+    // violations (recordArtifact after the parquet is durable), so
+    // committed readers can't see a torn artifact writer
+    def commitArtifact(kind: String): Unit = manifest.foreach(
+      _.recordArtifact(kind, cfg.snapshotId, cfg.schema.constraintHash,
+        runNum, parquetFiles(s"$outDir/$kind/run=$runNum"), cfg.checksHash))
+
     // per-bucket mergeable profile of the FULL snapshot persisted
     // alongside the run (ProfileStore; north rule's metrics rows) — one
     // extra single-pass scan; drift vs a prior snapshot's stored profile
-    // is then a metadata-cost read, no rescan of either corpus
+    // is then a metadata-cost read, no rescan of either corpus. A RESUME
+    // skips the rewrite: the first (full) run of this snapshot already
+    // wrote the profile, and a resume's extra corpus scan would buy an
+    // identical artifact.
     if (cfg.profileEnabled && !isResume) {
       // delta mode + a prior profile: recompute only the buckets the
       // snapshot diff touched, carry the rest byte-for-byte
@@ -404,27 +423,12 @@ object ValidatorApp {
           ProfileStore.writeRun(spark, all, cfg.nBuckets, outDir, runNum,
             cfg.snapshotId)
       }
-      // the artifact gets the SAME files-record commit protocol as the
-      // violations (recordArtifact after the parquet is durable), so
-      // committed readers can't see a torn profile writer
-      manifest.foreach { m =>
-        val pDir = java.nio.file.Paths.get(s"$outDir/profile/run=$runNum")
-        val pFiles = scala.util.Using.resource(java.nio.file.Files.list(pDir))(
-          _.iterator().asScala.map(_.toString)
-            .filter(_.endsWith(".parquet")).toSeq.sorted)
-        m.recordArtifact("profile", cfg.snapshotId, cfg.schema.constraintHash,
-          runNum, pFiles, cfg.checksHash)
-      }
+      commitArtifact("profile")
       stage("drift") { cfg.driftPrevProfile.foreach { prev =>
         ProfileStore.driftReport(spark, prev, outDir)
           .write.mode("overwrite").parquet(s"$outDir/drift/run=$runNum")
       } }
-    } else if (!cfg.profileEnabled)
-      // a RESUME with profile.enabled skips the rewrite: the first (full)
-      // run of this snapshot already wrote the profile, and a resume's
-      // extra corpus scan would buy an identical artifact
-      require(cfg.driftPrevProfile.isEmpty,
-        "drift.prevProfile needs profile.enabled=true (drift reads stored profiles)")
+    }
 
     // --fix analogue: repair dangling refs into a new snapshot and embed
     // the deleted-triples log in the reports (CheckURIExistence.php:190-211).
@@ -473,14 +477,7 @@ object ValidatorApp {
         .withColumn("snapshotId", lit(cfg.snapshotId))
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$outDir/metrics/run=$runNum")
-      manifest.foreach { m =>
-        val dir = java.nio.file.Paths.get(s"$outDir/metrics/run=$runNum")
-        val files = scala.util.Using.resource(java.nio.file.Files.list(dir))(
-          _.iterator().asScala.map(_.toString)
-            .filter(_.endsWith(".parquet")).toSeq.sorted)
-        m.recordArtifact("metrics", cfg.snapshotId, cfg.schema.constraintHash,
-          runNum, files, cfg.checksHash)
-      }
+      commitArtifact("metrics")
     }
     violationsRaw.unpersist()
     coreOpt.foreach(_.unpersist())

@@ -52,7 +52,7 @@ class PipelineDeltaSpec extends SparkTestBase {
     assert(diff("unchanged") == N - removed - changed, diff.toString)
   }
 
-  test("snapshotDiff: NULL spans digest to a sentinel — presence comes from the join") {
+  test("snapshotDiff: NULL spans digest to NULL — presence comes from the per-side counts") {
     // doc 13: spans NULL in BOTH snapshots → unchanged (not "added");
     // doc 11: spans non-null → NULL → changed (not "removed")
     val prevN = prevDocs.withColumn("spans",

@@ -355,4 +355,23 @@ class ProfileStoreSpec extends SparkTestBase {
     }
     assert(e.getMessage.contains("profile.enabled"))
   }
+
+  test("a long doc_id corpus: the profile's buckets are the verdicts' buckets") {
+    val tmp = Files.createTempDirectory("graft-profile-long").toString
+    val docs = DocGen.documents(spark, 600L).toDF()
+      .withColumn("doc_id", substring(col("doc_id"), 5, 12).cast("long"))
+    ProfileStore.writeRun(spark, docs, 8, tmp, 1L, "snap-long")
+    val profiled = ProfileStore.read(spark, tmp).filter(col("column") === "doc_id")
+      .select(col("part").cast("int"), col("n")).collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val verdicts = Pipeline.verdictsFrom(spark,
+        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+          ValidatorApp.violationsSchema),
+        docs, DocGen.schema, "snap-long", 8, Seq(graft.checks.CheckDomain))
+      .filter(col("partitionId") >= 0)
+      .select(col("partitionId"), col("nDocs")).collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    assert(verdicts.values.sum == 600L)
+    assert(profiled == verdicts)
+  }
 }

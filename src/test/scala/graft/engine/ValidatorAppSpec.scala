@@ -427,4 +427,34 @@ class ValidatorAppSpec extends SparkTestBase {
     val msg = refused("nostats")
     assert(msg.contains("without") && msg.contains(file), msg)
   }
+
+  test("a refused config leaves no run= directory and no manifest record") {
+    val tmp = Files.createTempDirectory("graft-refuse").toString
+    DocGen.documents(spark, 300L).toDF().write.mode("overwrite").parquet(s"$tmp/docs")
+    val cfg = ValidatorConfig(
+      documentsPath = s"$tmp/docs", snapshotId = "snap-refuse",
+      checkKeys = Seq("datatype"), schema = DocGen.schema, xmlOut = None,
+      jsonOut = None, manifestPath = Some(s"$tmp/o1/manifest.jsonl"), nBuckets = 8)
+    ValidatorApp.run(spark, cfg, s"$tmp/o1")   // a full run: its manifest and core
+    val manifest = java.nio.file.Paths.get(s"$tmp/o1/manifest.jsonl")
+    val recorded = Files.readAllLines(manifest)
+    val core = new java.io.File(s"$tmp/o1/core").listFiles()
+      .filter(_.getName.startsWith("run="))(0).getAbsolutePath
+    val delta = cfg.copy(deltaPrevDocuments = Some(s"$tmp/docs"), deltaPrevCore = Some(core))
+    val refused = Seq(
+      // delta over a key the manifest already records complete: a resume
+      "o2" -> (delta, "bucket-resume"),
+      "o3" -> (delta.copy(checkKeys = Seq("kinds-defined"),
+        manifestPath = Some(s"$tmp/o3/manifest.jsonl")), "row-local"),
+      "o4" -> (cfg.copy(driftPrevProfile = Some(s"$tmp/o1"),
+        manifestPath = Some(s"$tmp/o4/manifest.jsonl")), "profile.enabled"))
+    for ((out, (c, why)) <- refused) {
+      val e = intercept[IllegalArgumentException](ValidatorApp.run(spark, c, s"$tmp/$out"))
+      assert(e.getMessage.contains(why), s"$out: ${e.getMessage}")
+      val runs = Option(new java.io.File(s"$tmp/$out/violations").listFiles()).toSeq.flatten
+      assert(runs.isEmpty, s"$out left ${runs.map(_.getName)}")
+      assert(!Files.exists(java.nio.file.Paths.get(s"$tmp/$out/manifest.jsonl")), out)
+    }
+    assert(Files.readAllLines(manifest) == recorded)
+  }
 }
