@@ -37,6 +37,10 @@ import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
   *     run directory with `mode("overwrite")` (new part-file names, the
   *     earlier attempt's files deleted) and records again, so only the
   *     latest record lists files that exist.
+  *   - Run-less records: a negative `run` (what writers without a run id
+  *     wrote, as -1) reads as no `run` field. Such a completion record
+  *     still marks its bucket complete for resume, but it commits no run:
+  *     it is never a bucket's winning run.
   *   - Torn lines: a line cut short (its JSON ends before the record
   *     closes) is an append a writer died in; it was never committed, so
   *     it is ignored — as the final line, and also once a later append has
@@ -91,18 +95,12 @@ final class Manifest(path: String) {
     keyed(snapshotId, constraintHash, checksHash)
       .filter(_.tpe.isEmpty).flatMap(_.bucket).toSet
 
-  def recordCompleted(snapshotId: String, constraintHash: String,
-                      bucket: Int, nDocs: Long, nViolations: Long,
-                      checksHash: String = "", run: Long = -1L): Unit =
-    recordRun(snapshotId, constraintHash, Seq((bucket, nDocs, nViolations)),
-      checksHash, run)
-
-  /** Record every bucket of a finished verdict set as complete, in one
-    * append.
+  /** Record every bucket of run `run`'s finished verdict set as complete,
+    * in one append: `bucketStats` is (bucket, nDocs, nViolations).
     */
-  def recordRun(snapshotId: String, constraintHash: String,
+  def recordRun(snapshotId: String, constraintHash: String, run: Long,
                 bucketStats: Seq[(Int, Long, Long)],
-                checksHash: String = "", run: Long = -1L): Unit = {
+                checksHash: String = ""): Unit = {
     val ts = java.time.Instant.now().toString
     append(bucketStats.map { case (b, d, v) =>
       line(key(snapshotId, constraintHash, checksHash) ++ Seq("bucket" -> b,
@@ -266,7 +264,7 @@ object Manifest {
       v.longValue }
     def req(f: String) = str(f).getOrElse(throw new IllegalArgumentException(s"no $f"))
     Record(str("type"), str("kind"), req("snapshotId"), req("constraintHash"),
-      str("checksHash").getOrElse(""), num("bucket").map(_.toInt), num("run"),
+      str("checksHash").getOrElse(""), num("bucket").map(_.toInt), num("run").filter(_ >= 0),
       opt("files").toSeq.flatMap { v =>
         require(v.isArray, "files is not an array")
         (0 until v.size).map { i =>

@@ -249,17 +249,6 @@ object ProfileStore {
   def corpusProfile(spark: SparkSession, outDir: String): DataFrame =
     ColumnStats.mergeProfiles(read(spark, outDir).drop("snapshotId"))
 
-  /** Per-BUCKET drift between two runs' stored profiles
-    * ([[graft.stats.ProfileDrift.byPart]] over the stored rows): localizes
-    * WHICH partition of the corpus moved — the grouped twin of
-    * [[driftReport]], same zero-rescan cost.
-    */
-  def driftReportByBucket(spark: SparkSession, prevOutDir: String,
-                          curOutDir: String): DataFrame =
-    graft.stats.ProfileDrift.byPart(
-      read(spark, prevOutDir).drop("snapshotId"),
-      read(spark, curOutDir).drop("snapshotId"))
-
   /** Snapshot-over-snapshot drift from two STORED profiles (no corpus
     * access): per metric column — exact row/null counts both sides, exact
     * null-rate shift (quantized at 1e6, [[ColumnStats.profileDiff]]'s
@@ -268,19 +257,14 @@ object ProfileStore {
     * frame.
     */
   def driftReport(spark: SparkSession, prevOutDir: String,
-                  curOutDir: String): DataFrame =
-    driftFromCorpusProfiles(spark, corpusProfile(spark, prevOutDir),
-      corpusProfile(spark, curOutDir))
-
-  private def driftFromCorpusProfiles(spark: SparkSession,
-                                      prevProfile: DataFrame,
-                                      curProfile: DataFrame): DataFrame = {
-    def side(df: DataFrame): Map[String, (Long, Long, Long, Array[Byte])] =
-      df.select("column", "n", "nulls", "distinct_est", "kll").collect()
+                  curOutDir: String): DataFrame = {
+    def side(outDir: String): Map[String, (Long, Long, Long, Array[Byte])] =
+      corpusProfile(spark, outDir)
+        .select("column", "n", "nulls", "distinct_est", "kll").collect()
         .map(r => r.getString(0) ->
           ((r.getLong(1), r.getLong(2), r.getLong(3), r.getAs[Array[Byte]](4))))
         .toMap
-    val (a, b) = (side(prevProfile), side(curProfile))
+    val (a, b) = (side(prevOutDir), side(curOutDir))
     def nullRate(n: Long, nulls: Long): Double =
       if (n + nulls > 0) nulls.toDouble / (n + nulls) else 0.0
     val out = MetricCols.flatMap { c =>

@@ -150,8 +150,8 @@ object ValidatorApp {
       .agg(max("nDocs").as("d"), sum("nViolations").as("v"))
       .collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-    m.recordRun(cfg.snapshotId, cfg.schema.constraintHash, stats.toSeq,
-      cfg.checksHash, runNum)
+    m.recordRun(cfg.snapshotId, cfg.schema.constraintHash, runNum, stats.toSeq,
+      cfg.checksHash)
   }
 
   /** Strictly-increasing run timestamps: two runs into one outDir within

@@ -42,16 +42,12 @@ object Decontamination {
     sharedGramEvents(corpus, benchmark, n, id, text, broadcastBenchmark)
       .groupBy(col(id)).agg(count(lit(1)).as("n_shared"))
 
-  /** The event-level core both the batch operator and its streaming twin
-    * ([[graft.streaming.StreamingValidator.contaminationEventStream]])
-    * derive from — ONE body, so gram normalization or join-shape changes
-    * cannot silently diverge them: `(id, g)` for every distinct n-gram a
-    * corpus doc shares with the benchmark set. Stateless (no aggregation),
-    * which is what makes the streaming use append-legal.
+  /** The event-level core of [[contaminated]]: `(id, g)` for every
+    * distinct n-gram a corpus doc shares with the benchmark set.
     */
-  def sharedGramEvents(corpus: DataFrame, benchmark: DataFrame, n: Int = 13,
-                       id: String = "doc_id", text: String = "text",
-                       broadcastBenchmark: Boolean = true): DataFrame = {
+  private def sharedGramEvents(corpus: DataFrame, benchmark: DataFrame, n: Int,
+                               id: String, text: String,
+                               broadcastBenchmark: Boolean): DataFrame = {
     val cg = corpus.select(col(id), explode(ngrams(col(text), n)).as("g"))
     val bg = benchmark.select(explode(ngrams(col(text), n)).as("g")).distinct()
     cg.join(if (broadcastBenchmark) broadcast(bg) else bg, Seq("g"))

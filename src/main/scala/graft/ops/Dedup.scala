@@ -47,9 +47,7 @@ object Dedup {
 
   /** Corpus with canonical-fingerprint duplicates removed — keeps the
     * minimum id per [[TextAnalysis.fingerprint]], so case/whitespace
-    * variants collapse into one kept row. The batch twin of
-    * [[graft.streaming.StreamingValidator.fingerprintDedupStream]] (parity
-    * asserted in StreamingValidatorSpec on an id-ordered fixture).
+    * variants collapse into one kept row.
     */
   def fingerprintDedup(df: DataFrame, id: String = "doc_id", text: String = "text"): DataFrame =
     dedupBy(df, TextAnalysis.fingerprint(col(text)), id)
@@ -95,16 +93,13 @@ object Dedup {
       .agg(min(col(id)).as("keep_id"))
 
   /** Incremental [[fingerprintDedup]]: sign ONLY `newDocs` and join the
-    * stored directory — the batch twin of
-    * [[graft.streaming.StreamingValidator.fingerprintDedupStream]]'s
-    * first-arrival-wins contract. Returns `(kept, directoryDelta)`:
+    * stored directory, first arrival wins. Returns `(kept, directoryDelta)`:
     *
     *  - `kept`: new docs winning min-id among the new docs sharing their
     *    fingerprint (one window over the DELTA only) whose fingerprint is
     *    absent from the directory (anti-join, hash-partitioned on fp) —
     *    FIRST-SEEN-WINS: a new doc duplicating prior-snapshot content
-    *    drops even if its id is smaller than the stored keeper, exactly
-    *    like the streaming twin;
+    *    drops even if its id is smaller than the stored keeper;
     *  - `directoryDelta`: the kept docs' `(fp, keep_id)` rows — append
     *    them to the directory for the next increment.
     *

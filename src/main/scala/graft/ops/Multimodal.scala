@@ -220,13 +220,6 @@ object Multimodal {
     payload.substr(start.cast("int"), lit(frameBytes))
   }
 
-  /** Feature-extract stub: fixed-width float vector from the payload —
-    * the embedding-shaped output a real feature extractor would produce.
-    */
-  def extractFeatures(payload: Column, dims: Int = 8): Column =
-    transform(sequence(lit(0), lit(dims - 1)), i =>
-      (pmod(xxhash64(payload, i), lit(1000L)).cast("float") / 1000.0f))
-
   /** Partition media by type + size band — the layout a 100 TB media lake
     * wants (decode cost is type- and size-correlated, so batches stay
     * homogeneous).

@@ -89,8 +89,7 @@ object QualityClassifier {
       .withColumn("pred", col("score") > 0)
 
   /** A trained model as a driver-side map — bounded by D rows (64 by
-    * default), the one legal collect in this family; feeds [[scoreLocal]]
-    * and the streaming scorer.
+    * default), the one legal collect in this family; feeds [[scoreLocal]].
     */
   def modelToMap(model: DataFrame): Map[Long, Long] =
     model.select(col("bucket"), col("weight")).collect()

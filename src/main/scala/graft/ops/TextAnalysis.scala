@@ -468,10 +468,4 @@ object TextAnalysis {
     * Identical in Spark and DuckDB — used as the dedup oracle key.
     */
   def fingerprint(text: Column): Column = md5(canonicalText(text))
-
-  /** 64-bit rolling-hash fingerprint (content-defined): xxhash64 of the
-    * canonical form — cheaper than md5 when cross-engine parity isn't
-    * needed.
-    */
-  def fingerprint64(text: Column): Column = xxhash64(canonicalText(text))
 }

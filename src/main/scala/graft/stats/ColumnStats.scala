@@ -205,15 +205,12 @@ object ColumnStats {
     meltProfile(wide, statCols)
   }
 
-  /** The per-column channel list behind [[mergeableProfile]] — SHARED with
-    * the streaming twin
-    * ([[graft.streaming.StreamingValidator.mergeableProfileStream]]) so
-    * the two sides cannot fork. Every channel is a streaming-legal
-    * aggregate (count / typed min / max / sum / HLL / KLL / theta /
-    * frequent-items sketch).
+  /** The per-column channel list behind [[mergeableProfile]]: count /
+    * typed min / max / sum / HLL / KLL / theta / frequent-items sketch,
+    * every one a mergeable aggregate.
     */
-  def profileChannels(df: DataFrame, statCols: Seq[String],
-                      lgK: Int = 12): Seq[Column] = {
+  private def profileChannels(df: DataFrame, statCols: Seq[String],
+                              lgK: Int): Seq[Column] = {
     import org.apache.spark.sql.types._
     statCols.map(n => df.schema(n)).flatMap { f =>
       val c = col(f.name)
@@ -255,12 +252,9 @@ object ColumnStats {
   }
 
   /** Melt one WIDE [[profileChannels]] row per part into the long
-    * (part, column, channels…) form [[mergeProfiles]] consumes. Batch-side
-    * only — the streaming twin SINKS wide rows and melts them at read
-    * time (melting is a per-column union the streaming planner would
-    * re-execute per branch).
+    * (part, column, channels…) form [[mergeProfiles]] consumes.
     */
-  def meltProfile(wide: DataFrame, statCols: Seq[String]): DataFrame =
+  private def meltProfile(wide: DataFrame, statCols: Seq[String]): DataFrame =
     statCols.map { n =>
       wide.select(col("part"), lit(n).as("column"),
         col(s"${n}__n").as("n"), col(s"${n}__nulls").as("nulls"),
@@ -459,8 +453,7 @@ object DriftStats {
     * baseline, plus the exact merged n/min/max. Both inputs are
     * (source, kll) frames; the join is group-count-sized (broadcast). A
     * source present on only one side surfaces with a NULL partner and
-    * ks = 1.0 — a brand-new or vanished source IS the alarm condition,
-    * matching the streaming monitor's missing-reference sentinel.
+    * ks = 1.0 — a brand-new or vanished source IS the alarm condition.
     */
   def driftBySource(current: DataFrame, baselines: DataFrame,
                     source: String = "source",

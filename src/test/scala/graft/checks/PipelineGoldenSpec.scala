@@ -206,7 +206,7 @@ class PipelineGoldenSpec extends SparkTestBase {
     val allBuckets = docs.select("bucket").distinct().collect().map(_.getInt(0))
     // record half the buckets complete
     val done = allBuckets.sorted.take(4)
-    done.foreach(b => m.recordCompleted("snap-2", schema.constraintHash, b, 10, 0))
+    m.recordRun("snap-2", schema.constraintHash, 1L, done.map(b => (b, 10L, 0L)).toSeq)
     val remaining = Pipeline.resumable(spark, docs.drop("bucket"), m, "snap-2", schema, 8)
     val remBuckets = Pipeline.withBucket(remaining, 8)
       .select("bucket").distinct().collect().map(_.getInt(0)).toSet

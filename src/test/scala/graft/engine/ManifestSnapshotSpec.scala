@@ -69,6 +69,37 @@ class ManifestSnapshotSpec extends SparkTestBase {
       "snap-other", cfg.schema.constraintHash, cfg.checksHash).isEmpty)
   }
 
+  test("a run-less completion record is never a winning run: the committed run keeps every row") {
+    import scala.jdk.CollectionConverters._
+    val session = spark
+    import session.implicits._
+    val tmp = Files.createTempDirectory("graft-runless")
+    val (snap, cHash, kHash) = ("snap-rl", "c0ffee01", "k1")
+    // run 100: rows in buckets 0 and 1, and a dataset-level row (bucket -1)
+    val runDir = tmp.resolve("out/violations/run=100")
+    Seq(("CHECK-A", "doc:1", 0), ("CHECK-A", "doc:2", 1), ("CHECK-DS", "", -1))
+      .toDF("checkId", "docId", "bucket").write.parquet(runDir.toString)
+    val files = scala.util.Using.resource(Files.list(runDir))(
+      _.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toSeq.sorted)
+    val path = tmp.resolve("manifest.jsonl")
+    val m = new Manifest(path.toString)
+    m.recordFiles(snap, cHash, 100L, files, kHash)
+    m.recordRun(snap, cHash, 100L, Seq((0, 1L, 1L), (1, 1L, 1L)), kHash)
+    // a completion record for another bucket, appended by a writer with no
+    // run id (it wrote run -1)
+    Files.write(path, (s"""{"snapshotId":"$snap","constraintHash":"$cHash",""" +
+      s""""checksHash":"$kHash","bucket":2,"run":-1,"nDocs":1,"nViolations":0,""" +
+      s""""completedAt":"2026-01-01T00:00:00Z"}\n""").getBytes("UTF-8"),
+      java.nio.file.StandardOpenOption.APPEND)
+
+    val got = ValidatorApp.readViolationsCommitted(spark, s"$tmp/out", m, snap, cHash, kHash)
+      .select("checkId", "docId").as[(String, String)].collect().toSet
+    assert(got == Set(("CHECK-A", "doc:1"), ("CHECK-A", "doc:2"), ("CHECK-DS", "")))
+    // bucket 2 is complete for resume, but no run committed it
+    assert(m.completedBuckets(snap, cHash, kHash) == Set(0, 1, 2))
+    assert(m.committedBucketRuns(snap, cHash, kHash) == Map(0 -> 100L, 1 -> 100L))
+  }
+
   test("time travel: asOfRun resolves the snapshot as of an earlier commit; history lists travel points") {
     import org.apache.spark.sql.functions._
     import scala.jdk.CollectionConverters._
@@ -104,8 +135,8 @@ class ManifestSnapshotSpec extends SparkTestBase {
       _.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toSeq.sorted)
     m.recordFiles("snap-tt", cHash, runB, files, kHash)
     val buckets = m.committedBucketRuns("snap-tt", cHash, kHash).keySet
-    m.recordRun("snap-tt", cHash,
-      buckets.toSeq.map(b => (b, 1L, 1L)), kHash, runB)
+    m.recordRun("snap-tt", cHash, runB,
+      buckets.toSeq.map(b => (b, 1L, 1L)), kHash)
 
     assert(m.committedRuns("snap-tt", cHash, kHash) == Seq(runA, runB))
     // latest: every doc-level bucket won by run B; dataset-level rows

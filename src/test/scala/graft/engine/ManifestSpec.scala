@@ -31,7 +31,9 @@ class ManifestSpec extends AnyFunSuite {
 
   test("compatibility fixture: every query answers as the previous reader did") {
     val m = new Manifest(compatCopy().toString)
-    // answers recorded from the previous (line-scrape) reader over this file
+    // answers recorded from the previous (line-scrape) reader over this
+    // file, except bucket 3: its completion record has run -1 (no run id),
+    // so it is complete for resume but never a committed winning run
     assert(m.completedBuckets(a, c, k) == Set(0, 1, 2, 3))
     assert(m.completedBuckets(a, c, "") == Set(0, 1)) // legacy records, no checksHash
     assert(m.completedBuckets(b, c, k) == Set(5))
@@ -42,7 +44,7 @@ class ManifestSpec extends AnyFunSuite {
     assert(m.committedRuns(a, c, k) == Seq(100L, 200L))
     assert(m.committedRuns(b, c, k) == Seq(400L))
     assert(m.committedBucketRuns(a, c, k) ==
-      Map(0 -> 100L, 1 -> 100L, 2 -> 200L, 3 -> -1L))
+      Map(0 -> 100L, 1 -> 100L, 2 -> 200L))
     assert(m.committedBucketRuns(b, c, k) == Map(5 -> 400L))
     assert(m.committedArtifacts("profile", a, c, k) ==
       Map(200L -> Seq(art("profile", 200), art("profile", 200, 1)),
@@ -63,16 +65,16 @@ class ManifestSpec extends AnyFunSuite {
     assert(m.committedFiles(a, c, k, asOfRun = 99L).isEmpty)
     assert(m.committedFiles(a, c, k, asOfRun = 100L) == Seq(v(100), v(100, 1)))
     assert(m.committedFiles(a, c, k, asOfRun = 200L) == Seq(v(100), v(100, 1), v(200)))
-    assert(m.committedBucketRuns(a, c, k, asOfRun = 99L) == Map(3 -> -1L))
+    assert(m.committedBucketRuns(a, c, k, asOfRun = 99L).isEmpty)
     assert(m.committedBucketRuns(a, c, k, asOfRun = 100L) ==
-      Map(0 -> 100L, 1 -> 100L, 2 -> 100L, 3 -> -1L))
+      Map(0 -> 100L, 1 -> 100L, 2 -> 100L))
     assert(m.committedBucketRuns(a, c, k, asOfRun = 200L) ==
-      Map(0 -> 100L, 1 -> 100L, 2 -> 200L, 3 -> -1L))
+      Map(0 -> 100L, 1 -> 100L, 2 -> 200L))
     assert(m.committedArtifacts("profile", a, c, k, asOfRun = 100L).isEmpty)
     assert(m.committedArtifacts("profile", a, c, k, asOfRun = 200L) ==
       Map(200L -> Seq(art("profile", 200), art("profile", 200, 1))))
     assert(m.committedSnapshot(a, c, k, asOfRun = 100L) ==
-      (Seq(v(100), v(100, 1)), Map(0 -> 100L, 1 -> 100L, 2 -> 100L, 3 -> -1L)))
+      (Seq(v(100), v(100, 1)), Map(0 -> 100L, 1 -> 100L, 2 -> 100L)))
   }
 
   test("compatibility fixture: retiring keeps every other line byte-for-byte") {
@@ -89,9 +91,9 @@ class ManifestSpec extends AnyFunSuite {
     val p = tempManifest()
     val m = new Manifest(p.toString)
     m.recordFiles(a, c, 100L, Seq(v(100), v(100, 1)), k)
-    m.recordRun(a, c, Seq((0, 10L, 1L), (1, 12L, 0L), (2, 9L, 3L)), k, 100L)
+    m.recordRun(a, c, 100L, Seq((0, 10L, 1L), (1, 12L, 0L), (2, 9L, 3L)), k)
     m.recordArtifact("metrics", a, c, 100L, Seq(art("metrics", 100)), k)
-    m.recordCompleted(a, c, 3, 7L, 0L, k)
+    m.recordRun(a, c, -1L, Seq((3, 7L, 0L)), k) // the fixture's run-less record
     def noTs(l: String) = l.replaceAll("\"completedAt\":\"[^\"]*\"", "\"completedAt\":\"T\"")
     val want = Seq(2, 3, 4, 5, 6, 12).map(i => noTs(fixture(i)))
     assert(lines(p).map(noTs) == want)
@@ -103,7 +105,7 @@ class ManifestSpec extends AnyFunSuite {
     val f1 = "/out dir/a\"b\\c,d]e{f}/part-0.parquet"
     val f2 = "/out,dir]/part-1.parquet"
     m.recordFiles(odd, c, 7L, Seq(f1, f2), k)
-    m.recordRun(odd, c, Seq((3, 5L, 1L)), k, 7L)
+    m.recordRun(odd, c, 7L, Seq((3, 5L, 1L)), k)
     m.recordArtifact("pro]file,\"x\"", odd, c, 7L, Seq(f2, f1), k)
     assert(m.committedFiles(odd, c, k) == Seq(f1, f2))
     assert(m.committedSnapshot(odd, c, k) == (Seq(f1, f2), Map(3 -> 7L)))
@@ -119,12 +121,12 @@ class ManifestSpec extends AnyFunSuite {
   test("a completion record torn after \"bucket\":1 is not complete; an append after it reads correctly") {
     val p = tempManifest()
     val m = new Manifest(p.toString)
-    m.recordRun(a, c, Seq((0, 3L, 0L)), k, 10L)
+    m.recordRun(a, c, 10L, Seq((0, 3L, 0L)), k)
     Files.write(p, s"""{"snapshotId":"$a","constraintHash":"$c","checksHash":"$k","bucket":1"""
       .getBytes(UTF_8), StandardOpenOption.APPEND)
     assert(m.completedBuckets(a, c, k) == Set(0))
     assert(m.committedBucketRuns(a, c, k) == Map(0 -> 10L))
-    m.recordRun(a, c, Seq((2, 3L, 0L)), k, 10L)
+    m.recordRun(a, c, 10L, Seq((2, 3L, 0L)), k)
     assert(m.completedBuckets(a, c, k) == Set(0, 2))
     m.recordFiles(a, c, 10L, Seq(v(10)), k)
     assert(m.committedFiles(a, c, k) == Seq(v(10)))
@@ -149,10 +151,10 @@ class ManifestSpec extends AnyFunSuite {
   test("a malformed line that is not the last fails, naming its line number; a malformed last line is torn") {
     val p = tempManifest()
     val m = new Manifest(p.toString)
-    m.recordRun(a, c, Seq((0, 3L, 0L)), k, 10L)
+    m.recordRun(a, c, 10L, Seq((0, 3L, 0L)), k)
     Files.write(p, "not a record\n".getBytes(UTF_8), StandardOpenOption.APPEND)
     assert(m.completedBuckets(a, c, k) == Set(0))
-    m.recordRun(a, c, Seq((1, 3L, 0L)), k, 10L)
+    m.recordRun(a, c, 10L, Seq((1, 3L, 0L)), k)
     val e = intercept[IllegalStateException](m.completedBuckets(a, c, k))
     assert(e.getMessage.contains("line 2"), e.getMessage)
     // a record missing its key is malformed too

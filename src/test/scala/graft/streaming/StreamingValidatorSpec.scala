@@ -4,7 +4,6 @@ import graft.SparkTestBase
 import graft.datagen.DocGen
 import graft.model.{Document, Span}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 
 class StreamingValidatorSpec extends SparkTestBase {
 
@@ -64,755 +63,6 @@ class StreamingValidatorSpec extends SparkTestBase {
       assert(m100.length == 1 && m100(0).getString(3) == "txt:count")
       assert(!rows.exists(r => r.getString(0).startsWith("DATATYPE") &&
         r.getString(3) == "txt:flag"))
-    } finally q.stop()
-  }
-
-  test("stream-static referential check: dangling ref against a static universe") {
-    val session = spark
-    import session.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[Document]
-    val universe = Seq("doc:known").toDF("doc_id")
-
-    val out = StreamingValidator.danglingRefStream(spark, stream.toDF(), universe)
-    val q = out.writeStream.format("memory").queryName("sv_refs")
-      .outputMode("append").start()
-    try {
-      stream.addData(
-        Document("doc:x", Seq(Span("med:link", null, "doc:known", 0))),
-        Document("doc:y", Seq(Span("med:link", null, "doc:GONE", 0))))
-      q.processAllAvailable()
-      val rows = spark.table("sv_refs").collect()
-      assert(rows.length == 1)
-      assert(rows(0).getAs[String]("docId") == "doc:y" &&
-        rows(0).getAs[String]("value") == "doc:GONE")
-    } finally q.stop()
-  }
-
-  test("windowed violation counts with watermark") {
-    val session = spark
-    import session.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[(java.sql.Timestamp, String)]
-    val viols = stream.toDF().toDF("ts", "checkId")
-
-    val out = StreamingValidator.windowedViolationCounts(viols, "ts", "1 minute", "1 minute")
-    val q = out.writeStream.format("memory").queryName("sv_win")
-      .outputMode("complete").start()
-    try {
-      stream.addData(
-        (java.sql.Timestamp.valueOf("2026-01-01 10:00:10"), "C1"),
-        (java.sql.Timestamp.valueOf("2026-01-01 10:00:40"), "C1"),
-        (java.sql.Timestamp.valueOf("2026-01-01 10:01:10"), "C1"))
-      q.processAllAvailable()
-      val rows = spark.table("sv_win").collect()
-      val counts = rows.map(r => r.getAs[Long]("nViolations")).sorted.toSeq
-      assert(counts == Seq(1L, 2L))
-    } finally q.stop()
-  }
-
-  test("streaming exact-dedup: first arrival kept, watermark-bounded state") {
-    val session = spark
-    import session.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[(java.sql.Timestamp, Long, String)]
-    val docs = stream.toDF().toDF("ts", "doc_id", "text")
-
-    val out = StreamingValidator.dedupStream(docs, "text", "ts", "10 minutes")
-    val q = out.writeStream.format("memory").queryName("sv_dedup")
-      .outputMode("append").start()
-    try {
-      stream.addData(
-        (java.sql.Timestamp.valueOf("2026-01-01 10:00:00"), 1L, "same text"),
-        (java.sql.Timestamp.valueOf("2026-01-01 10:00:05"), 2L, "same text"),
-        (java.sql.Timestamp.valueOf("2026-01-01 10:00:10"), 3L, "other text"))
-      q.processAllAvailable()
-      // duplicate arriving in a LATER batch, still within the watermark
-      stream.addData(
-        (java.sql.Timestamp.valueOf("2026-01-01 10:01:00"), 4L, "same text"))
-      q.processAllAvailable()
-      val ids = spark.table("sv_dedup").collect().map(_.getAs[Long]("doc_id")).sorted.toSeq
-      assert(ids == Seq(1L, 3L), s"got $ids")
-    } finally q.stop()
-  }
-
-  test("streaming fingerprint dedup ≡ batch fingerprintDedup on an id-ordered fixture") {
-    val session = spark
-    import session.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // canonical-form collisions (case/whitespace variants), split across
-    // TWO micro-batches; arrival order = id order, so the stream's
-    // first-arrival winner is the batch side's min-id winner
-    val fixture = Seq(
-      (java.sql.Timestamp.valueOf("2026-01-01 10:00:00"), 1L, "The Quick Fox"),
-      (java.sql.Timestamp.valueOf("2026-01-01 10:00:01"), 2L, "the   quick fox "),
-      (java.sql.Timestamp.valueOf("2026-01-01 10:00:02"), 3L, "something else"),
-      (java.sql.Timestamp.valueOf("2026-01-01 10:00:03"), 4L, "THE QUICK FOX"),
-      (java.sql.Timestamp.valueOf("2026-01-01 10:00:04"), 5L, "Something\tELSE"),
-      (java.sql.Timestamp.valueOf("2026-01-01 10:00:05"), 6L, "unique"))
-    val stream = MemoryStream[(java.sql.Timestamp, Long, String)]
-    val docs = stream.toDF().toDF("ts", "doc_id", "text")
-    val out = StreamingValidator.fingerprintDedupStream(docs, "text", "ts", "10 minutes")
-    val q = out.writeStream.format("memory").queryName("sv_fp_dedup")
-      .outputMode("append").start()
-    try {
-      stream.addData(fixture.take(3))
-      q.processAllAvailable()
-      stream.addData(fixture.drop(3))
-      q.processAllAvailable()
-      val streamIds = spark.table("sv_fp_dedup")
-        .collect().map(_.getAs[Long]("doc_id")).sorted.toSeq
-      val batchIds = graft.ops.Dedup.fingerprintDedup(
-          fixture.toDF("ts", "doc_id", "text"))
-        .collect().map(_.getAs[Long]("doc_id")).sorted.toSeq
-      assert(streamIds == batchIds, s"stream $streamIds != batch $batchIds")
-      assert(streamIds == Seq(1L, 3L, 6L), s"got $streamIds")
-      // and the raw-md5 stream twin agrees with batch exactDedup (no
-      // canonicalization: every case variant survives)
-      val exactBatch = graft.ops.Dedup.exactDedup(fixture.toDF("ts", "doc_id", "text"))
-        .collect().map(_.getAs[Long]("doc_id")).sorted.toSeq
-      assert(exactBatch == Seq(1L, 2L, 3L, 4L, 5L, 6L), s"got $exactBatch")
-    } finally q.stop()
-  }
-
-  test("curateStream: batch≡stream kept-set parity through the composed front door") {
-    val session = spark
-    import session.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // code-point-constructed fixture chars (raw literals are one
-    // editor-save away from silent recomposition)
-    val comb = new String(Character.toChars(0x0301)) // combining acute
-    val ctrl = new String(Character.toChars(0x0008)) // backspace
-    def ts(s: Int) = new java.sql.Timestamp(1767261600000L + s * 1000L)
-    val fixture = Seq(
-      // 1 and 2 are byte-different but identical AFTER the hygiene chain
-      // (nfc composes cafe+0301, markup strips, ctrl scrubs) → one winner
-      (ts(0), 1L, "<p>cafe" + comb + " one</p> alpha beta gamma delta"),
-      (ts(1), 2L, "cafe" + comb + " one alpha beta gamma delta" + ctrl),
-      (ts(2), 3L, "too few"),                         // < 5 tokens → dropped
-      (ts(3), 4L, "spam spam spam spam spam spam"),   // low diversity → dropped
-      (ts(4), 5L, "five distinct tokens right here ok"))
-    val lateFixture = Seq(
-      (ts(10), 6L, "cafe" + comb + " one <i>alpha</i> beta gamma delta"), // dup of 1
-      (ts(11), 7L, "another totally fresh set of words"))
-    val stream = MemoryStream[(java.sql.Timestamp, Long, String)]
-    val docs = stream.toDF().toDF("ts", "doc_id", "text")
-    val out = StreamingValidator.curateStream(docs)
-    val q = out.writeStream.format("memory").queryName("sv_curate")
-      .outputMode("append").start()
-    try {
-      stream.addData(fixture)
-      q.processAllAvailable()
-      stream.addData(lateFixture)
-      q.processAllAvailable()
-      val streamKept = spark.table("sv_curate")
-        .select("doc_id", "clean").collect()
-        .map(r => (r.getLong(0), r.getString(1))).toSet
-      val batchKept = graft.ops.Curation.curate(
-          (fixture ++ lateFixture).toDF("ts", "doc_id", "text"))
-        .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-      assert(streamKept == batchKept, s"stream $streamKept != batch $batchKept")
-      assert(streamKept.map(_._1) == Set(1L, 5L, 7L), s"got $streamKept")
-    } finally q.stop()
-  }
-
-  test("sourceReportStream: per-window volume counters match the batch rollup") {
-    val session = spark
-    import session.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val fixture = Seq(
-      (java.sql.Timestamp.valueOf("2026-01-01 10:00:05"), "web", "one two three"),
-      (java.sql.Timestamp.valueOf("2026-01-01 10:00:20"), "web", "four five"),
-      (java.sql.Timestamp.valueOf("2026-01-01 10:00:30"), "books", "six"),
-      (java.sql.Timestamp.valueOf("2026-01-01 10:01:10"), "web", "seven eight nine ten"))
-    val stream = MemoryStream[(java.sql.Timestamp, String, String)]
-    val docs = stream.toDF().toDF("ts", "source", "text")
-    val out = StreamingValidator.sourceReportStream(docs,
-      window = "1 minute", lateness = "30 seconds")
-    val q = out.writeStream.format("memory").queryName("sv_srcrep")
-      .outputMode("append").start()
-    try {
-      stream.addData(fixture.take(3))
-      q.processAllAvailable()
-      stream.addData(fixture.drop(3)) // advances the watermark past window 1
-      q.processAllAvailable()
-      // a far-future event closes window 2 so the full comparison is stable
-      stream.addData((java.sql.Timestamp.valueOf("2026-01-01 10:30:00"), "web", "x"))
-      q.processAllAvailable()
-      val got = spark.table("sv_srcrep")
-        .select(col("window.start").cast("string").as("w"), col("source"),
-          col("n_docs"), col("n_tokens"), col("n_chars"))
-        .collect().map(r => (r.getString(0), r.getString(1)) ->
-          ((r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
-      val batch = fixture.toDF("ts", "source", "text")
-        .groupBy(window(col("ts"), "1 minute").getField("start")
-          .cast("string").as("w"), col("source"))
-        .agg(count(lit(1)), sum(graft.ops.TextAnalysis.tokenCount(col("text")).cast("long")),
-          sum(length(col("text")).cast("long")))
-        .collect().map(r => (r.getString(0), r.getString(1)) ->
-          ((r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
-      batch.foreach { case (k, v) =>
-        assert(got.get(k).contains(v), s"window/source $k: got ${got.get(k)}, want $v")
-      }
-    } finally q.stop()
-  }
-
-  test("trendingTermsStream: per-window term counts at the threshold match the batch rollup") {
-    val session = spark
-    import session.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val fixture = Seq(
-      (java.sql.Timestamp.valueOf("2026-01-01 10:00:05"), "buy now buy now"),
-      (java.sql.Timestamp.valueOf("2026-01-01 10:00:20"), "BUY also now"),
-      (java.sql.Timestamp.valueOf("2026-01-01 10:01:10"), "quiet window text"))
-    val stream = MemoryStream[(java.sql.Timestamp, String)]
-    val docs = stream.toDF().toDF("ts", "text")
-    val out = StreamingValidator.trendingTermsStream(docs, minCount = 3L,
-      window = "1 minute", lateness = "30 seconds")
-    val q = out.writeStream.format("memory").queryName("sv_trend")
-      .outputMode("append").start()
-    try {
-      stream.addData(fixture)
-      q.processAllAvailable()
-      stream.addData((java.sql.Timestamp.valueOf("2026-01-01 10:30:00"), "x"))
-      q.processAllAvailable()
-      val got = spark.table("sv_trend")
-        .select(col("window.start").cast("string").as("w"), col("term"), col("n"))
-        .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-      // canonical tokens: "buy"×3 (case-folded) and "now"×3 trend; "also"
-      // (1) and everything in the quiet window stay under the threshold
-      assert(got == Map(
-        ("2026-01-01 10:00:00", "buy") -> 3L,
-        ("2026-01-01 10:00:00", "now") -> 3L), s"got $got")
-    } finally q.stop()
-  }
-
-  test("domainMentionsStream: per-window PSL-domain mention counts match the batch rollup") {
-    val session = spark
-    import session.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val fixture = Seq(
-      (java.sql.Timestamp.valueOf("2026-01-01 10:00:05"),
-        "see https://a.bbc.co.uk/1 and https://b.bbc.co.uk/2"),
-      (java.sql.Timestamp.valueOf("2026-01-01 10:00:20"),
-        "spam http://x.spam.co.uk/p"),
-      (java.sql.Timestamp.valueOf("2026-01-01 10:01:10"),
-        "late window https://c.bbc.co.uk/3 no more"))
-    val stream = MemoryStream[(java.sql.Timestamp, String)]
-    val docs = stream.toDF().toDF("ts", "text")
-    val out = StreamingValidator.domainMentionsStream(docs,
-      window = "1 minute", lateness = "30 seconds")
-    val q = out.writeStream.format("memory").queryName("sv_dom")
-      .outputMode("append").start()
-    try {
-      stream.addData(fixture)
-      q.processAllAvailable()
-      stream.addData((java.sql.Timestamp.valueOf("2026-01-01 10:30:00"), "x"))
-      q.processAllAvailable()
-      val got = spark.table("sv_dom")
-        .select(col("window.start").cast("string").as("w"), col("domain"),
-          col("n_mentions"))
-        .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-      // PSL rule: bbc.co.uk and spam.co.uk are DISTINCT domains
-      assert(got == Map(
-        ("2026-01-01 10:00:00", "bbc.co.uk") -> 2L,
-        ("2026-01-01 10:00:00", "spam.co.uk") -> 1L,
-        ("2026-01-01 10:01:00", "bbc.co.uk") -> 1L), s"got $got")
-    } finally q.stop()
-  }
-
-  test("streaming sessionization: session_window merges within-gap events, emits on close") {
-    val session = spark
-    import session.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[(java.sql.Timestamp, Long)]
-    val events = stream.toDF().toDF("ts", "user_id")
-
-    val out = StreamingValidator.sessionStream(events, "user_id", "ts",
-      gap = "1 minute", lateness = "1 minute")
-    val q = out.writeStream.format("memory").queryName("sv_sess")
-      .outputMode("append").start()
-    try {
-      // user 7: two events 20s apart (one session), then one 5 minutes
-      // later (a second session); an advancing watermark event closes them
-      stream.addData(
-        (java.sql.Timestamp.valueOf("2026-01-01 10:00:00"), 7L),
-        (java.sql.Timestamp.valueOf("2026-01-01 10:00:20"), 7L),
-        (java.sql.Timestamp.valueOf("2026-01-01 10:05:00"), 7L))
-      q.processAllAvailable()
-      stream.addData((java.sql.Timestamp.valueOf("2026-01-01 10:30:00"), 99L))
-      q.processAllAvailable()
-      val rows = spark.table("sv_sess").collect()
-        .filter(_.getAs[Long]("user_id") == 7L)
-        .map(r => (r.getAs[java.sql.Timestamp]("session_start").toString,
-          r.getAs[Long]("n_events"))).sortBy(_._1)
-      assert(rows.toSeq == Seq(("2026-01-01 10:00:00.0", 2L), ("2026-01-01 10:05:00.0", 1L)),
-        s"got ${rows.toSeq}")
-    } finally q.stop()
-  }
-
-  test("stateful running violation totals across micro-batches") {
-    val session = spark
-    import session.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[String]
-    val viols = stream.toDF().toDF("checkId")
-
-    val out = StreamingValidator.runningViolationTotals(spark, viols)
-    val q = out.writeStream.format("memory").queryName("sv_tot")
-      .outputMode("update").start()
-    try {
-      stream.addData("C1", "C1", "C2")
-      q.processAllAvailable()
-      stream.addData("C1")
-      q.processAllAvailable()
-      val last = spark.table("sv_tot").collect()
-        .groupBy(_.getString(0)).map { case (k, rs) =>
-          k -> rs.map(_.getLong(1)).max }
-      assert(last == Map("C1" -> 3L, "C2" -> 1L), s"got $last")
-    } finally q.stop()
-  }
-
-  test("streaming decontamination: event rollup matches the batch operator") {
-    val session = spark
-    import session.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // corpus docs share 4-grams with the benchmark doc; doc 3 is clean
-    val corpus = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog"),
-      (2L, "a totally different text with quick brown fox jumps inside it"),
-      (3L, "nothing in common with the eval set here at all"))
-    val benchmark = Seq((100L, "quick brown fox jumps over fences")).toDF("doc_id", "text")
-
-    val stream = MemoryStream[(Long, String)]
-    val out = StreamingValidator.contaminationEventStream(
-      stream.toDF().toDF("doc_id", "text"), benchmark, n = 4)
-    assert(out.isStreaming)
-    val q = out.writeStream.format("memory").queryName("sv_decon")
-      .outputMode("append").start()
-    try {
-      stream.addData(corpus.take(2): _*)
-      q.processAllAvailable()
-      stream.addData(corpus.drop(2): _*) // second micro-batch
-      q.processAllAvailable()
-      val streamed = spark.table("sv_decon").collect()
-        .groupBy(_.getLong(0)).view.mapValues(_.length.toLong).toMap
-      val batch = graft.ops.Decontamination.contaminated(
-          corpus.toDF("doc_id", "text"), benchmark, n = 4)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(batch.nonEmpty && !batch.contains(3L), s"fixture broken: $batch")
-      assert(streamed == batch, s"stream=$streamed batch=$batch")
-    } finally q.stop()
-  }
-
-  test("streaming quality scoring: per-doc scores match the batch classifier") {
-    val session = spark
-    import session.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.ops.QualityClassifier
-    val trainDocs = Seq(
-      (10L, "lucid cogent varied rich text"),
-      (11L, "nuanced detailed careful writing"),
-      (20L, "buy buy buy buy buy"),
-      (21L, "click click click click")).toDF("doc_id", "text")
-    val model = QualityClassifier.train(trainDocs,
-      QualityClassifier.diversityLabel(col("text")), 64)
-    val modelMap = QualityClassifier.modelToMap(model)
-
-    val arrivals = Seq(
-      (1L, "cogent nuanced rich writing"),
-      (2L, "buy click buy click buy"),
-      (3L, "vocabulary the model never saw"))
-    val stream = MemoryStream[(Long, String)]
-    val out = StreamingValidator.qualityScoreStream(
-      stream.toDF().toDF("doc_id", "text"), modelMap)
-    assert(out.isStreaming)
-    val q = out.writeStream.format("memory").queryName("sv_qscore")
-      .outputMode("append").start()
-    try {
-      stream.addData(arrivals.take(1): _*)
-      q.processAllAvailable()
-      stream.addData(arrivals.drop(1): _*) // second micro-batch
-      q.processAllAvailable()
-      val streamed = spark.table("sv_qscore").collect()
-        .map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2)))).toMap
-      // batch scorer omits zero-token docs; this fixture has none
-      val batch = QualityClassifier.score(arrivals.toDF("doc_id", "text"), model, 64)
-        .collect().map(r => r.getLong(0) -> ((r.getLong(2), r.getBoolean(3)))).toMap
-      assert(batch(1L)._2 && !batch(2L)._2, s"fixture not separating: $batch")
-      assert(streamed == batch, s"stream=$streamed batch=$batch")
-    } finally q.stop()
-  }
-
-  test("streaming MinHash near-dup: pair events match the batch candidate+agreement set") {
-    val session = spark
-    import session.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = "the quick brown fox jumps over the lazy dog again and again in the yard"
-    val corpus = Seq(
-      (1L, base),
-      (2L, base + "!"),                       // near-dup of 1
-      (3L, "completely different content with nothing shared at all here"),
-      (4L, base.replace("quick", "quicc")))   // near-dup of 1 and 2
-    def ts(s: Int) = java.sql.Timestamp.valueOf(f"2026-01-01 10:00:$s%02d")
-
-    val stream = MemoryStream[(java.sql.Timestamp, Long, String)]
-    val out = StreamingValidator.minhashPairEventsStream(
-      stream.toDF().toDF("ts", "doc_id", "text"), minAgreement = 0.6)
-    assert(out.isStreaming)
-    val q = out.writeStream.format("memory").queryName("sv_mh")
-      .outputMode("append").start()
-    try {
-      stream.addData(corpus.take(2).map { case (i, t) => (ts(i.toInt), i, t) }: _*)
-      q.processAllAvailable()
-      stream.addData(corpus.drop(2).map { case (i, t) => (ts(i.toInt), i, t) }: _*)
-      q.processAllAvailable()
-      val nBefore = spark.table("sv_mh").count()
-      // at-least-once re-delivery of doc 2 must emit nothing new
-      stream.addData((ts(2), 2L, corpus(1)._2))
-      q.processAllAvailable()
-      assert(spark.table("sv_mh").count() == nBefore,
-        "re-delivered doc_id emitted new pair events")
-      val streamed = spark.table("sv_mh").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val cands = graft.ops.Dedup.minhashCandidates(corpus.toDF("doc_id", "text"))
-      val batch = cands.withColumn("agg",
-          graft.ops.Dedup.sigAgreement(col("sig_a"), col("sig_b"), 32))
-        .filter(col("agg") >= 0.6)
-        .select("id_a", "id_b").distinct()
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(batch.nonEmpty && !batch.exists(p => p._1 == 3L || p._2 == 3L),
-        s"fixture broken: $batch")
-      assert(streamed == batch, s"stream=$streamed batch=$batch")
-    } finally q.stop()
-  }
-
-  test("streaming leak-safe split: labels match the batch split; groups stay one-sided; null group -> train") {
-    val session = spark
-    import session.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // many docs per group so a straddling group would be caught; one null
-    val arrivals = (1L to 60L).map(i => (i, Option(s"domain${i % 12}.com"))) :+
-      (99L, Option.empty[String])
-    val stream = MemoryStream[(Long, Option[String])]
-    val out = StreamingValidator.leakSafeSplitStream(
-      stream.toDF().toDF("doc_id", "grp"), "grp", heldout256 = 96)
-    assert(out.isStreaming)
-    val q = out.writeStream.format("memory").queryName("sv_leak")
-      .outputMode("append").start()
-    try {
-      stream.addData(arrivals.take(25): _*)
-      q.processAllAvailable()
-      stream.addData(arrivals.drop(25): _*) // second micro-batch
-      q.processAllAvailable()
-      val streamed = spark.table("sv_leak").collect()
-        .map(r => r.getLong(0) -> r.getString(2)).toMap
-      val batch = graft.ops.Sampling.leakSafeSplit(
-          arrivals.toDF("doc_id", "grp"), "grp", 96)
-        .collect().map(r => r.getLong(0) -> r.getString(2)).toMap
-      assert(streamed == batch, s"stream=$streamed batch=$batch")
-      assert(streamed(99L) == "train", "null group must route to train")
-      assert(streamed.values.toSet == Set("train", "heldout"),
-        s"fixture not splitting: ${streamed.values.toSet}")
-      // one-sidedness: every group's docs share a label — and a doc that
-      // arrived in batch 1 agrees with its groupmates from batch 2
-      val sides = arrivals.filter(_._2.isDefined)
-        .groupBy(_._2.get).view.mapValues(_.map(a => streamed(a._1)).toSet)
-      assert(sides.values.forall(_.size == 1), sides.toMap.toString)
-    } finally q.stop()
-  }
-
-  test("streaming mixture sampling: kept set under a batch-planned mixture matches the batch sample") {
-    val session = spark
-    import session.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val arrivals = (1L to 80L).map(i =>
-      (i, s"src${i % 4}", Seq.fill((i % 5 + 1).toInt)("tok").mkString(" ")))
-    val hist = arrivals.toDF("doc_id", "source", "text")
-    // the batch side plans over history (temperature-flattened), the
-    // stream enforces the plan row-locally
-    val totals = graft.ops.Sampling.mixturePlan(hist, "source", "text",
-        Map("src0" -> 1L, "src1" -> 1L, "src2" -> 1L, "src3" -> 1L), 120L)
-      .collect().map(r => r.getString(0) -> r.getLong(3).toInt).toMap
-    assert(totals.values.exists(b => b > 0 && b < 256),
-      s"fixture must downsample at least one source: $totals")
-    val stream = MemoryStream[(Long, String, String)]
-    val out = StreamingValidator.mixtureSampleStream(
-      stream.toDF().toDF("doc_id", "source", "text"), totals)
-    assert(out.isStreaming)
-    val q = out.writeStream.format("memory").queryName("sv_mix")
-      .outputMode("append").start()
-    try {
-      stream.addData(arrivals.take(37): _*)
-      q.processAllAvailable()
-      stream.addData(arrivals.drop(37): _*)
-      q.processAllAvailable()
-      val streamed = spark.table("sv_mix").collect().map(_.getLong(0)).toSet
-      val batch = graft.ops.Sampling.md5SampleStratified(
-          hist, "doc_id", "source", totals, 0)
-        .collect().map(_.getLong(0)).toSet
-      assert(streamed == batch, s"stream=$streamed batch=$batch")
-      assert(streamed.nonEmpty && streamed.size < arrivals.size,
-        s"fixture kept ${streamed.size}/${arrivals.size} — nothing sampled out")
-    } finally q.stop()
-  }
-
-  test("streaming drift monitor: per-window bin counts match the batch twin; outliers clamp to edge bins") {
-    val session = spark
-    import session.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // reference edges: lo=0, width=10, 4 bins → [0,10) [10,20) [20,30) [30,∞ clamps)
-    val fixture = Seq(
-      ("2026-01-01 10:00:05", Some(3.0)),   // w1 bin 0
-      ("2026-01-01 10:00:15", Some(12.0)),  // w1 bin 1
-      ("2026-01-01 10:00:25", Some(15.0)),  // w1 bin 1
-      ("2026-01-01 10:00:35", Some(99.0)),  // w1 bin 3 (clamped outlier)
-      ("2026-01-01 10:00:45", Some(-5.0)),  // w1 bin 0 (clamped below)
-      ("2026-01-01 10:00:50", None),        // w1 bin -2 (NULL metric sentinel)
-      ("2026-01-01 10:01:10", Some(27.0)))  // w2 bin 2
-      .map { case (t, v) => (java.sql.Timestamp.valueOf(t), v) }
-
-    val stream = MemoryStream[(java.sql.Timestamp, Option[Double])]
-    val out = StreamingValidator.driftBinCounts(
-      stream.toDF().toDF("ts", "v"), "v", lo = 0.0, width = 10.0, buckets = 4)
-    val q = out.writeStream.format("memory").queryName("sv_drift")
-      .outputMode("complete").start()
-    try {
-      stream.addData(fixture.take(4): _*)
-      q.processAllAvailable()
-      stream.addData(fixture.drop(4): _*) // second micro-batch
-      q.processAllAvailable()
-      val streamed = spark.table("sv_drift").collect()
-        .map(r => (r.getStruct(0).getTimestamp(0).toString, r.getLong(1)) -> r.getLong(2))
-        .toMap
-      val batch = fixture.toDF("ts", "v")
-        .groupBy(window(col("ts"), "1 minute"),
-          StreamingValidator.driftBin(col("v"), 0.0, 10.0, 4).as("bin"))
-        .agg(count(lit(1)).as("n")).collect()
-        .map(r => (r.getStruct(0).getTimestamp(0).toString, r.getLong(1)) -> r.getLong(2))
-        .toMap
-      assert(batch.values.sum == 7L &&
-        batch.keys.map(_._2).toSet == Set(0L, 1L, 2L, 3L, -2L),
-        s"fixture broken: $batch")
-      assert(streamed == batch, s"stream=$streamed batch=$batch")
-    } finally q.stop()
-  }
-
-  test("per-source streaming drift: counts match the batch twin per (window, source, bin); unknown source surfaces as bin -1") {
-    val session = spark
-    import session.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // per-source reference edges: s1 lo=0 width=10; s2 lo=100 width=5;
-    // s3 streams WITHOUT a reference — must surface, not vanish
-    val refEdges = Seq(("s1", 0.0, 10.0), ("s2", 100.0, 5.0))
-      .toDF("source", "lo", "width")
-    val fixture = Seq(
-      ("2026-01-01 10:00:05", Some(3.0), "s1"),   // w1 s1 bin 0
-      ("2026-01-01 10:00:15", Some(12.0), "s1"),  // w1 s1 bin 1
-      ("2026-01-01 10:00:20", Some(12.0), "s2"),  // w1 s2 bin 0 (clamped below)
-      ("2026-01-01 10:00:25", Some(107.0), "s2"), // w1 s2 bin 1
-      ("2026-01-01 10:00:35", Some(999.0), "s2"), // w1 s2 bin 3 (clamped outlier)
-      ("2026-01-01 10:00:45", Some(50.0), "s3"),  // w1 s3 bin -1 (no reference)
-      ("2026-01-01 10:00:55", None, "s1"),        // w1 s1 bin -2 (NULL metric,
-                                                  // known source — -2 wins)
-      ("2026-01-01 10:00:58", None, "s3"),        // w1 s3 bin -2 (NULL metric,
-                                                  // no reference — still -2)
-      ("2026-01-01 10:01:10", Some(27.0), "s1"))  // w2 s1 bin 2
-      .map { case (t, v, s0) => (java.sql.Timestamp.valueOf(t), v, s0) }
-
-    val stream = MemoryStream[(java.sql.Timestamp, Option[Double], String)]
-    val out = StreamingValidator.driftBinCountsBySource(
-      stream.toDF().toDF("ts", "v", "source"), refEdges, "v", buckets = 4)
-    val q = out.writeStream.format("memory").queryName("sv_drift_src")
-      .outputMode("complete").start()
-    try {
-      stream.addData(fixture.take(4): _*)
-      q.processAllAvailable()
-      stream.addData(fixture.drop(4): _*) // second micro-batch
-      q.processAllAvailable()
-      def key(r: org.apache.spark.sql.Row) =
-        (r.getStruct(0).getTimestamp(0).toString, r.getString(1), r.getLong(2))
-      val streamed = spark.table("sv_drift_src").collect()
-        .map(r => key(r) -> r.getLong(3)).toMap
-      val batch = fixture.toDF("ts", "v", "source")
-        .join(refEdges, Seq("source"), "left")
-        .groupBy(window(col("ts"), "1 minute"), col("source"),
-          StreamingValidator.sourceDriftBin(col("v"), col("lo"), col("width"), 4).as("bin"))
-        .agg(count(lit(1)).as("n")).collect()
-        .map(r => key(r) -> r.getLong(3)).toMap
-      assert(batch.values.sum == 9L, s"fixture broken: $batch")
-      assert(batch.keys.exists(_._3 == -1L), s"no-reference sentinel missing: $batch")
-      assert(batch.keys.exists(_._3 == 3L), s"clamped outlier missing: $batch")
-      // NULL metric sentinel (-2) fires for BOTH a known and an unknown
-      // source — a null value is un-binnable regardless of edges
-      assert(batch.count(_._1._3 == -2L) == 2 &&
-        batch.keys.filter(_._3 == -2L).map(_._2).toSet == Set("s1", "s3"),
-        s"null-metric sentinel rows wrong: $batch")
-      assert(streamed == batch, s"stream=$streamed batch=$batch")
-    } finally q.stop()
-  }
-
-  test("mergeableProfileStream: melted+merged window rows equal the batch profile on exact channels") {
-    val session = spark
-    import session.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.stats.ColumnStats
-    // two windows, a NULL metric and a NULL string in the mix; the last
-    // event only advances the watermark (its own window never closes)
-    val fixture = Seq(
-      (java.sql.Timestamp.valueOf("2026-01-01 10:00:05"), Option(5L), "a"),
-      (java.sql.Timestamp.valueOf("2026-01-01 10:00:20"), Option.empty[Long], "b"),
-      (java.sql.Timestamp.valueOf("2026-01-01 10:00:30"), Option(7L), "a"),
-      (java.sql.Timestamp.valueOf("2026-01-01 10:01:10"), Option(100L), null),
-      (java.sql.Timestamp.valueOf("2026-01-01 10:01:40"), Option(3L), "c"))
-    val closer = (java.sql.Timestamp.valueOf("2026-01-01 10:30:00"), Option(1L), "z")
-    val stream = MemoryStream[(java.sql.Timestamp, Option[Long], String)]
-    val docs = stream.toDF().toDF("ts", "k", "s")
-    val out = StreamingValidator.mergeableProfileStream(docs, Seq("k", "s"),
-      window = "1 minute", lateness = "30 seconds")
-    val q = out.writeStream.format("memory").queryName("sv_mprof")
-      .outputMode("append").start()
-    try {
-      stream.addData(fixture.take(3))
-      q.processAllAvailable()
-      stream.addData(fixture.drop(3))
-      q.processAllAvailable()
-      stream.addData(closer)
-      q.processAllAvailable()
-      val wide = spark.table("sv_mprof")
-        .withColumn("part", col("window.start").cast("string")).drop("window")
-      assert(wide.count() == 2, "expected two closed windows")
-      val streamed = ColumnStats.mergeProfiles(ColumnStats.meltProfile(wide, Seq("k", "s")))
-      val batch = ColumnStats.mergeProfiles(ColumnStats.mergeableProfile(
-        fixture.toDF("ts", "k", "s").withColumn("part", lit(1)), "part", Seq("k", "s")))
-      val exact = Seq("n", "nulls", "min_d", "max_d", "min_s", "max_s", "sum_l")
-      val a = streamed.select(col("column") +: exact.map(col): _*).collect()
-        .map(r => r.getString(0) -> r.toSeq.tail).toMap
-      val b = batch.select(col("column") +: exact.map(col): _*).collect()
-        .map(r => r.getString(0) -> r.toSeq.tail).toMap
-      assert(a == b, s"stream=$a batch=$b")
-      // tiny cardinalities: the HLL estimate plane agrees exactly too
-      val estA = streamed.select("column", "distinct_est").collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      assert(estA == Map("k" -> 4L, "s" -> 3L), estA.toString)
-      // and the THETA value-set channel rides the stream: merged window
-      // blobs answer exact-mode set cardinality like the batch side
-      val thetas = streamed.select("column", "theta").collect()
-        .map(r => r.getString(0) ->
-          graft.stats.ThetaStats.estimate(r.getAs[Array[Byte]](1))).toMap
-      assert(thetas == Map("k" -> 4.0, "s" -> 3.0), thetas.toString)
-    } finally q.stop()
-  }
-
-  test("freqSketchStream: merged window blobs equal the batch sketch in the exact regime") {
-    val session = spark
-    import session.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val fixture = Seq(
-      (java.sql.Timestamp.valueOf("2026-01-01 10:00:05"), "alpha"),
-      (java.sql.Timestamp.valueOf("2026-01-01 10:00:20"), "alpha"),
-      (java.sql.Timestamp.valueOf("2026-01-01 10:00:30"), "beta"),
-      (java.sql.Timestamp.valueOf("2026-01-01 10:01:10"), "alpha"),
-      (java.sql.Timestamp.valueOf("2026-01-01 10:01:40"), "gamma"))
-    val closer = (java.sql.Timestamp.valueOf("2026-01-01 10:30:00"), "omega")
-    val stream = MemoryStream[(java.sql.Timestamp, String)]
-    val docs = stream.toDF().toDF("ts", "item")
-    val out = StreamingValidator.freqSketchStream(docs, "item",
-      maxMapSize = 64, window = "1 minute", lateness = "30 seconds")
-    val q = out.writeStream.format("memory").queryName("sv_freqsk")
-      .outputMode("append").start()
-    try {
-      stream.addData(fixture.take(3))
-      q.processAllAvailable()
-      stream.addData(fixture.drop(3))
-      q.processAllAvailable()
-      stream.addData(closer)
-      q.processAllAvailable()
-      val windows = spark.table("sv_freqsk")
-      assert(windows.count() == 2, "expected two closed windows")
-      val mergedBytes = windows
-        .agg(graft.stats.FreqMergeAgg.freq_merge(col("freq"), 64))
-        .collect()(0).getAs[Array[Byte]](0)
-      val sk = graft.stats.FreqStats.sketchOf(mergedBytes)
-      assert(sk.getStreamLength == 5L && sk.getMaximumError == 0L)
-      val merged = sk.getFrequentItems(
-          org.apache.datasketches.frequencies.ErrorType.NO_FALSE_NEGATIVES)
-        .map(r => r.getItem -> r.getEstimate).toMap
-      assert(merged == Map("alpha" -> 3L, "beta" -> 1L, "gamma" -> 1L), merged.toString)
-    } finally q.stop()
-  }
-
-  test("thetaSketchStream: merged window blobs answer set churn exactly in the exact regime") {
-    val session = spark
-    import session.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val fixture = Seq(
-      (java.sql.Timestamp.valueOf("2026-01-01 10:00:05"), "u1"),
-      (java.sql.Timestamp.valueOf("2026-01-01 10:00:20"), "u2"),
-      (java.sql.Timestamp.valueOf("2026-01-01 10:00:30"), "u2"),
-      (java.sql.Timestamp.valueOf("2026-01-01 10:01:10"), "u2"),
-      (java.sql.Timestamp.valueOf("2026-01-01 10:01:40"), "u3"))
-    val closer = (java.sql.Timestamp.valueOf("2026-01-01 10:30:00"), "zz")
-    val stream = MemoryStream[(java.sql.Timestamp, String)]
-    val docs = stream.toDF().toDF("ts", "v")
-    val out = StreamingValidator.thetaSketchStream(docs, "v",
-      nominalEntries = 64, window = "1 minute", lateness = "30 seconds")
-    val q = out.writeStream.format("memory").queryName("sv_theta")
-      .outputMode("append").start()
-    try {
-      stream.addData(fixture.take(3)); q.processAllAvailable()
-      stream.addData(fixture.drop(3)); q.processAllAvailable()
-      stream.addData(closer); q.processAllAvailable()
-      val windows = spark.table("sv_theta")
-        .withColumn("w", col("window.start").cast("string"))
-      assert(windows.count() == 2)
-      // merged across both windows: {u1,u2,u3}
-      val merged = windows.agg(
-        graft.stats.ThetaMergeAgg.theta_merge(col("theta"), 64))
-        .collect()(0).getAs[Array[Byte]](0)
-      assert(graft.stats.ThetaStats.estimate(merged) == 3.0)
-      // churn window 1 -> window 2: only {u1} disappeared, {u3} appeared,
-      // {u2} common — exact integers
-      val byW = windows.select("w", "theta").collect()
-        .map(r => r.getString(0) -> r.getAs[Array[Byte]](1)).sortBy(_._1)
-      val (onlyA, onlyB, common, _, _, exact) =
-        graft.stats.ThetaStats.setChurn(byW(0)._2, byW(1)._2)
-      assert(exact && onlyA == 1.0 && onlyB == 1.0 && common == 1.0)
-    } finally q.stop()
-  }
-
-  test("fingerprintDedupDeltaStream: kept set equals the batch delta against the stored directory") {
-    val session = spark
-    import session.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // stored directory from the prior snapshot: fingerprints of "known a"
-    // and "known b"
-    val prior = Seq((1L, "known a"), (2L, "known b")).toDF("doc_id", "text")
-    val directory = graft.ops.Dedup.fingerprintDirectory(prior)
-    // the increment: one known doc (drop), one known doc with whitespace
-    // variation (same canonical fingerprint -> drop), two fresh docs, one
-    // in-stream duplicate (first arrival kept)
-    val fixture = Seq(
-      (java.sql.Timestamp.valueOf("2026-01-01 10:00:01"), 10L, "known a"),
-      (java.sql.Timestamp.valueOf("2026-01-01 10:00:02"), 11L, "  KNOWN   b "),
-      (java.sql.Timestamp.valueOf("2026-01-01 10:00:03"), 12L, "fresh one"),
-      (java.sql.Timestamp.valueOf("2026-01-01 10:00:04"), 13L, "fresh two"),
-      (java.sql.Timestamp.valueOf("2026-01-01 10:00:05"), 14L, "fresh ONE"))
-    val stream = MemoryStream[(java.sql.Timestamp, Long, String)]
-    val docs = stream.toDF().toDF("ts", "doc_id", "text")
-    val out = StreamingValidator.fingerprintDedupDeltaStream(docs, directory)
-    val q = out.writeStream.format("memory").queryName("sv_fpdelta")
-      .outputMode("append").start()
-    try {
-      stream.addData(fixture)
-      q.processAllAvailable()
-      val streamed = spark.table("sv_fpdelta").select("doc_id").collect()
-        .map(_.getLong(0)).toSet
-      val (batchKept, _) = graft.ops.Dedup.fingerprintDedupDelta(
-        fixture.toDF("ts", "doc_id", "text"), directory)
-      val batchIds = batchKept.select("doc_id").collect().map(_.getLong(0)).toSet
-      assert(streamed == Set(12L, 13L), streamed.toString)
-      assert(streamed == batchIds, s"stream=$streamed batch=$batchIds")
     } finally q.stop()
   }
 }
