@@ -11,41 +11,13 @@ import graft.model.SchemaDef
   * and log the deleted triples per dataset/record/property (:439-455).
   *
   * Spark-native inversion: instead of per-URI queries + per-record updates,
-  * the corpus is rewritten in ONE distributed pass. Two implementations:
-  *
-  *  - join path (default, scale-safe): explode spans, left-anti join the
-  *    bad-URI FRAME, regroup by doc — the bad set never touches the driver,
-  *    so millions of dangling refs cost a join, not a driver OOM + a
-  *    megabyte literal shipped into every task (round-1 VERDICT item 6);
-  *  - literal path ([[applyUriFix]]): for driver-known small sets (≤
-  *    [[MaxLiteralUris]]), the row-local `array_contains` rewrite that
-  *    avoids the explode/regroup entirely.
+  * the corpus is rewritten in ONE distributed pass: explode spans,
+  * left-anti join the bad-URI FRAME, regroup by doc. The bad set never
+  * touches the driver, so millions of dangling refs cost a join, not a
+  * driver OOM + a megabyte literal shipped into every task (round-1
+  * VERDICT item 6).
   */
 object Fix {
-
-  /** Above this many dangling URIs the literal path refuses — collect +
-    * typedLit means a driver round-trip and a plan-embedded array probed
-    * per span.
-    */
-  val MaxLiteralUris = 10000
-
-  /** Documents with all spans referencing a bad URI removed (type spans are
-    * never dropped, mirroring CheckURIExistence.php:411). Offsets of the
-    * surviving spans are preserved (span-sequence equality holds on the
-    * surviving subsequence). Driver-literal variant for SMALL bad sets.
-    */
-  def applyUriFix(spark: SparkSession, docs: DataFrame, badUris: Seq[String]): DataFrame = {
-    if (badUris.isEmpty) return docs
-    require(badUris.size <= MaxLiteralUris,
-      s"${badUris.size} bad URIs exceed the literal-path guard ($MaxLiteralUris); " +
-        "use applyUriFixJoin with the bad-URI frame instead")
-    val bad = typedLit(badUris)
-    docs.withColumn("spans",
-      filter(col("spans"), s =>
-        s.getField("kind") === SchemaDef.TypeKind ||
-          s.getField("media_ref").isNull ||
-          !array_contains(bad, s.getField("media_ref"))))
-  }
 
   /** Join-path rewrite: `badUris` is a single-column DataFrame of dangling
     * refs (never collected). Spans are exploded with their position,
@@ -81,12 +53,6 @@ object Fix {
       .join(bad, col("s.media_ref") === col("__bad"), "left_semi")
       .groupBy(col("doc_id"), col("s.kind").as("kind"))
       .agg(sort_array(collect_list(col("s.media_ref"))).as("deleted_refs"))
-  }
-
-  /** Literal-path log overload for driver-known small sets. */
-  def uriFixLog(spark: SparkSession, docs: DataFrame, badUris: Seq[String]): DataFrame = {
-    import spark.implicits._
-    uriFixLog(spark, docs, badUris.toDF("__bad"))
   }
 
   /** End-to-end: run the URI-existence check, fix every dangling reference,

@@ -119,20 +119,6 @@ final class Manifest(path: String) {
     append(Seq(line(("type" -> "files") +:
       key(snapshotId, constraintHash, checksHash) :+ ("run" -> run) :+ ("files" -> files))))
 
-  /** All violation files committed for this snapshot key, across runs.
-    * `asOfRun` (TIME TRAVEL, the Iceberg snapshot-read analogue): only
-    * files of runs committed with id ≤ asOfRun — reading the result set
-    * exactly as it stood after that run's commit, untouched by later
-    * resumes/compactions that appended afterwards. Travel depth is
-    * bounded by the expire policy: a [[rewriteAtomically]] compaction
-    * retires superseded runs' records (and [[Compact]] deletes their
-    * files), exactly the Iceberg expire-snapshots contract.
-    */
-  def committedFiles(snapshotId: String, constraintHash: String,
-                     checksHash: String = "",
-                     asOfRun: Long = Long.MaxValue): Seq[String] =
-    committedSnapshot(snapshotId, constraintHash, checksHash, asOfRun)._1
-
   /** Winning (max) committed run per bucket for this snapshot key — the
     * manifest-resolved twin of deriving winners from the verdicts table.
     */
@@ -141,8 +127,15 @@ final class Manifest(path: String) {
                           asOfRun: Long = Long.MaxValue): Map[Int, Long] =
     committedSnapshot(snapshotId, constraintHash, checksHash, asOfRun)._2
 
-  /** [[committedFiles]] and [[committedBucketRuns]] from one read of the
-    * log — what a snapshot reader needs.
+  /** All violation files committed for this snapshot key, across runs,
+    * and [[committedBucketRuns]], from one read of the log — what a
+    * snapshot reader needs. `asOfRun` (TIME TRAVEL, the Iceberg
+    * snapshot-read analogue): only runs committed with id ≤ asOfRun —
+    * reading the result set exactly as it stood after that run's commit,
+    * untouched by later resumes/compactions that appended afterwards.
+    * Travel depth is bounded by the expire policy: a [[rewriteAtomically]]
+    * compaction retires superseded runs' records (and [[Compact]] deletes
+    * their files), exactly the Iceberg expire-snapshots contract.
     */
   def committedSnapshot(snapshotId: String, constraintHash: String,
                         checksHash: String = "",

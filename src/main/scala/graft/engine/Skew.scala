@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Explicit skew-handling utilities (north star: "salted-key uniqueness and
@@ -8,10 +8,8 @@ import org.apache.spark.sql.functions._
   * explicit repartitioning, AQE skew-join handling, and salting keep hot
   * doc_id/media_ref keys balanced").
   *
-  * AQE's skew-join split is the first line of defense; these utilities are
-  * the explicit second line for the pathological cases AQE can't fix (a
-  * single key larger than a partition after splitting, or skewed
-  * AGGREGATION, which AQE does not rebalance).
+  * AQE's skew-join split handles skewed joins; these utilities cover what
+  * AQE does not rebalance: an under-split INPUT and skewed AGGREGATION.
   */
 object Skew {
 
@@ -46,38 +44,5 @@ object Skew {
       .groupBy(col(key))
       .agg(sum("__partial").as("key_count"))
       .filter(col("key_count") > 1)
-  }
-
-  /** Salted equi-join for a skewed LEFT side: left rows get a random salt in
-    * [0, saltBuckets); the (small-ish but too big to broadcast cheaply —
-    * otherwise just broadcast) right side is exploded `saltBuckets`× so
-    * every (key, salt) pair finds its match. Join key cardinality per
-    * reducer drops by the salt factor.
-    */
-  def saltedJoin(left: DataFrame, right: DataFrame, key: String,
-                 joinType: String = "inner", saltBuckets: Int = 16): DataFrame = {
-    val l = left.withColumn("__salt",
-      pmod(xxhash64(monotonically_increasing_id()), lit(saltBuckets)).cast("int"))
-    val r = right.withColumn("__salt",
-      explode(sequence(lit(0), lit(saltBuckets - 1))))
-    l.join(r, Seq(key, "__salt"), joinType).drop("__salt")
-  }
-
-  /** Hot-key split join: keys above `hotThreshold` occurrences are joined
-    * via broadcast (the hot slice of the right side is tiny by definition —
-    * few distinct keys), the long tail via ordinary shuffle join. This is
-    * the hand-rolled version of AQE skew handling that also works for
-    * non-AQE-eligible plans.
-    */
-  def hotColdJoin(left: DataFrame, right: DataFrame, key: String,
-                  hotThreshold: Long = 1000000L): DataFrame = {
-    val hotKeys = left.groupBy(key).count()
-      .filter(col("count") > hotThreshold).select(key)
-    val rightHot = right.join(broadcast(hotKeys), Seq(key), "left_semi")
-    val rightCold = right.join(broadcast(hotKeys), Seq(key), "left_anti")
-    val leftHot = left.join(broadcast(hotKeys), Seq(key), "left_semi")
-    val leftCold = left.join(broadcast(hotKeys), Seq(key), "left_anti")
-    leftHot.join(broadcast(rightHot), Seq(key))
-      .unionByName(leftCold.join(rightCold, Seq(key)))
   }
 }

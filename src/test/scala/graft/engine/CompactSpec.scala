@@ -61,7 +61,7 @@ class CompactSpec extends SparkTestBase {
       m, "snap-c", cfg.schema, 8, cfg.checksHash)
     assert(remaining.count() == 0)
     // and only the compacted run's files are committed
-    assert(m.committedFiles("snap-c", cfg.schema.constraintHash, cfg.checksHash)
+    assert(m.committedSnapshot("snap-c", cfg.schema.constraintHash, cfg.checksHash)._1
       .forall(_.contains(s"run=$newRun")))
   }
 }

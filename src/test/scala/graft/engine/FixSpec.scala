@@ -68,10 +68,5 @@ class FixSpec extends SparkTestBase {
 
     val log = Fix.uriFixLog(spark, docs, bad)
     assert(log.count() == n)
-
-    // the literal path refuses sets beyond the driver-size guard
-    intercept[IllegalArgumentException] {
-      Fix.applyUriFix(spark, docs, (0 until Fix.MaxLiteralUris + 1).map(i => s"missing:$i"))
-    }
   }
 }

@@ -41,8 +41,8 @@ class ManifestSnapshotSpec extends SparkTestBase {
     // manifest-resolved winners cover every bucket the verdicts recorded
     assert(m.committedBucketRuns("snap-iso", cfg.schema.constraintHash,
       cfg.checksHash).nonEmpty)
-    assert(m.committedFiles("snap-iso", cfg.schema.constraintHash,
-      cfg.checksHash).forall(_.endsWith(".parquet")))
+    assert(m.committedSnapshot("snap-iso", cfg.schema.constraintHash,
+      cfg.checksHash)._1.forall(_.endsWith(".parquet")))
 
     // simulate an INTERLEAVED writer: violations AND verdicts durably
     // written under a newer run id, but no manifest commit record (crashed

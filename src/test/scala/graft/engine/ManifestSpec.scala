@@ -39,8 +39,8 @@ class ManifestSpec extends AnyFunSuite {
     assert(m.completedBuckets(b, c, k) == Set(5))
     assert(m.completedBuckets(b, c, "").isEmpty)
     assert(m.completedBuckets(a, "deadbeef", k).isEmpty)
-    assert(m.committedFiles(a, c, k) == Seq(v(100), v(100, 1), v(200)))
-    assert(m.committedFiles(b, c, k) == Seq(v(400)))
+    assert(m.committedSnapshot(a, c, k)._1 == Seq(v(100), v(100, 1), v(200)))
+    assert(m.committedSnapshot(b, c, k)._1 == Seq(v(400)))
     assert(m.committedRuns(a, c, k) == Seq(100L, 200L))
     assert(m.committedRuns(b, c, k) == Seq(400L))
     assert(m.committedBucketRuns(a, c, k) ==
@@ -55,16 +55,16 @@ class ManifestSpec extends AnyFunSuite {
     assert(m.committedArtifacts("metrics", b, c, k).isEmpty)
     for ((s, key) <- Seq(a -> "", b -> "", "snap-x" -> "", "snap-x" -> k)) {
       if (s != a) assert(m.completedBuckets(s, c, key).isEmpty)
-      assert(m.committedFiles(s, c, key).isEmpty)
+      assert(m.committedSnapshot(s, c, key)._1.isEmpty)
       assert(m.committedRuns(s, c, key).isEmpty)
       assert(m.committedBucketRuns(s, c, key).isEmpty)
       assert(m.committedArtifacts("profile", s, c, key).isEmpty)
       assert(m.committedArtifacts("metrics", s, c, key).isEmpty)
     }
     // time travel
-    assert(m.committedFiles(a, c, k, asOfRun = 99L).isEmpty)
-    assert(m.committedFiles(a, c, k, asOfRun = 100L) == Seq(v(100), v(100, 1)))
-    assert(m.committedFiles(a, c, k, asOfRun = 200L) == Seq(v(100), v(100, 1), v(200)))
+    assert(m.committedSnapshot(a, c, k, asOfRun = 99L)._1.isEmpty)
+    assert(m.committedSnapshot(a, c, k, asOfRun = 100L)._1 == Seq(v(100), v(100, 1)))
+    assert(m.committedSnapshot(a, c, k, asOfRun = 200L)._1 == Seq(v(100), v(100, 1), v(200)))
     assert(m.committedBucketRuns(a, c, k, asOfRun = 99L).isEmpty)
     assert(m.committedBucketRuns(a, c, k, asOfRun = 100L) ==
       Map(0 -> 100L, 1 -> 100L, 2 -> 100L))
@@ -107,7 +107,7 @@ class ManifestSpec extends AnyFunSuite {
     m.recordFiles(odd, c, 7L, Seq(f1, f2), k)
     m.recordRun(odd, c, 7L, Seq((3, 5L, 1L)), k)
     m.recordArtifact("pro]file,\"x\"", odd, c, 7L, Seq(f2, f1), k)
-    assert(m.committedFiles(odd, c, k) == Seq(f1, f2))
+    assert(m.committedSnapshot(odd, c, k)._1 == Seq(f1, f2))
     assert(m.committedSnapshot(odd, c, k) == (Seq(f1, f2), Map(3 -> 7L)))
     assert(m.completedBuckets(odd, c, k) == Set(3))
     assert(m.committedRuns(odd, c, k) == Seq(7L))
@@ -115,7 +115,7 @@ class ManifestSpec extends AnyFunSuite {
     assert(m.committedArtifacts("pro]file,\"x\"", odd, c, k) == Map(7L -> Seq(f2, f1)))
     m.retireArtifacts("pro]file,\"x\"", odd, c, Set(7L), k)
     assert(m.committedArtifacts("pro]file,\"x\"", odd, c, k).isEmpty)
-    assert(m.committedFiles(odd, c, k) == Seq(f1, f2))
+    assert(m.committedSnapshot(odd, c, k)._1 == Seq(f1, f2))
   }
 
   test("a completion record torn after \"bucket\":1 is not complete; an append after it reads correctly") {
@@ -129,7 +129,7 @@ class ManifestSpec extends AnyFunSuite {
     m.recordRun(a, c, 10L, Seq((2, 3L, 0L)), k)
     assert(m.completedBuckets(a, c, k) == Set(0, 2))
     m.recordFiles(a, c, 10L, Seq(v(10)), k)
-    assert(m.committedFiles(a, c, k) == Seq(v(10)))
+    assert(m.committedSnapshot(a, c, k)._1 == Seq(v(10)))
     assert(m.committedBucketRuns(a, c, k) == Map(0 -> 10L, 2 -> 10L))
   }
 
@@ -141,9 +141,9 @@ class ManifestSpec extends AnyFunSuite {
     // a retried commit of run 10: its first attempt's files were deleted
     m.recordFiles(a, c, 10L, Seq(v(10, 7)), k)
     m.recordArtifact("profile", a, c, 10L, Seq(art("profile", 10, 7)), k)
-    assert(m.committedFiles(a, c, k).toSet == Set(v(20), v(10, 7)))
-    assert(m.committedFiles(a, c, k).size == 2)
-    assert(m.committedFiles(a, c, k, asOfRun = 10L) == Seq(v(10, 7)))
+    assert(m.committedSnapshot(a, c, k)._1.toSet == Set(v(20), v(10, 7)))
+    assert(m.committedSnapshot(a, c, k)._1.size == 2)
+    assert(m.committedSnapshot(a, c, k, asOfRun = 10L)._1 == Seq(v(10, 7)))
     assert(m.committedRuns(a, c, k) == Seq(10L, 20L))
     assert(m.committedArtifacts("profile", a, c, k) == Map(10L -> Seq(art("profile", 10, 7))))
   }

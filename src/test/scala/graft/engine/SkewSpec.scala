@@ -19,30 +19,6 @@ class SkewSpec extends SparkTestBase {
     assert(dups == Map("h" -> 10000L, "d" -> 2L))
   }
 
-  test("salted join equals plain join on skewed data") {
-    val session = spark
-    import session.implicits._
-    val left = ((0 until 5000).map(_ => ("hot", 1)) ++
-      (0 until 100).map(i => (s"k$i", i))).toDF("k", "v")
-    val right = (Seq("hot" -> 99) ++ (0 until 100).map(i => s"k$i" -> i)).toDF("k", "w")
-    val plain = left.join(right, Seq("k")).groupBy("k").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val salted = Skew.saltedJoin(left, right, "k").groupBy("k").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(salted == plain)
-  }
-
-  test("hot/cold split join equals plain join") {
-    val session = spark
-    import session.implicits._
-    val left = ((0 until 3000).map(_ => ("hot", 1)) ++
-      (0 until 50).map(i => (s"k$i", i))).toDF("k", "v")
-    val right = (Seq("hot" -> 99) ++ (0 until 50).map(i => s"k$i" -> i)).toDF("k", "w")
-    val plain = left.join(right, Seq("k")).count()
-    val split = Skew.hotColdJoin(left, right, "k", hotThreshold = 100).count()
-    assert(split == plain)
-  }
-
   test("doc-id uniqueness check: planted duplicate found, clean corpus green") {
     val session = spark
     import session.implicits._
