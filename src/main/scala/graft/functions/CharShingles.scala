@@ -17,8 +17,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * `substr` re-scans the UTF8 bytes from the start (code-point addressed) —
   * measured as a 0.3 s single-task stage on a few hundred candidate docs.
   *
-  * Semantics identical by construction (CharShinglesParity test in
-  * DedupSpec discipline): code-point windows `[i, i+k)` for
+  * Semantics identical by construction (OpsSpec asserts parity with the
+  * HOF chain, kept in test scope as `OpsHofOracle.shinglesHof`): code-point
+  * windows `[i, i+k)` for
   * `i = 0 .. len-k` (a text shorter than or equal to k chars yields one
   * shingle — the whole text, matching the clamped `substr(1, k)` of the
   * `greatest(len-k, 0) = 0` index range), first-occurrence order, distinct.

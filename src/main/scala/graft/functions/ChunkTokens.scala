@@ -10,7 +10,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Context-window token chunking as a native codegen'd expression — the
-  * hot-loop twin of [[graft.ops.TextAnalysis.chunkTokensHof]], whose
+  * hot-loop twin of the test-scope parity oracle
+  * `graft.ops.OpsHofOracle.chunkTokensHof`, whose
   * `transform(sequence(...), slice/concat_ws)` formulation is an
   * interpreted HOF (CodegenFallback — the documented repo anti-pattern for
   * full-corpus passes). ONE pass over the text: tokenize on Java-`\s`

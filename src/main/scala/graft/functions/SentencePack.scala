@@ -10,8 +10,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Greedy sentence-packed context windows as a native codegen'd
-  * expression — the hot-loop twin of
-  * [[graft.ops.TextAnalysis.sentenceChunksHof]], whose per-doc
+  * expression — the hot-loop twin of the test-scope parity oracle
+  * `graft.ops.OpsHofOracle.sentenceChunksHof`, whose per-doc
   * `aggregate(...)` fold is an interpreted HOF (CodegenFallback — the
   * documented repo anti-pattern for full-corpus passes). ONE pass over the
   * text: segment on `[^.!?]+[.!?]*` (a maximal non-terminator run plus its

@@ -158,18 +158,6 @@ object Decontamination {
       .select(col(id), col(benchId), col("jaccard"))
   }
 
-  /** Corpus with near-dup-contaminated documents removed. */
-  def cleanNearDup(corpus: DataFrame, benchmark: DataFrame,
-                   id: String = "doc_id", benchId: String = "bench_id",
-                   text: String = "text",
-                   k: Int = 5, numHashes: Int = 32, bands: Int = 8,
-                   threshold: Double = 0.9,
-                   broadcastBenchmark: Boolean = true): DataFrame =
-    corpus.join(
-      nearDupContaminated(corpus, benchmark, id, benchId, text, k, numHashes,
-        bands, threshold, broadcastBenchmark).select(id).distinct(),
-      Seq(id), "left_anti")
-
   /** [[contaminated]] for a benchmark whose exact gram set is too large to
     * broadcast: bloom-PREFILTER the corpus gram stream map-side (no corpus
     * shuffle — the sketch is a literal), then exact-verify only the

@@ -186,23 +186,6 @@ object TextAnalysis {
   def chunkTokens(text: Column, n: Int, overlap: Int = 0): Column =
     graft.functions.ChunkTokens.chunkTokens(text, n, overlap)
 
-  /** The declarative HOF formulation of [[chunkTokens]] — interpreted
-    * (CodegenFallback), kept as the independent parity twin the native
-    * expression is asserted against (repo convention for codegen exprs;
-    * see PipelineOpsSpec).
-    */
-  def chunkTokensHof(text: Column, n: Int, overlap: Int = 0): Column = {
-    require(n > 0 && overlap >= 0 && overlap < n,
-      s"need 0 <= overlap < n, got n=$n overlap=$overlap")
-    val w = regexp_extract_all(text, lit("\\S+"), lit(0))
-    val stride = n - overlap
-    when(size(w) > 0,
-      transform(
-        sequence(lit(1), greatest(size(w) - overlap, lit(1)), lit(stride)),
-        s => concat_ws(" ", slice(w, s, lit(n)))))
-      .otherwise(array().cast("array<string>"))
-  }
-
   // ------------------------------------------------------------------
   // sentence segmentation + sentence-packed chunking
   // ------------------------------------------------------------------
@@ -257,36 +240,6 @@ object TextAnalysis {
         posexplode(graft.functions.SentencePack.sentencePack(col(textCol), maxTokens))
           .as(Seq("chunk_idx", "chunk")))
       .withColumn("chunk_idx", col("chunk_idx").cast("long"))
-
-  /** The declarative fold formulation of [[sentenceChunks]] — an
-    * interpreted HOF kept as the parity twin (native ≡ HOF asserted in
-    * PipelineOpsSpec), per the repo convention for codegen expressions.
-    */
-  def sentenceChunksHof(docs: org.apache.spark.sql.DataFrame, maxTokens: Int,
-                        idCol: String = "doc_id", textCol: String = "text"): org.apache.spark.sql.DataFrame = {
-    require(maxTokens > 0, s"need maxTokens > 0, got $maxTokens")
-    // fold state: (cidx, acc tokens in current chunk, chunk idx per sentence)
-    val sents = sentenceArray(col(textCol))
-    val init = struct(lit(0L).as("cidx"), lit(0L).as("acc"),
-      array().cast("array<bigint>").as("assign"))
-    val folded = aggregate(sents, init, (st, s) => {
-      val ntok = size(regexp_extract_all(s, lit("\\S+"), lit(0))).cast("long")
-      val newChunk = st.getField("acc") > 0 && st.getField("acc") + ntok > maxTokens
-      struct(
-        when(newChunk, st.getField("cidx") + 1).otherwise(st.getField("cidx")).as("cidx"),
-        when(newChunk, ntok).otherwise(st.getField("acc") + ntok).as("acc"),
-        concat(st.getField("assign"),
-          array(when(newChunk, st.getField("cidx") + 1).otherwise(st.getField("cidx"))))
-          .as("assign"))
-    })
-    docs.select(col(idCol), sents.as("sents"), folded.getField("assign").as("assign"))
-      .select(col(idCol), posexplode(arrays_zip(col("sents"), col("assign")))
-        .as(Seq("pos", "z")))
-      .groupBy(col(idCol), col("z.assign").as("chunk_idx"))
-      .agg(concat_ws(" ", transform(
-        array_sort(collect_list(struct(col("pos"), col("z.sents").as("s")))),
-        p => p.getField("s"))).as("chunk"))
-  }
 
   /** Global sentence-level dedup (the RefinedWeb/C4 line-dedup stage):
     * drop every sentence whose canonical fingerprint appears in at least

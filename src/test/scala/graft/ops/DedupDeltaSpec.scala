@@ -2,7 +2,6 @@ package graft.ops
 
 import graft.SparkTestBase
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Incremental dedup against a persisted signature directory: the delta
   * paths (sign ONLY new docs, join the stored directory) must reproduce a
@@ -78,94 +77,5 @@ class DedupDeltaSpec extends SparkTestBase {
       .toDF("doc_id", "text")
     val (kept, _) = Dedup.fingerprintDedupDelta(sneaky, dir)
     assert(kept.count() == 0L)
-  }
-
-  test("minhash delta candidates: prev pairs ∪ delta pairs ≡ from-scratch candidates of the union") {
-    val all = prevDocs.unionByName(newDocs)
-    def pairSet(df: DataFrame) = df.select("id_a", "id_b").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-
-    val dir = roundTrip(Dedup.minhashDirectory(prevDocs), "mhdir")
-    val (deltaCands, dirDelta) = Dedup.minhashCandidatesDelta(newDocs, dir)
-    val prevPairs = pairSet(Dedup.minhashCandidates(prevDocs))
-    val fullPairs = pairSet(Dedup.minhashCandidates(all))
-    val deltaPairs = pairSet(deltaCands)
-    assert(fullPairs.nonEmpty && deltaPairs.nonEmpty, "fixture mined no pairs")
-    assert(deltaPairs.forall { case (a, b) => b >= 21L || a >= 21L },
-      s"delta pair without a new doc: $deltaPairs")
-    assert(prevPairs ++ deltaPairs == fullPairs,
-      s"missing: ${fullPairs -- prevPairs -- deltaPairs}; extra: ${(prevPairs ++ deltaPairs) -- fullPairs}")
-
-    // signatures carried on delta pairs agree with the full path's —
-    // the agreement prefilter must behave identically
-    val fullAgg = Dedup.minhashCandidates(all)
-      .withColumn("agg", Dedup.sigAgreement(col("sig_a"), col("sig_b"), 32))
-      .select("id_a", "id_b", "agg").collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val deltaAgg = deltaCands
-      .withColumn("agg", Dedup.sigAgreement(col("sig_a"), col("sig_b"), 32))
-      .select("id_a", "id_b", "agg").collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    deltaAgg.foreach { case (k, v) =>
-      assert(fullAgg(k) == v, s"agreement drift on $k: $v vs ${fullAgg(k)}") }
-
-    // compaction: directory ∪ delta with recomputed sizes ≡ from-scratch
-    def dirSet(df: DataFrame) = df.collect().map(r => (
-      r.getAs[Int]("band"), r.getAs[Long]("bucket"),
-      r.getAs[Long]("id"), r.getAs[Long]("bucket_size"))).toSet
-    val compacted = dirSet(Dedup.minhashDirectoryCompact(dir, dirDelta))
-    val scratch = dirSet(Dedup.minhashDirectory(all))
-    assert(compacted == scratch)
-  }
-
-  test("hot stored buckets are capped in the delta join like the full path") {
-    val session = spark
-    import session.implicits._
-    // every prev doc identical → one hot bucket per band in the directory
-    val hotPrev = (1L to 50L).map(i =>
-      (i, "identical boilerplate text repeated across every single document here"))
-      .toDF("doc_id", "text")
-    val dir = Dedup.minhashDirectory(hotPrev)
-    val one = Seq((99L, "identical boilerplate text repeated across every single document here"))
-      .toDF("doc_id", "text")
-    val (cands, _) = Dedup.minhashCandidatesDelta(one, dir, maxBucketSize = 10)
-    assert(cands.count() == 0L, "hot stored bucket must be capped out")
-    val (cands2, _) = Dedup.minhashCandidatesDelta(one, dir, maxBucketSize = 100)
-    assert(cands2.count() == 50L)
-  }
-
-  test("two increments, append WITHOUT compact: no new x previous-increment pair is lost") {
-    val session = spark
-    import session.implicits._
-    // increment 1 introduces a NEW text; increment 2 duplicates it — the
-    // only path to that candidate pair is through the increment-1 rows
-    // APPENDED to the directory with NULL bucket_size (the round-8 verdict
-    // gap: a `bucket_size <= max` filter silently dropped them)
-    val inc1 = Seq(
-      (21L, "fresh reporting on orbital telescope maintenance missions this year"),
-      (22L, "entirely new content with no duplicate anywhere in either snapshot")
-    ).toDF("doc_id", "text")
-    val inc2 = Seq(
-      (31L, "fresh reporting on orbital telescope maintenance missions this year"), // dup of inc1's 21
-      (32L, "the quick brown fox jumps over the lazy dog near the river bank today") // dup of prev 1/12
-    ).toDF("doc_id", "text")
-    def pairSet(df: DataFrame) = df.select("id_a", "id_b").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-
-    val dir0 = roundTrip(Dedup.minhashDirectory(prevDocs), "mhdir2")
-    val (cands1, delta1) = Dedup.minhashCandidatesDelta(inc1, dir0)
-    // append WITHOUT compacting: delta rows keep bucket_size = NULL
-    val dir1 = roundTrip(dir0.unionByName(delta1), "mhdir2-app")
-    assert(dir1.filter(col("bucket_size").isNull).count() > 0,
-      "fixture must exercise un-compacted NULL-size rows")
-    val (cands2, _) = Dedup.minhashCandidatesDelta(inc2, dir1)
-
-    val full = pairSet(Dedup.minhashCandidates(
-      prevDocs.unionByName(inc1).unionByName(inc2)))
-    val mined = pairSet(Dedup.minhashCandidates(prevDocs)) ++
-      pairSet(cands1) ++ pairSet(cands2)
-    assert(full.contains((21L, 31L)), "fixture lost its cross-increment pair")
-    assert(mined == full,
-      s"missing: ${full -- mined}; extra: ${mined -- full}")
   }
 }
