@@ -20,8 +20,7 @@ import graft.functions.NearestCentroid
   *    cluster partitions ([[topKIndexed]] — partition-pruned parquet scan,
   *    asserted by IvfSpec), exact-cosine rescore. At 10^12 vectors a probe
   *    touches nProbe/C of the corpus instead of re-assigning all of it
-  *    (the round-1 `topK` flaw). [[topKBatch]] amortizes one scan across a
-  *    whole query table.
+  *    (the round-1 `topK` flaw).
   */
 object Ivf {
 
@@ -117,27 +116,4 @@ object Ivf {
   def topK(emb: DataFrame, model: IvfModel, query: Seq[Float], k: Int,
            nProbe: Int = 2, id: String = "vec_id", vec: String = "embedding"): DataFrame =
     topKAssigned(assign(emb, model, vec), model, query, k, nProbe, id, vec)
-
-  /** Batch ANN: top-k per query row of `queries(qid, qvec)` in ONE
-    * distributed plan — queries broadcast onto the nProbe-pruned corpus
-    * partitions they rank, cosine rescored, per-query top-k via window.
-    * The per-(query, cluster) probe table is computed driver-side from the
-    * KB-sized centroid array (queries are expected to be ≪ corpus).
-    */
-  def topKBatch(spark: SparkSession, assigned: DataFrame,
-                queries: Seq[(Long, Seq[Float])], model: IvfModel, k: Int,
-                nProbe: Int = 2, id: String = "vec_id",
-                vec: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import spark.implicits._
-    val probe = queries.flatMap { case (qid, qv) =>
-      probeClusters(model, qv, nProbe).map(c => (qid, c, qv.map(_.toDouble)))
-    }.toDF("qid", "cluster", "qvec")
-    val joined = assigned.join(broadcast(probe), Seq("cluster"))
-      .withColumn("cosine",
-        Similarity.cosine(transform(col(vec), _.cast("double")), col("qvec")))
-    val w = Window.partitionBy("qid").orderBy(col("cosine").desc, col(id))
-    joined.withColumn("__rn", row_number().over(w)).filter(col("__rn") <= k)
-      .select(col("qid"), col(id), col("cosine"))
-  }
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (`array<float>`), for
@@ -107,50 +107,6 @@ object Similarity {
               bits: Int = 16, bands: Int = 4): DataFrame =
     annTopKSigned(signed(emb, vec, bits), query, k, id, vec, bits, bands)
 
-  /** Persist the RHP-LSH index PARTITIONED BY (band, bucket) — the 100 TB
-    * probe path (mirrors [[Ivf.buildIndex]]): each vector is written once
-    * per band under `band=<b>/bucket=<key>/`, so a probe is a
-    * partition-PRUNED read of exactly `bands` directories instead of a full
-    * scan of the signed table (the round-2 scale-killer on this operator).
-    * Storage is `bands`× the corpus — the standard LSH-index tradeoff;
-    * prefer [[Ivf]] when write amplification matters more than probe
-    * latency.
-    */
-  def buildAnnIndex(emb: DataFrame, path: String,
-                    id: String = "vec_id", vec: String = "embedding",
-                    bits: Int = 16, bands: Int = 4): Unit = {
-    signed(emb, vec, bits)
-      .select(col(id), col(vec),
-        posexplode(rhpBandKeys(col("__sig"), bits, bands)).as(Seq("band", "bucket")))
-      .write.mode("overwrite").partitionBy("band", "bucket").parquet(path)
-  }
-
-  /** Partition-pruned approximate top-k over a [[buildAnnIndex]] layout:
-    * reads only the `bands` (band, bucket) directories the query hashes
-    * into, dedupes candidates that collide in several bands, and rescores
-    * with exact cosine.
-    */
-  def annTopKIndexed(spark: SparkSession, indexPath: String, query: Seq[Float],
-                     k: Int, id: String = "vec_id", vec: String = "embedding",
-                     bits: Int = 16, bands: Int = 4): DataFrame = {
-    import spark.implicits._
-    val qDf = Seq(query.map(_.toDouble)).toDF("qv")
-    val qSig = qDf.select(rhpSignature(col("qv"), bits)).collect()(0).getLong(0)
-    val qBands = rhpBandKeysLocal(qSig, bits, bands)
-
-    val idx = spark.read.parquet(indexPath)
-    // disjunction of (band, bucket) literals → partition pruning at the scan
-    val cands = idx.filter(
-      (0 until bands).map(b =>
-        col("band") === b && col("bucket") === qBands(b)).reduce(_ || _))
-      .dropDuplicates(id)
-    val q = typedLit(query.map(_.toDouble))
-    cands.select(col(id),
-      cosine(transform(col(vec), _.cast("double")), q).as("cosine"))
-      .orderBy(col("cosine").desc, col(id))
-      .limit(k)
-  }
-
   /** Symmetric int8 quantization of an embedding column: per-vector scale
     * = max|x|/127, values round to [-127, 127] — 4× smaller storage/IO for
     * ANN candidate generation at 100 TB scale (rescore the survivors from
@@ -164,27 +120,6 @@ object Similarity {
       scale.cast("float").as("scale"),
       transform(vec, x =>
         round(x.cast("double") / safeScale).cast("tinyint")).as("q"))
-  }
-
-  /** Dequantized (approximate) vector from a [[quantizeInt8]] struct. */
-  def dequantizeInt8(qv: Column): Column =
-    transform(qv.getField("q"), x =>
-      x.cast("double") * qv.getField("scale").cast("double"))
-
-  /** Matryoshka truncation (Kusupati et al. 2022): the first `d`
-    * dimensions, L2-renormalized — the MRL serving trick: coarse ANN at
-    * d ≪ D over 1/Dth of the bytes, exact rescoring of survivors on the
-    * full vector. Row-local built-ins (codegen'd), zero-vector-safe. The
-    * norm is a per-row FP fold, so the ORACLE pins the int8-quantized twin
-    * of the same truncation (q_matryoshka: exact integer scale/q/normSq,
-    * the q_quantize_int8 discipline) and the spec pins these values
-    * against a driver reference.
-    */
-  def matryoshka(vec: Column, d: Int): Column = {
-    val s = slice(vec, 1, d)
-    val n = sqrt(aggregate(s, lit(0.0d),
-      (acc, x) => acc + x.cast("double") * x.cast("double")))
-    transform(s, x => when(n > 0.0d, x.cast("double") / n).otherwise(lit(0.0d)))
   }
 
   /** Quantize a float vector to exact longs (`round(x·scale)`), the

