@@ -1,63 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Multimodal-column plumbing: image/audio/video as opaque `binary` columns
-  * with typed metadata, plus decode / feature-extract / frame-sample
-  * operators.
-  *
-  * The actual codec work is STUBBED (this container ships no image/audio
-  * libraries): `decodeImage` parses a deterministic fake header instead of
-  * running a real decoder. Everything AROUND the stub is real and tested —
-  * the schema contract, the binary-column expressions, the partitioning, and
-  * the per-batch shape — so swapping in a real decoder is a drop-in
-  * replacement of one expression.
-  *
-  * Media row contract:
-  *   media(media_id string, media_type string in {image,audio,video},
-  *         payload binary, meta struct<width:int,height:int,sample_rate:int,
-  *         n_frames:int, codec:string>)
+/** Multimodal-column metadata: image/audio/video as opaque `binary`
+  * columns, read without a codec library — magic numbers and header
+  * fields are plain bytes. Every operator is a row-local, shuffle-free
+  * Column expression (codegen'd built-ins or a native bounded walk).
   */
 object Multimodal {
-
-  /** Synthesize a deterministic fake media table from ids — payload bytes
-    * are a 16-byte "header" (md5 of the id) followed by repeated content
-    * blocks; the header encodes the fake width/height/etc so decode is
-    * self-consistent.
-    */
-  def fakeMedia(df: DataFrame, id: String = "doc_id"): DataFrame = {
-    val mtype = element_at(typedLit(Seq("image", "audio", "video")),
-      (pmod(xxhash64(col(id)), lit(3)) + 1).cast("int"))
-    df.select(
-      col(id).cast("string").as("media_id"),
-      mtype.as("media_type"),
-      // header = md5(id) bytes; body = header repeated 4x
-      unhex(concat(md5(col(id).cast("string")),
-        md5(col(id).cast("string")), md5(col(id).cast("string")),
-        md5(col(id).cast("string")), md5(col(id).cast("string")))).as("payload"))
-  }
-
-  /** STUB decode: read "metadata" out of the fake header (first bytes of
-    * the payload). A real implementation replaces exactly this expression
-    * with a codec call; shape and nullability stay identical.
-    */
-  def decodeImage(payload: Column): Column = struct(
-    (conv(hex(substring(payload, 1, 2)), 16, 10).cast("int") % 4096).as("width"),
-    (conv(hex(substring(payload, 3, 2)), 16, 10).cast("int") % 4096).as("height"),
-    (conv(hex(substring(payload, 5, 2)), 16, 10).cast("int") % 48000).as("sample_rate"),
-    (conv(hex(substring(payload, 7, 1)), 16, 10).cast("int") % 120 + 1).as("n_frames"),
-    lit("stub/v1").as("codec"))
-
-  /** Media table with decoded metadata attached. */
-  def withMeta(media: DataFrame): DataFrame =
-    media.withColumn("meta", decodeImage(col("payload")))
-
-  // ------------------------------------------------------------------
-  // REAL container-format metadata — no codec library required: magic
-  // numbers and fixed-offset dimension fields are plain bytes. Only PIXEL
-  // decode stays behind the codec seam above.
-  // ------------------------------------------------------------------
 
   /** Big-endian unsigned 32-bit int at 1-based byte offset `off`. Slices
     * the 4 BYTES first, then hexes — only header bytes are ever converted,
@@ -206,26 +157,4 @@ object Multimodal {
       .otherwise(lit(null)
         .cast("struct<id3_size:bigint,bitrate_kbps:bigint,sample_rate:bigint>"))
   }
-
-  /** Frame sampling: n evenly spaced fixed-size byte windows from the
-    * payload — the batch-shape contract a real video sampler would follow
-    * (array<binary> out, row-local, no shuffle).
-    */
-  def frameSample(payload: Column, n: Int, frameBytes: Int = 8): Column =
-    transform(sequence(lit(0), lit(n - 1)), i =>
-      substring_index_bin(payload, i, n, frameBytes))
-
-  private def substring_index_bin(payload: Column, i: Column, n: Int, frameBytes: Int): Column = {
-    val start = (length(payload) - frameBytes) * i / (n - 1) + 1
-    payload.substr(start.cast("int"), lit(frameBytes))
-  }
-
-  /** Partition media by type + size band — the layout a 100 TB media lake
-    * wants (decode cost is type- and size-correlated, so batches stay
-    * homogeneous).
-    */
-  def partitionForDecode(media: DataFrame, partitions: Int): DataFrame =
-    media.withColumn("size_band",
-      (log2(length(col("payload")).cast("double") + 1.0)).cast("int"))
-      .repartition(partitions, col("media_type"), col("size_band"))
 }

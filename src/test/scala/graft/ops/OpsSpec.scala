@@ -102,29 +102,6 @@ class OpsSpec extends SparkTestBase {
     assert(r.getAs[Double]("q") == 1.0)
   }
 
-  test("multimodal: fake media plumbing — schema, decode stub, frame sampling") {
-    val session = spark
-    import session.implicits._
-    val docs = (0L until 50L).toDF("doc_id")
-    val media = Multimodal.withMeta(Multimodal.fakeMedia(docs))
-    assert(media.schema.fieldNames.toSet == Set("media_id", "media_type", "payload", "meta"))
-    val row = media.filter(col("media_id") === "7").collect()(0)
-    assert(Set("image", "audio", "video").contains(row.getAs[String]("media_type")))
-    val meta = row.getStruct(3)
-    assert(meta.getAs[Int]("width") > 0 && meta.getAs[Int]("width") < 4096)
-    // deterministic: same id → same payload+meta
-    val again = Multimodal.withMeta(Multimodal.fakeMedia(docs))
-      .filter(col("media_id") === "7").collect()(0)
-    assert(java.util.Arrays.equals(row.getAs[Array[Byte]]("payload"), again.getAs[Array[Byte]]("payload")))
-
-    val frames = media.select(Multimodal.frameSample(col("payload"), 4).as("f"))
-      .collect()(0).getSeq[Array[Byte]](0)
-    assert(frames.length == 4 && frames.forall(_.length == 8))
-
-    val parts = Multimodal.partitionForDecode(media, 6).rdd.getNumPartitions
-    assert(parts == 6)
-  }
-
   test("ops run over the real driver documents/embeddings tables") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val withLang = docs.select(TextAnalysis.langId(col("text")).as("lid")).groupBy("lid").count()
