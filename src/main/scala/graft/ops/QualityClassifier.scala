@@ -88,29 +88,6 @@ object QualityClassifier {
         sum(coalesce(col("weight"), lit(0L))).as("score"))
       .withColumn("pred", col("score") > 0)
 
-  /** A trained model as a driver-side map — bounded by D rows (64 by
-    * default), the one legal collect in this family; feeds [[scoreLocal]].
-    */
-  def modelToMap(model: DataFrame): Map[Long, Long] =
-    model.select(col("bucket"), col("weight")).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-
-  /** Row-local scorer: the model embedded as a literal map, the per-doc
-    * sum folded over the token array in-row — NO shuffle and NO
-    * aggregation, so it is append-legal in Structured Streaming and the
-    * right shape for scoring docs on ingestion. Returns the score column;
-    * parity with [[score]] is spec-asserted. (HOF fold — interpreted, but
-    * over one doc's token array; the batch path for full-corpus scoring
-    * stays [[score]].)
-    */
-  def scoreLocal(text: Column, model: Map[Long, Long], d: Int): Column = {
-    val toks = filter(split(TextAnalysis.canonicalText(text), " "),
-      t => t =!= "")
-    val weights = if (model.isEmpty) typedLit(Map(0L -> 0L)) else typedLit(model)
-    aggregate(toks, lit(0L),
-      (acc, t) => acc + coalesce(element_at(weights, hashBucket(t, d)), lit(0L)))
-  }
-
   /** Confusion matrix of predictions against a boolean label column on a
     * held-out slice — the evaluate-before-deploy stage. ONE groupBy over
     * the scored frame; exact integer counts, so the whole evaluation is

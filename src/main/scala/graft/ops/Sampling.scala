@@ -11,13 +11,9 @@ import org.apache.spark.sql.functions._
   * and (b) cheap: a row-local filter with no shuffle, which also pushes
   * into the scan when the key is a partition/bucket column.
   *
-  * Two variants:
-  *  - [[md5Sample]]: bucket = first two hex chars of md5(key) — md5 hex is
-  *    byte-identical across Spark/DuckDB/Trino/Python, so the sample is
-  *    cross-engine reproducible (the oracle checks THIS exact operator);
-  *  - [[hashSample]]: xxhash64-based — ~10× cheaper per row (no digest
-  *    materialization), Spark-reproducible only; the production default
-  *    when no cross-engine contract is needed.
+  * [[md5Sample]]: bucket = first two hex chars of md5(key) — md5 hex is
+  * byte-identical across Spark/DuckDB/Trino/Python, so the sample is
+  * cross-engine reproducible (the oracle checks THIS exact operator).
   */
 object Sampling {
 
@@ -88,18 +84,6 @@ object Sampling {
       else md5Bucket(col(group)) < lit(f"$heldout256%02x")
     df.withColumn(splitCol, when(heldout, "heldout").otherwise("train"))
   }
-
-  /** xxhash64 variant: keep rows with pmod(xxhash64(key, salt), den) < num.
-    * `salt` is NOT an xxhash64 seed — Spark's `xxhash64(cols...)` hashes
-    * with a fixed internal seed, and the literal is simply hashed as an
-    * extra column (round-3 advice). It still selects a disjoint sample per
-    * salt value, but reproducing the selection in another engine requires
-    * Spark's exact multi-column xxhash64 chain, not a seeded xxhash64 —
-    * use [[md5Sample]] when a cross-engine contract is needed.
-    */
-  def hashSample(df: DataFrame, key: String, num: Int, den: Int = 10000,
-                 salt: Int = 42): DataFrame =
-    df.filter(pmod(xxhash64(col(key), lit(salt)), lit(den)) < num)
 
   /** Efraimidis–Spirakis A-ES priority key for weighted sampling without
     * replacement: u^(1/w), u = the md5-derived uniform of the key (first 12

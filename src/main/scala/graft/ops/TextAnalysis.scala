@@ -310,18 +310,6 @@ object TextAnalysis {
   def vowelGroupCount(text: Column): Column =
     size(regexp_extract_all(lower(text), lit("[aeiouy]+"), lit(0)))
 
-  /** Flesch reading ease from the three exact integer components —
-    * `206.835 − 1.015·(words/sentences) − 84.6·(syllables/words)`.
-    * Pure row-local FP on integers the q_readability oracle pins
-    * cross-engine; zero-denominator docs score null.
-    */
-  def fleschReadingEase(nWords: Column, nSentences: Column,
-                        nSyllables: Column): Column =
-    when(nWords > 0 && nSentences > 0,
-      lit(206.835) - lit(1.015) * (nWords.cast("double") / nSentences)
-        - lit(84.6) * (nSyllables.cast("double") / nWords))
-      .otherwise(lit(null).cast("double"))
-
   // ------------------------------------------------------------------
   // encoding hygiene (NFC + control-char scrub)
   // ------------------------------------------------------------------

@@ -84,8 +84,7 @@ object UrlOps {
     * for ccTLD hosts. The snapshot covers the second-level registries of
     * the major crawled ccTLDs; a deployment carrying the FULL list swaps
     * it in via the `twoPartSuffixes` parameter (a few thousand strings —
-    * still literal-sized) or the [[withRegistrableDomain]] broadcast-table
-    * seam.
+    * still literal-sized).
     */
   val TwoPartSuffixes: Seq[String] = Seq(
     // UK
@@ -141,7 +140,7 @@ object UrlOps {
     * public suffix, NOT a registrable domain). A host that IS a suffix (or
     * has ≤ 2 labels) returns itself. The suffix set rides in the plan as a
     * literal array (`array_contains` — codegen'd, row-local, effectively a
-    * broadcast); for the full PSL use [[withRegistrableDomain]].
+    * broadcast).
     */
   def registrableDomain(host: Column,
                         twoPartSuffixes: Seq[String] = TwoPartSuffixes): Column = {
@@ -153,33 +152,6 @@ object UrlOps {
       .otherwise(last2)
   }
 
-  /** Broadcast-table seam for the FULL public-suffix list: joins the
-    * mentions frame's last-two-label candidate against a one-column
-    * (`suffix`) frame of two-part public suffixes and rewrites `domain` —
-    * semantically identical to [[registrableDomain]] with the same suffix
-    * set (parity-asserted in UrlOpsSpec), but the list lives in a
-    * broadcast relation instead of a plan literal, the right shape when
-    * the list is tens of thousands of rows or ships from a table.
-    */
-  def withRegistrableDomain(mentions: DataFrame, suffixes: DataFrame,
-                            host: String = "host"): DataFrame = {
-    val parts = split(col(host), "\\.")
-    // guarded: unlike the when()-chain in registrableDomain, this column is
-    // materialized unconditionally as the join key, and element_at(-2)
-    // THROWS (ANSI) on a single-label host rather than returning null
-    val last2 = when(size(parts) >= 2,
-      concat_ws(".", element_at(parts, -2), element_at(parts, -1)))
-    mentions.withColumn("__last2", last2)
-      .join(broadcast(suffixes.select(col("suffix").as("__last2"),
-        lit(true).as("__is_suffix"))), Seq("__last2"), "left")
-      .withColumn("domain",
-        when(size(parts) <= 2, col(host))
-          .when(col("__is_suffix"),
-            concat_ws(".", element_at(parts, -3), col("__last2")))
-          .otherwise(col("__last2")))
-      .drop("__last2", "__is_suffix")
-  }
-
   /** (id, url, host, domain) — one row per URL mention, document order
     * preserved by `url_idx`. One row-local regex pass, then posexplode.
     */
@@ -189,24 +161,11 @@ object UrlOps {
       .withColumn("host", hostOf(col("url")))
       .withColumn("domain", registrableDomain(col("host")))
 
-  /** (domain, n_mentions, n_docs) — corpus-level domain profile: how much
-    * of the corpus links where. One exchange (groupBy domain) with
-    * map-side combine; `n_docs` is exact-distinct (a second agg over the
-    * same exchange, not a second shuffle).
-    */
-  def domainProfile(docs: DataFrame, id: String = "doc_id",
-                    text: String = "text"): DataFrame =
-    urlMentions(docs, id, text)
-      .groupBy(col("domain"))
-      .agg(count(lit(1)).as("n_mentions"),
-        countDistinct(col(id)).as("n_docs"))
-
   /** Domain-diversity cap (the RefinedWeb-style guard against one domain
     * flooding the corpus): keep at most `k` docs per registrable domain —
     * deterministically the lowest doc ids — where a doc's domain is that
     * of its FIRST URL mention. Docs with no URL mentions pass untouched.
-    * Requires a long-castable id (crawl doc ids are integers here; for
-    * opaque string ids use [[capPerDomainViaWindow]]).
+    * Requires a long-castable id (crawl doc ids are integers here).
     *
     * Scale shape — skew-immune: registrable domains are the canonical hot
     * key (wordpress.com), and a window rank would sort a mega-domain's
@@ -217,7 +176,8 @@ object UrlOps {
     * state is ≤ k longs, and no per-domain sort of the full row set exists
     * anywhere in the plan (plan-asserted: no WindowExec). Losers (over-cap
     * docs) and the final filter join on the UNIQUE doc id — skew-free by
-    * construction. Parity with the window form asserted in UrlOpsSpec.
+    * construction. Parity with a window-rank reference asserted in
+    * UrlOpsSpec.
     */
   def capPerDomain(docs: DataFrame, k: Int, id: String = "doc_id",
                    text: String = "text"): DataFrame = {
@@ -229,23 +189,6 @@ object UrlOps {
     val losers = dom.select(col(id).cast("long").as(id))
       .join(winners, Seq(id), "left_anti")
     docs.join(losers, docs(id).cast("long") === losers(id), "left_anti")
-  }
-
-  /** The window-rank form of [[capPerDomain]]: identical semantics for any
-    * orderable id type, but the per-domain `row_number` sort runs in one
-    * task per domain — fine below heavy-hitter scale or for string ids;
-    * the aggregate form is the 100 TB path.
-    */
-  def capPerDomainViaWindow(docs: DataFrame, k: Int, id: String = "doc_id",
-                            text: String = "text"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val dom = urlMentions(docs, id, text)
-      .filter(col("url_idx") === 0).select(col(id), col("domain"))
-    val ranked = dom.withColumn("rk",
-      row_number().over(Window.partitionBy(col("domain")).orderBy(col(id))))
-    docs.join(ranked.select(col(id), col("rk")), Seq(id), "left")
-      .filter(col("rk").isNull || col("rk") <= k)
-      .drop("rk")
   }
 
   /** Documents whose text mentions NO blocklisted domain. `blocklist` is a

@@ -175,7 +175,7 @@ class EncodingHygieneSpec extends SparkTestBase {
     assert(got(4).getString(5) == "none" && got(4).getLong(4) == 10L)
   }
 
-  test("readability: vowel groups, words, sentences, Flesch on hand-counted prose") {
+  test("readability: vowel groups, words, sentences on hand-counted prose") {
     val session = spark
     import session.implicits._
     // "The cat sat. It purred!" -> words 5, sentences 2,
@@ -184,13 +184,9 @@ class EncodingHygieneSpec extends SparkTestBase {
       .select(TextAnalysis.tokenCount(col("t")).as("w"),
         size(TextAnalysis.sentenceArray(col("t"))).as("s"),
         TextAnalysis.vowelGroupCount(col("t")).as("v"))
-      .withColumn("f", TextAnalysis.fleschReadingEase(col("w"), col("s"), col("v")))
     val rows = df.collect()
     assert((rows(0).getInt(0), rows(0).getInt(1), rows(0).getInt(2)) == ((5, 2, 6)),
       rows(0).toString)
-    val exp = 206.835 - 1.015 * (5.0 / 2.0) - 84.6 * (6.0 / 5.0)
-    assert(rows(0).getDouble(3) == exp, s"${rows(0).getDouble(3)} != $exp")
-    assert(rows(1).isNullAt(3), "empty doc must score null")
   }
 
   test("nfc: non-string input rejected at analysis time, not with a runtime ClassCastException") {

@@ -171,10 +171,6 @@ class PipelineOpsSpec extends SparkTestBase {
     // buckets nest: a smaller sample is a subset of a larger one
     val small = Sampling.md5Sample(df, "doc_id", 13).collect().map(_.getLong(0)).toSet
     assert(small.subsetOf(a))
-    // xxhash variant: deterministic and roughly calibrated too
-    val h = Sampling.hashSample(df, "doc_id", 1000).collect().map(_.getLong(0)).toSet
-    assert(math.abs(h.size / 10000.0 - 0.1) < 0.02)
-    assert(Sampling.hashSample(df, "doc_id", 1000).count() == h.size)
   }
 
   test("stratified md5 sampling: per-stratum fractions, nested, 256 = keep-all") {

@@ -81,26 +81,6 @@ class QualityClassifierSpec extends SparkTestBase {
     assert(plan.contains("BroadcastHashJoin"), s"model join not broadcast:\n$plan")
   }
 
-  test("scoreLocal: row-local fold equals the shuffle scorer, zero for unseen buckets and empty model") {
-    val session = spark
-    import session.implicits._
-    val model = Seq(refBucket("good", 64) -> 5L, refBucket("spam", 64) -> -3L)
-      .toDF("bucket", "weight")
-    val modelMap = QualityClassifier.modelToMap(model)
-    val docs = Seq((1L, "good good unseen"), (2L, "spam good"), (3L, "unseen unseen"))
-      .toDF("doc_id", "text")
-    val local = docs.select(col("doc_id"),
-        QualityClassifier.scoreLocal(col("text"), modelMap, 64).as("score"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val dist = QualityClassifier.score(docs, model, 64)
-      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-    assert(local == dist, s"local=$local dist=$dist")
-    val empty = docs.select(
-        QualityClassifier.scoreLocal(col("text"), Map.empty, 64).as("s"))
-      .collect().map(_.getLong(0)).toSeq
-    assert(empty == Seq(0L, 0L, 0L), s"empty-model scores: $empty")
-  }
-
   test("confusion: exact quadrant counts on a hand-built scored frame") {
     val session = spark
     import session.implicits._

@@ -63,36 +63,6 @@ class UrlOpsSpec extends SparkTestBase {
     assert(got("www.bbc.co.uk") != got("spam.co.uk"))
   }
 
-  test("withRegistrableDomain (broadcast suffix table) matches the literal-set rule on every host shape") {
-    val session = spark
-    import session.implicits._
-    val docs = Seq(
-      (1L, "https://www.bbc.co.uk/news https://spam.co.uk/x"),
-      (2L, "http://a.b.shop.com.au/p and https://deep.sub.example.com/q"),
-      (3L, "http://single/x http://co.uk/y")).toDF("doc_id", "text")
-    val viaLiteral = UrlOps.urlMentions(docs)
-      .select("doc_id", "url_idx", "domain").collect()
-      .map(r => (r.getLong(0), r.getInt(1)) -> r.getString(2)).toMap
-    val suffixes = UrlOps.TwoPartSuffixes.toDF("suffix")
-    val viaTable = UrlOps.withRegistrableDomain(
-        UrlOps.urlMentions(docs).drop("domain"), suffixes)
-      .select("doc_id", "url_idx", "domain").collect()
-      .map(r => (r.getLong(0), r.getInt(1)) -> r.getString(2)).toMap
-    assert(viaTable == viaLiteral, s"table=$viaTable literal=$viaLiteral")
-    assert(viaLiteral((1L, 0)) == "bbc.co.uk" && viaLiteral((1L, 1)) == "spam.co.uk")
-  }
-
-  test("domainProfile: exact mention and distinct-doc counts per domain") {
-    val session = spark
-    import session.implicits._
-    val docs = Seq(
-      (1L, "https://a.x.com/1 https://b.x.com/2"),
-      (2L, "https://c.x.com/3 and http://y.org/z")).toDF("doc_id", "text")
-    val p = UrlOps.domainProfile(docs).collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-    assert(p == Map("x.com" -> (3L, 2L), "y.org" -> (1L, 1L)), s"got $p")
-  }
-
   test("canonicalizeUrl: case, fragments, default ports, bare root; non-defaults preserved") {
     val session = spark
     import session.implicits._
@@ -169,7 +139,13 @@ class UrlOpsSpec extends SparkTestBase {
       .toDF("doc_id", "text").repartition(16)
     val viaAgg = UrlOps.capPerDomain(docs, k = 7)
       .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-    val viaWin = UrlOps.capPerDomainViaWindow(docs, k = 7)
+    // window-rank reference: the k lowest ids per first-mention domain
+    val dom = UrlOps.urlMentions(docs).filter(col("url_idx") === 0)
+      .select(col("doc_id"), col("domain"))
+    val ranked = dom.withColumn("rk", row_number().over(
+      org.apache.spark.sql.expressions.Window.partitionBy(col("domain")).orderBy(col("doc_id"))))
+    val viaWin = docs.join(ranked.select(col("doc_id"), col("rk")), Seq("doc_id"), "left")
+      .filter(col("rk").isNull || col("rk") <= 7)
       .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
     assert(viaAgg == viaWin, s"agg=$viaAgg win=$viaWin")
     // hot.com capped to its 7 lowest ids; every 1-doc shopN.co.uk survives
