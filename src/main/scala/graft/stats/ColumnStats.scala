@@ -422,16 +422,6 @@ object DriftStats {
   def sketchOf(bytes: Array[Byte]): KllDoublesSketch =
     KllDoublesSketch.heapify(Memory.wrap(bytes))
 
-  /** Driver-side merge of serialized sketch blobs (a handful of stored
-    * baselines) — the distributed form is [[KllMergeAgg.kll_merge]] over a
-    * profile table's sketch column. Null/empty blobs are skipped.
-    */
-  def mergeSketches(blobs: Seq[Array[Byte]], k: Int = 200): Array[Byte] = {
-    val acc = KllDoublesSketch.newHeapInstance(k)
-    blobs.foreach(b => if (b != null && b.nonEmpty) acc.merge(sketchOf(b)))
-    acc.toByteArray
-  }
-
   /** PER-SOURCE merged drift baselines: merge each source's stored sketch
     * blobs (daily/per-partition profile rows) into one baseline sketch per
     * source — the grouped composition of [[KllMergeAgg.kll_merge]], and
@@ -447,35 +437,6 @@ object DriftStats {
                               kll: String = "kll", k: Int = 200): DataFrame =
     daily.groupBy(col(source))
       .agg(KllMergeAgg.kll_merge(col(kll), k).as("kll"))
-
-  /** Per-source drift verdicts against per-source merged baselines: KS
-    * statistic of each source's CURRENT sketch vs its merged-history
-    * baseline, plus the exact merged n/min/max. Both inputs are
-    * (source, kll) frames; the join is group-count-sized (broadcast). A
-    * source present on only one side surfaces with a NULL partner and
-    * ks = 1.0 — a brand-new or vanished source IS the alarm condition.
-    */
-  def driftBySource(current: DataFrame, baselines: DataFrame,
-                    source: String = "source",
-                    gridSize: Int = 201): DataFrame = {
-    val spark = current.sparkSession
-    import org.apache.spark.sql.functions.broadcast
-    val joined = current.select(col(source).as("source"), col("kll").as("__cur"))
-      .join(broadcast(baselines.select(col(source).as("source"), col("kll").as("__base"))),
-        Seq("source"), "full_outer")
-      .collect() // group-count-sized: one row per source
-    val rows = joined.map { r =>
-      val src = r.getString(0)
-      val cur = if (r.isNullAt(1)) null else r.getAs[Array[Byte]](1)
-      val base = if (r.isNullAt(2)) null else r.getAs[Array[Byte]](2)
-      val ks = if (cur == null || base == null) 1.0 else ksStatistic(cur, base, gridSize)
-      val sk = sketchOf(if (base != null) base else cur)
-      (src, ks, sk.getN, if (sk.isEmpty) 0.0 else sk.getMinItem,
-        if (sk.isEmpty) 0.0 else sk.getMaxItem)
-    }
-    import spark.implicits._
-    rows.toSeq.toDF("source", "ks", "base_n", "base_min", "base_max")
-  }
 
   /** Two-sample Kolmogorov-Smirnov statistic: sup |F1(x) - F2(x)| evaluated
     * on the union of both sketches' quantile grids.

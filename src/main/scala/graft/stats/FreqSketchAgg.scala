@@ -190,24 +190,4 @@ object FreqStats {
     import spark.implicits._
     out.toDF("group", "item", "n_prev", "n_cur", "delta", "exact")
   }
-
-  /** Heavy hitters of `colName` via ONE sketch aggregate (single scan,
-    * bounded state): (item, estimate, lb, ub, exact) under
-    * NO_FALSE_NEGATIVES — every item whose true count exceeds the sketch's
-    * max error is present; `exact` is true iff the sketch never purged
-    * (max error 0), in which case estimate IS the true count. The result
-    * is a driver-built frame of at most `maxMapSize` rows.
-    */
-  def heavyHitters(df: DataFrame, colName: String,
-                   maxMapSize: Int = 1024): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val bytes = df.agg(FreqSketchAgg.freq_sketch(col(colName), maxMapSize))
-      .collect()(0).getAs[Array[Byte]](0)
-    val sk = sketchOf(bytes)
-    val exact = sk.getMaximumError == 0L
-    sk.getFrequentItems(ErrorType.NO_FALSE_NEGATIVES).toSeq
-      .map(r => (r.getItem, r.getEstimate, r.getLowerBound, r.getUpperBound, exact))
-      .toDF("item", "estimate", "lb", "ub", "exact")
-  }
 }

@@ -94,46 +94,6 @@ object Suggest {
     out.toDF("column", "kind", "detail")
   }
 
-  /** Constraint suggestions from a STORED merged profile
-    * ([[ColumnStats.mergeProfiles]] output) — ZERO corpus scans: the
-    * profile rows already carry everything `not_null` and `range` need
-    * exactly (exact null counts, typed min/max channels), and `unique`
-    * as an HLL judgement (`distinct_est == n`, emitted only with
-    * `approxUnique = true` since the estimate can collide at the
-    * boundary — same caveat as [[suggestConstraints]]'s approx mode).
-    * `is_in` needs the bounded value SET, which the profile does not
-    * store — mine it with [[suggestConstraints]] when enumerations
-    * matter. Suggestions feed [[verifyConstraints]] unchanged, so the
-    * suggest→verify loop can run entirely from yesterday's stored rows
-    * and verify on today's corpus in its single wide scan.
-    */
-  def suggestFromProfile(profile: DataFrame,
-                         approxUnique: Boolean = false): DataFrame = {
-    val spark = profile.sparkSession
-    val rows = profile
-      .select("column", "n", "nulls", "min_d", "max_d", "distinct_est")
-      .collect() // #columns rows — a report, not data
-    val out = rows.toSeq.flatMap { r =>
-      val (name, n, nulls) = (r.getString(0), r.getLong(1), r.getLong(2))
-      val notNull = if (n > 0 && nulls == 0L) Seq((name, "not_null", "")) else Nil
-      val unique =
-        if (approxUnique && n > 0 && r.getLong(5) == n)
-          Seq((name, "unique", "")) else Nil
-      val range =
-        if (n > 0 && !r.isNullAt(3))
-          // trim the double form so integral bounds read "0" not "0.0",
-          // matching the corpus-side detail format
-          Seq((name, "range", s"[${fmt(r.getDouble(3))},${fmt(r.getDouble(4))}]"))
-        else Nil
-      notNull ++ unique ++ range
-    }
-    import spark.implicits._
-    out.toDF("column", "kind", "detail")
-  }
-
-  private def fmt(d: Double): String =
-    if (d == math.rint(d) && !d.isInfinite) d.toLong.toString else d.toString
-
   /** The ONE wide verification aggregate plus, for each approx-unique
     * constraint index, the name of its row-count slack leg.
     */
@@ -173,15 +133,6 @@ object Suggest {
     }
     (df.agg(aggs.head, aggs.tail: _*), uniqueCounts.toMap)
   }
-
-  /** Executed-plan string of the verification aggregate (for plan audits:
-    * the approx form must not plan an Expand).
-    */
-  def verifyPlan(df: DataFrame, constraints: Seq[(String, String, String)],
-                 approxUnique: Boolean = false,
-                 uniqueRsd: Double = 0.01): String =
-    verifyAgg(df, constraints, approxUnique, uniqueRsd)
-      ._1.queryExecution.executedPlan.toString
 
   /** Verify declared (or [[suggestConstraints]]-suggested) constraints
     * against a frame — the closing half of the suggest→verify loop, and

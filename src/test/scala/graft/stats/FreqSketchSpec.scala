@@ -2,6 +2,7 @@ package graft.stats
 
 import graft.SparkTestBase
 import org.apache.datasketches.frequencies.ErrorType
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Frequent-items sketch: exact in the under-capacity regime, guaranteed
@@ -10,16 +11,28 @@ import org.apache.spark.sql.functions._
   */
 class FreqSketchSpec extends SparkTestBase {
 
+  /** (item, estimate, lb, ub, exact) of one sketch over `colName`, under
+    * NO_FALSE_NEGATIVES; `exact` iff the sketch never purged.
+    */
+  private def heavyHitters(df: DataFrame, colName: String, maxMapSize: Int)
+      : Seq[(String, Long, Long, Long, Boolean)] = {
+    val sk = FreqStats.sketchOf(df.agg(FreqSketchAgg.freq_sketch(col(colName), maxMapSize))
+      .collect()(0).getAs[Array[Byte]](0))
+    val exact = sk.getMaximumError == 0L
+    sk.getFrequentItems(ErrorType.NO_FALSE_NEGATIVES).toSeq
+      .map(r => (r.getItem, r.getEstimate, r.getLowerBound, r.getUpperBound, exact))
+  }
+
   test("under capacity the sketch is exact and matches groupBy counts") {
     val df = spark.range(100000)
       .select((col("id") % 5).as("day"),
         concat(lit("item"), (col("id") % 50).cast("string")).as("item"))
     val truth = df.groupBy("item").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val hh = FreqStats.heavyHitters(df, "item", maxMapSize = 256).collect()
-    assert(hh.forall(_.getBoolean(4)), "expected exact regime (no purge)")
-    assert(hh.map(r => r.getString(0) -> r.getLong(1)).toMap == truth)
-    assert(hh.forall(r => r.getLong(2) == r.getLong(1) && r.getLong(3) == r.getLong(1)))
+    val hh = heavyHitters(df, "item", maxMapSize = 256)
+    assert(hh.forall(_._5), "expected exact regime (no purge)")
+    assert(hh.map(r => r._1 -> r._2).toMap == truth)
+    assert(hh.forall(r => r._3 == r._2 && r._4 == r._2))
   }
 
   test("per-day sketch blobs merge to the whole-corpus answer without rescanning") {
@@ -107,7 +120,7 @@ class FreqSketchSpec extends SparkTestBase {
     val df = spark.range(1000).select(
       when(col("id") % 4 === 0, lit(null))
         .otherwise(concat(lit("i"), (col("id") % 3).cast("string"))).as("item"))
-    val hh = FreqStats.heavyHitters(df, "item", 64).collect()
-    assert(hh.map(_.getLong(1)).sum == 750L)
+    val hh = heavyHitters(df, "item", 64)
+    assert(hh.map(_._2).sum == 750L)
   }
 }

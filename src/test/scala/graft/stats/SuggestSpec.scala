@@ -142,36 +142,6 @@ class SuggestSpec extends SparkTestBase {
     assert(appr == exact)
   }
 
-  test("suggestFromProfile: zero-scan suggestions from stored rows match the corpus-side rules") {
-    val session = spark
-    import session.implicits._
-    val df = session.range(50000).select(
-      col("id").as("k"),
-      when(col("id") % 9 === 0, lit(null)).otherwise(col("id") % 100).as("v"),
-      concat(lit("s"), (col("id") % 7).cast("string")).as("s")).toDF()
-    val profile = ColumnStats.mergeProfiles(
-      ColumnStats.mergeableProfile(df.withColumn("part", col("k") % 4),
-        "part", Seq("k", "v", "s")))
-    val got = Suggest.suggestFromProfile(profile, approxUnique = true)
-      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
-    // not_null: k and s (v has planted nulls); unique: k (HLL exact at
-    // this cardinality? 50k -> estimate; require the rule fired for the
-    // truly-unique column and not for the 100-value one)
-    assert(got.contains(("k", "not_null", "")) && got.contains(("s", "not_null", "")))
-    assert(!got.exists(t => t._1 == "v" && t._2 == "not_null"))
-    assert(!got.exists(t => t._1 == "v" && t._2 == "unique"))
-    assert(!got.exists(t => t._1 == "s" && t._2 == "unique"))
-    // range details carry the exact typed min/max in corpus-side format
-    assert(got.contains(("k", "range", "[0,49999]")), got.toString)
-    assert(got.contains(("v", "range", "[0,99]")))
-    assert(!got.exists(t => t._1 == "s" && t._2 == "range"))
-    // the stored-profile suggestions verify clean against the corpus in
-    // one wide scan (suggest->verify entirely from yesterday's rows)
-    val verified = Suggest.verifyConstraints(df,
-      got.toSeq.filter(t => t._2 == "not_null" || t._2 == "range").sorted)
-    assert(verified.collect().forall(_.getString(4) == "pass"))
-  }
-
   test("approxUnique: sketch-sized unique check passes truly-unique keys and fails real duplication") {
     val session = spark
     import session.implicits._
@@ -193,9 +163,23 @@ class SuggestSpec extends SparkTestBase {
     // the scale signature: exact count-distinct re-aggregates on the KEY
     // (a full shuffle of every distinct value); the approx form shuffles
     // only fixed-size sketch states — no hashpartitioning on the column
-    val approxPlan = Suggest.verifyPlan(dup, Seq(("k", "unique", "")),
-      approxUnique = true)
-    val exactPlan = Suggest.verifyPlan(dup, Seq(("k", "unique", "")))
+    def verifyPlan(approxUnique: Boolean): String = {
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                               ns: Long): Unit = plans.add(qe.executedPlan.toString)
+        override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                               e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        Suggest.verifyConstraints(dup, Seq(("k", "unique", "")), approxUnique).collect()
+        org.apache.spark.sql.graft.shims.waitForListeners(spark)
+      } finally spark.listenerManager.unregister(listener)
+      plans.toArray.mkString("\n")
+    }
+    val approxPlan = verifyPlan(approxUnique = true)
+    val exactPlan = verifyPlan(approxUnique = false)
     assert(!approxPlan.contains("hashpartitioning(k"), approxPlan)
     assert(exactPlan.contains("hashpartitioning(k"), exactPlan)
   }
