@@ -200,7 +200,8 @@ object Pipeline {
     * over the added/changed slice ∪ `prevCore`'s rows of unchanged docs —
     * without the corpus checks [[violationsDelta]] adds around it: a caller
     * that caches the core before composing the violations (the app) builds
-    * the composition once, over the cached core. The diff frame is
+    * the composition once, over the cached core (a coalesce is its root,
+    * so the composition's union reads the cache). The diff frame is
     * localCheckpoint-materialized when not given — it is consumed twice
     * (dirty and unchanged slices), and it is doc_id+status-sized.
     */
@@ -232,7 +233,10 @@ object Pipeline {
     val unchanged = diff.filter(col("status") === "unchanged")
       .select(col("doc_id").cast("string").as("docId"))
     val carried = prevCore.join(unchanged, Seq("docId"), "left_semi")
-    freshCore.unionByName(carried)
+    // coalesced, so the root is not a Union: `unionByName` flattens nested
+    // unions, and a cached Union root would then never match inside the
+    // composed violations union — the composition would recompute the core
+    coalescedUnion(spark, Seq(freshCore, carried))
   }
 
   /** Full violations assembled around an ALREADY-COMPUTED (typically
