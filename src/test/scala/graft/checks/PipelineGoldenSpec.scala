@@ -200,7 +200,7 @@ class PipelineGoldenSpec extends SparkTestBase {
   }
 
   test("manifest resume: completed buckets are skipped") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-manifest").toString
+    val tmp = tempDir("graft-manifest").toString
     val m = new Manifest(s"$tmp/manifest.jsonl")
     val docs = Pipeline.withBucket(DocGen.documents(spark, 1000L).toDF(), 8)
     val allBuckets = docs.select("bucket").distinct().collect().map(_.getInt(0))
@@ -217,7 +217,7 @@ class PipelineGoldenSpec extends SparkTestBase {
   }
 
   test("span-sequence invariant survives parquet round-trip (zip_with equality)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-docs").toString
+    val tmp = tempDir("graft-docs").toString
     val docs = DocGen.documents(spark, 1000L).toDF()
     docs.write.mode("overwrite").parquet(s"$tmp/docs")
     val back = spark.read.parquet(s"$tmp/docs")

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
 class PlanShapeSpec extends SparkTestBase {
 
   private lazy val docsPath = {
-    val p = java.nio.file.Files.createTempDirectory("graft-plan").toString + "/docs"
+    val p = tempDir("graft-plan").toString + "/docs"
     DocGen.documents(spark, 2000L).toDF().write.mode("overwrite").parquet(p)
     p
   }
@@ -73,7 +73,7 @@ class PlanShapeSpec extends SparkTestBase {
   }
 
   test("sessionize reads only (key, ts) from the source; ONE exchange (the key)") {
-    val p = java.nio.file.Files.createTempDirectory("graft-plan-ev").toString + "/events"
+    val p = tempDir("graft-plan-ev").toString + "/events"
     spark.range(1000).selectExpr("id AS event_id",
       "timestamp_micros(CAST(1700000000000000 + id * 1e7 AS LONG)) AS ts",
       "id % 20 AS user_id", "'x' AS event_type", "CAST(id AS DOUBLE) AS value")
@@ -94,7 +94,7 @@ class PlanShapeSpec extends SparkTestBase {
 
   test("top-k-per-group reads only the three involved columns") {
     // SparkEntry queries read <dir>/documents.parquet
-    val p = java.nio.file.Files.createTempDirectory("graft-plan-doc").toString + "/documents.parquet"
+    val p = tempDir("graft-plan-doc").toString + "/documents.parquet"
     spark.range(500).selectExpr("id AS doc_id", "'t' AS text",
       "CAST(id % 3 AS STRING) AS lang", "'s' AS source", "id * 7 AS n_chars")
       .write.mode("overwrite").parquet(p)

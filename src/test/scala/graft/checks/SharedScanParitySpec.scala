@@ -13,7 +13,7 @@ import graft.datagen.DocGen
 class SharedScanParitySpec extends SparkTestBase {
 
   private lazy val docs = {
-    val p = java.nio.file.Files.createTempDirectory("graft-ssp").toString + "/docs"
+    val p = tempDir("graft-ssp").toString + "/docs"
     DocGen.documents(spark, 3000).toDF()
       .write.mode("overwrite").parquet(p)
     spark.read.parquet(p)
@@ -55,7 +55,7 @@ class SharedScanParitySpec extends SparkTestBase {
       Row("d2", Seq(Row(null, null, null, 0))),
       Row("d3", Seq(Row("type", null, null, 0), Row("type", "class:B", null, 1))),
       Row("d4", Seq(Row(null, "x", "doc:9", 0), Row("med:link", null, "doc:7", 1))))
-    val p = java.nio.file.Files.createTempDirectory("graft-ssp2").toString + "/d"
+    val p = tempDir("graft-ssp2").toString + "/d"
     spark.createDataFrame(
       spark.sparkContext.parallelize(data), schema)
       .write.mode("overwrite").parquet(p)

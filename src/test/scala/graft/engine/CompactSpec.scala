@@ -11,7 +11,7 @@ import scala.jdk.CollectionConverters._
 class CompactSpec extends SparkTestBase {
 
   test("compact folds a multi-run outDir into one committed baseline run") {
-    val tmp = Files.createTempDirectory("graft-compact").toString
+    val tmp = tempDir("graft-compact").toString
     DocGen.documents(spark, 2000L).toDF()
       .write.mode("overwrite").parquet(s"$tmp/docs")
     val cfg = ValidatorConfig(

@@ -14,7 +14,7 @@ class FixSpec extends SparkTestBase {
     val badCount = before.count()
     assert(badCount > 0)
 
-    val tmp = java.nio.file.Files.createTempDirectory("graft-fix").toString
+    val tmp = tempDir("graft-fix").toString
     val log = Fix.fixDanglingRefs(spark, docs, DocGen.schema, s"$tmp/fixed")
 
     // fix log matches the plant: one med:link deletion per dangling doc

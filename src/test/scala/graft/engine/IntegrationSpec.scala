@@ -15,7 +15,7 @@ import java.nio.file.Files
 class IntegrationSpec extends SparkTestBase {
 
   test("annotated + bucketed + partial resume + fix compose") {
-    val tmp = Files.createTempDirectory("graft-integ").toString
+    val tmp = tempDir("graft-integ").toString
     val n = 2000L
     val docs = DocGen.annotatedDocuments(spark, n).toDF()
 

@@ -58,7 +58,7 @@ class LayoutSpec extends SparkTestBase {
 
   test("ValidatorApp reads a bucketed corpus via data.bucketedTable, same violations") {
     import org.apache.spark.sql.functions._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-bt").toString
+    val tmp = tempDir("graft-bt").toString
     val docs = DocGen.documents(spark, 2000L).toDF()
     docs.write.mode("overwrite").parquet(s"$tmp/docs")
     val base = ValidatorConfig(

@@ -23,7 +23,7 @@ class ManifestSnapshotSpec extends SparkTestBase {
     }
 
   test("interleaved uncommitted writer cannot make a committed reader double-count") {
-    val tmp = Files.createTempDirectory("graft-snap").toString
+    val tmp = tempDir("graft-snap").toString
     DocGen.documents(spark, 1500L).toDF()
       .write.mode("overwrite").parquet(s"$tmp/docs")
     val cfg = ValidatorConfig(
@@ -73,7 +73,7 @@ class ManifestSnapshotSpec extends SparkTestBase {
     import scala.jdk.CollectionConverters._
     val session = spark
     import session.implicits._
-    val tmp = Files.createTempDirectory("graft-runless")
+    val tmp = tempDir("graft-runless")
     val (snap, cHash, kHash) = ("snap-rl", "c0ffee01", "k1")
     // run 100: rows in buckets 0 and 1, and a dataset-level row (bucket -1)
     val runDir = tmp.resolve("out/violations/run=100")
@@ -103,7 +103,7 @@ class ManifestSnapshotSpec extends SparkTestBase {
   test("time travel: asOfRun resolves the snapshot as of an earlier commit; history lists travel points") {
     import org.apache.spark.sql.functions._
     import scala.jdk.CollectionConverters._
-    val tmp = Files.createTempDirectory("graft-travel").toString
+    val tmp = tempDir("graft-travel").toString
     DocGen.documents(spark, 1500L).toDF()
       .write.mode("overwrite").parquet(s"$tmp/docs")
     val cfg = ValidatorConfig(

@@ -9,10 +9,10 @@ import scala.jdk.CollectionConverters._
   * wrote, what it writes for them, and its rules for odd characters,
   * duplicates, torn appends and malformed lines. No Spark.
   */
-class ManifestSpec extends AnyFunSuite {
+class ManifestSpec extends AnyFunSuite with graft.TempDirs {
 
   private def tempManifest(): Path =
-    Files.createTempDirectory("graft-manifest").resolve("manifest.jsonl")
+    tempDir("graft-manifest").resolve("manifest.jsonl")
 
   /** A copy of `src/test/resources/manifest-compat/manifest.jsonl`. */
   private def compatCopy(): Path = {

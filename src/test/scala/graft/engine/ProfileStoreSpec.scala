@@ -26,7 +26,7 @@ class ProfileStoreSpec extends SparkTestBase {
   }
 
   test("profile rows per bucket; corpusProfile exact; stored-blob drift flags the planted shift") {
-    val tmp = Files.createTempDirectory("graft-profile").toString
+    val tmp = tempDir("graft-profile").toString
     val docsA = DocGen.documents(spark, 3000L).toDF()
     docsA.write.mode("overwrite").parquet(s"$tmp/docsA")
     // snapshot B: every span of every even doc grows by 200 chars — a
@@ -86,7 +86,7 @@ class ProfileStoreSpec extends SparkTestBase {
   }
 
   test("delta profile: touched buckets recomputed, untouched carried byte-for-byte, result ≡ full recompute") {
-    val tmp = Files.createTempDirectory("graft-profile-delta").toString
+    val tmp = tempDir("graft-profile-delta").toString
     val docsA = DocGen.documents(spark, 3000L).toDF().cache()
     // B touches only SOME docs: pad spans of docs whose bucket ∈ {0, 3}
     val bucket = pmod(xxhash64(col("doc_id")), lit(8))
@@ -137,7 +137,7 @@ class ProfileStoreSpec extends SparkTestBase {
   }
 
   test("delta profile over an EMPTY prior profile ≡ full profile; mixed or mispointed priors refused") {
-    val tmp = Files.createTempDirectory("graft-profile-empty").toString
+    val tmp = tempDir("graft-profile-empty").toString
     val docsB = DocGen.documents(spark, 1500L).toDF().cache()
     val empty = docsB.limit(0)
     // an empty prior corpus profiles to zero rows (0 snapshotIds)
@@ -172,7 +172,7 @@ class ProfileStoreSpec extends SparkTestBase {
   }
 
   test("bucket-partitioned layout: the delta's touched-bucket filter prunes the scan to the touched directories") {
-    val tmp = Files.createTempDirectory("graft-profile-prune").toString
+    val tmp = tempDir("graft-profile-prune").toString
     val docs = DocGen.documents(spark, 2000L).toDF()
     ProfileStore.writeBucketPartitioned(docs, 8, s"$tmp/docsPart")
     val part = spark.read.parquet(s"$tmp/docsPart")
@@ -204,7 +204,7 @@ class ProfileStoreSpec extends SparkTestBase {
   }
 
   test("trusted bucket check reads a bounded sample of a valid corpus; wrong bucket counts and unrelated columns refused") {
-    val tmp = Files.createTempDirectory("graft-profile-trust").toString
+    val tmp = tempDir("graft-profile-trust").toString
     val n = 40L * ProfileStore.TrustedBucketSample
     val docs = DocGen.documents(spark, n).toDF()
     ProfileStore.writeBucketPartitioned(docs, 8, s"$tmp/docsPart")
@@ -235,7 +235,7 @@ class ProfileStoreSpec extends SparkTestBase {
   }
 
   test("committed profile read: a torn writer without its artifact record is invisible") {
-    val tmp = Files.createTempDirectory("graft-profile-commit").toString
+    val tmp = tempDir("graft-profile-commit").toString
     DocGen.documents(spark, 1200L).toDF()
       .write.mode("overwrite").parquet(s"$tmp/docs")
     Files.writeString(java.nio.file.Paths.get(s"$tmp/run.properties"),
@@ -285,7 +285,7 @@ class ProfileStoreSpec extends SparkTestBase {
   }
 
   test("expireRuns: old committed profile runs retire record-first; travel to them returns None") {
-    val tmp = Files.createTempDirectory("graft-profile-expire").toString
+    val tmp = tempDir("graft-profile-expire").toString
     val docs = DocGen.documents(spark, 600L).toDF()
     val m = new Manifest(s"$tmp/manifest.jsonl")
     import scala.jdk.CollectionConverters._
@@ -320,7 +320,7 @@ class ProfileStoreSpec extends SparkTestBase {
   }
 
   test("committed profile read: a retried commit of the same run reads the retry's rows") {
-    val tmp = Files.createTempDirectory("graft-profile-retry").toString
+    val tmp = tempDir("graft-profile-retry").toString
     val m = new Manifest(s"$tmp/manifest.jsonl")
     import scala.jdk.CollectionConverters._
     // a retry rewrites the run directory (new part-file names, the first
@@ -342,7 +342,7 @@ class ProfileStoreSpec extends SparkTestBase {
   }
 
   test("drift.prevProfile without profile.enabled is refused") {
-    val tmp = Files.createTempDirectory("graft-profile-bad").toString
+    val tmp = tempDir("graft-profile-bad").toString
     DocGen.documents(spark, 100L).toDF()
       .write.mode("overwrite").parquet(s"$tmp/docs")
     Files.writeString(java.nio.file.Paths.get(s"$tmp/bad.properties"),
@@ -357,7 +357,7 @@ class ProfileStoreSpec extends SparkTestBase {
   }
 
   test("a long doc_id corpus: the profile's buckets are the verdicts' buckets") {
-    val tmp = Files.createTempDirectory("graft-profile-long").toString
+    val tmp = tempDir("graft-profile-long").toString
     val docs = DocGen.documents(spark, 600L).toDF()
       .withColumn("doc_id", substring(col("doc_id"), 5, 12).cast("long"))
     ProfileStore.writeRun(spark, docs, 8, tmp, 1L, "snap-long")

@@ -46,7 +46,7 @@ class ValidatorAppSpec extends SparkTestBase {
 
   /** Run the app once in full mode over a fresh DocGen corpus. */
   private def fullRun(n: Long): (String, ValidatorConfig) = {
-    val tmp = Files.createTempDirectory("graft-full").toString
+    val tmp = tempDir("graft-full").toString
     DocGen.documents(spark, n).toDF().write.mode("overwrite").parquet(s"$tmp/docs")
     Files.writeString(java.nio.file.Paths.get(s"$tmp/run.properties"),
       fullConf(s"$tmp/docs", s"$tmp/out"))
@@ -98,8 +98,29 @@ class ValidatorAppSpec extends SparkTestBase {
       s"validate_persist + core_persist scans: $scans")
   }
 
+  test("delta run: core_persist reads the cached core, per the run's metrics rows") {
+    val (tmp, _) = fullRun(1200L)
+    val coreDir = new java.io.File(s"$tmp/out/core").listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("run="))
+    assert(coreDir.length == 1, s"expected one core run dir, got ${coreDir.toSeq}")
+    // cur: the first 1100 docs of prev plus 100 fresh ones
+    spark.read.parquet(s"$tmp/docs").limit(1100)
+      .unionByName(DocGen.documentsRange(spark, 1200L, 1300L, 1300L).toDF())
+      .write.mode("overwrite").parquet(s"$tmp/cur")
+    Files.writeString(java.nio.file.Paths.get(s"$tmp/delta.properties"),
+      fullConf(s"$tmp/cur", s"$tmp/out2") +
+        s"delta.prevDocuments = $tmp/docs\ndelta.prevCore = ${coreDir(0).getAbsolutePath}\n")
+    ValidatorApp.run(spark, ValidatorConfig.load(s"$tmp/delta.properties"), s"$tmp/out2")
+    val scans = spark.read.parquet(s"$tmp/out2/metrics").collect()
+      .map(r => r.getAs[String]("stage") -> r.getAs[Long]("scans")).toMap
+    // the violations write builds the core's cache and the core write reads
+    // it; a composition that misses the cache computes the core twice, so
+    // the core write scans the current corpus and the prior core again
+    assert(scans("core_persist") == 0L, s"core_persist scans: $scans")
+  }
+
   test("config round-trip: dvt.ini-equivalent properties file → SchemaDef + pipeline") {
-    val tmp = Files.createTempDirectory("graft-app").toString
+    val tmp = tempDir("graft-app").toString
     DocGen.documents(spark, 2000L).toDF()
       .write.mode("overwrite").parquet(s"$tmp/docs")
 
@@ -175,7 +196,7 @@ class ValidatorAppSpec extends SparkTestBase {
     assert(ValidatorConfig.CheckRegistry(base).configure(params)
       .asInstanceOf[graft.checks.CheckDatatypeImpl].strict)
 
-    val tmp = Files.createTempDirectory("graft-params").toString
+    val tmp = tempDir("graft-params").toString
     DocGen.annotatedDocuments(spark, 1000L).toDF()
       .write.mode("overwrite").parquet(s"$tmp/docs")
     Files.writeString(java.nio.file.Paths.get(s"$tmp/run.properties"),
@@ -196,7 +217,7 @@ class ValidatorAppSpec extends SparkTestBase {
 
   test("PARTIAL resume: full-corpus fix, no dataset-row duplication, exact union-of-runs") {
     import org.apache.spark.sql.functions._
-    val tmp = Files.createTempDirectory("graft-resume").toString
+    val tmp = tempDir("graft-resume").toString
     DocGen.documents(spark, 3000L).toDF()
       .write.mode("overwrite").parquet(s"$tmp/docs")
     val cfg = ValidatorConfig(
@@ -246,7 +267,7 @@ class ValidatorAppSpec extends SparkTestBase {
 
   test("delta mode: app run against the prior snapshot's persisted core equals a full run") {
     import org.apache.spark.sql.functions._
-    val tmp = Files.createTempDirectory("graft-delta").toString
+    val tmp = tempDir("graft-delta").toString
     val prev = DocGen.documents(spark, 2000L).toDF()
     prev.write.mode("overwrite").parquet(s"$tmp/prev")
     // cur: remove %97==3, change %91==5 (span text suffix), add 100 fresh
@@ -360,7 +381,7 @@ class ValidatorAppSpec extends SparkTestBase {
   }
 
   test("delta lineage gate: a mismatched core is refused from its footers before any Spark job starts") {
-    val tmp = Files.createTempDirectory("graft-gate").toString
+    val tmp = tempDir("graft-gate").toString
     DocGen.documents(spark, 300L).toDF().write.parquet(s"$tmp/prev")
     DocGen.documents(spark, 310L).toDF().write.parquet(s"$tmp/cur")
     Files.writeString(java.nio.file.Paths.get(s"$tmp/run.properties"),
@@ -387,7 +408,7 @@ class ValidatorAppSpec extends SparkTestBase {
 
   test("delta lineage gate: two checksHash values across or within files, NULL lineage and missing statistics are refused") {
     import org.apache.spark.sql.functions._
-    val tmp = Files.createTempDirectory("graft-gate-files").toString
+    val tmp = tempDir("graft-gate-files").toString
     val (ch, kh) = ("c0ffee", "k1")
     def gate(dir: String): Unit = ValidatorApp.coreLineageGate(spark, s"$tmp/$dir", ch, kh)
     def refused(dir: String): String =
@@ -429,7 +450,7 @@ class ValidatorAppSpec extends SparkTestBase {
   }
 
   test("a refused config leaves no run= directory and no manifest record") {
-    val tmp = Files.createTempDirectory("graft-refuse").toString
+    val tmp = tempDir("graft-refuse").toString
     DocGen.documents(spark, 300L).toDF().write.mode("overwrite").parquet(s"$tmp/docs")
     val cfg = ValidatorConfig(
       documentsPath = s"$tmp/docs", snapshotId = "snap-refuse",

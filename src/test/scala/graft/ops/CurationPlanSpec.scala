@@ -46,7 +46,7 @@ class CurationPlanSpec extends SparkTestBase {
   private lazy val docsPath = {
     val session = spark
     import session.implicits._
-    val p = java.nio.file.Files.createTempDirectory("graft-cur").toString + "/docs"
+    val p = tempDir("graft-cur").toString + "/docs"
     (0L until 50L).map(i => (i, s"some text $i with words")).toDF("doc_id", "text")
       .repartition(4).write.mode("overwrite").parquet(p)
     p

@@ -28,7 +28,7 @@ class CurationSpec extends SparkTestBase {
   test("curate plan: the dedup window's exchange is the ONLY shuffle") {
     val session = spark
     import session.implicits._
-    val p = java.nio.file.Files.createTempDirectory("graft-curate").toString + "/d"
+    val p = tempDir("graft-curate").toString + "/d"
     (0L until 40L).map(i => (i, s"doc $i has several distinct words here"))
       .toDF("doc_id", "text").repartition(4).write.mode("overwrite").parquet(p)
     val old = spark.conf.getOption("spark.sql.adaptive.enabled")

@@ -40,7 +40,7 @@ class DedupDeltaSpec extends SparkTestBase {
   }
 
   private def roundTrip(df: DataFrame, name: String): DataFrame = {
-    val p = java.nio.file.Files.createTempDirectory(s"graft-$name").toString
+    val p = tempDir(s"graft-$name").toString
     df.write.mode("overwrite").parquet(p)
     spark.read.parquet(p)
   }

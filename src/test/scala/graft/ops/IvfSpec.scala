@@ -39,7 +39,7 @@ class IvfSpec extends SparkTestBase {
         base * (1.0f + d * 0.1f) + (math.sin(i * 0.37 + d) * 0.05).toFloat))
     }.toDF("vec_id", "embedding")
     val model = Ivf.train(vecs, c = 4, iters = 2)
-    val idx = java.nio.file.Files.createTempDirectory("graft-ivf").toString + "/index"
+    val idx = tempDir("graft-ivf").toString + "/index"
     Ivf.buildIndex(vecs, model, idx)
 
     val query = vecs.filter($"vec_id" === 200).collect()(0).getSeq[Float](1)

@@ -35,7 +35,7 @@ class RankingPlanSpec extends SparkTestBase {
   private lazy val docsPath = {
     val session = spark
     import session.implicits._
-    val p = java.nio.file.Files.createTempDirectory("graft-rank").toString + "/docs"
+    val p = tempDir("graft-rank").toString + "/docs"
     (0L until 60L).map(i => (i, s"alpha beta w$i gamma ${if (i % 3 == 0) "delta" else "eps"}"))
       .toDF("doc_id", "text").repartition(4).write.mode("overwrite").parquet(p)
     p

@@ -80,7 +80,7 @@ class SuggestSpec extends SparkTestBase {
   }
 
   test("suggest is ONE scan / ONE query execution, even with categorical columns") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-suggest").toString
+    val tmp = tempDir("graft-suggest").toString
     frame().write.mode("overwrite").parquet(s"$tmp/t")
     val audit = new graft.ScanSweep.ScanAudit
     spark.listenerManager.register(audit)
