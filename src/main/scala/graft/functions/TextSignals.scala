@@ -90,10 +90,8 @@ object TextSignals {
       val t0 = i
       while (i < n && letter(lowered.charAt(i))) i += 1
       val len = i - t0
-      if (len >= 1 && len <= MaxStopwordLen) {
-        val hit = StopwordBits.get(lowered.substring(t0, i))
-        if (hit != null) mask |= hit.longValue()
-      }
+      if (len >= 1 && len <= MaxStopwordLen)
+        mask |= StopwordBits.getOrDefault(lowered.substring(t0, i), 0L)
     }
     mask
   }
