@@ -42,25 +42,34 @@ import org.apache.xbean.asm9.tree._
   */
 object Reachability {
 
-  /** Public names kept for consumers although no entry point calls them:
-    * the names the frozen harness calls, and the engine's read and
-    * retention API. `*` alone keeps every member of the class; a trailing
-    * `*` matches a name prefix.
+  /** Public names kept for consumers although no entry point calls them,
+    * as (class, member, reason): the names the frozen harness calls, the
+    * engine's read, history and retention API, and the writers of the
+    * layouts the engine reads. `*` alone keeps every member of the class;
+    * a trailing `*` matches a name prefix.
     */
-  val Keep: Seq[(String, String)] = Seq(
-    "graft.engine.Pipeline" -> "violations",
-    "graft.engine.Pipeline" -> "verdicts",
-    "graft.checks.Checks" -> "all",
-    "graft.checks.CheckDatatypeImpl" -> "*",
-    "graft.ops.TextAnalysis" -> "langId",
-    "graft.stats.ThetaSketchAgg" -> "theta_sketch",
-    "graft.stats.KllSketchAgg" -> "kll_sketch",
-    "graft.stats.KllMergeAgg" -> "kll_merge",
-    "graft.engine.ValidatorApp" -> "readViolations*",
-    "graft.engine.ValidatorApp" -> "readVerdicts",
-    "graft.engine.ValidatorApp" -> "readSnapshot",
-    "graft.engine.ProfileStore" -> "readCommitted",
-    "graft.engine.ProfileStore" -> "expireRuns")
+  val Keep: Seq[(String, String, String)] = Seq(
+    ("graft.engine.Pipeline", "violations", "validation entry the frozen harness calls (ROADMAP aim 2)"),
+    ("graft.engine.Pipeline", "verdicts", "verdicts entry the frozen harness calls (ROADMAP aim 2)"),
+    ("graft.checks.Checks", "all", "default check set the frozen harness calls (ROADMAP aim 2)"),
+    ("graft.checks.CheckDatatypeImpl", "*", "datatype check the frozen harness calls (ROADMAP aim 2)"),
+    ("graft.ops.TextAnalysis", "langId", "language id the frozen harness calls (ROADMAP aim 2)"),
+    ("graft.stats.ThetaSketchAgg", "theta_sketch", "sketch facade the frozen harness calls (ROADMAP aim 2)"),
+    ("graft.stats.KllSketchAgg", "kll_sketch", "sketch facade the frozen harness calls (ROADMAP aim 2)"),
+    ("graft.stats.KllMergeAgg", "kll_merge", "sketch facade the frozen harness calls (ROADMAP aim 2)"),
+    ("graft.engine.ValidatorApp", "readViolations*", "committed read of a run's violations, with time travel (README)"),
+    ("graft.engine.ValidatorApp", "readVerdicts", "read of a run's verdicts table"),
+    ("graft.engine.ValidatorApp", "readSnapshot", "committed read of a snapshot's violations"),
+    ("graft.engine.ProfileStore", "readCommitted", "committed read of the stored profile (README)"),
+    ("graft.engine.ProfileStore", "expireRuns", "retention: bounds the stored profile runs (README)"),
+    ("graft.engine.Manifest", "committedRuns", "the time-travel history listing (README)"),
+    ("graft.engine.Layout", "writeBucketed", "writes the data.bucketedTable layout the app reads"),
+    ("graft.engine.ProfileStore", "writeBucketPartitioned", "writes the bucket-partitioned layout spanMetrics trusts"))
+
+  /** Whether a [[Keep]] member pattern names the method `name`. */
+  def keeps(member: String, name: String): Boolean =
+    member == "*" || name == member ||
+      member.endsWith("*") && name.startsWith(member.stripSuffix("*"))
 
   /** The committed listing, relative to the repo root. */
   val ListingFile = "tools/unreached.txt"
@@ -248,11 +257,9 @@ object Reachability {
           (m.access & Opcodes.ACC_STATIC) != 0) method(c, m)
     }
     named.foreach(reachName)
-    Keep.foreach { case (cls, member) =>
+    Keep.foreach { case (cls, member, _) =>
       val hits = all.filter { case (c, m) =>
-        displayName(c.name) == cls && listableMethod(m) &&
-          (member == "*" || m.name == member ||
-            member.endsWith("*") && m.name.startsWith(member.stripSuffix("*")))
+        displayName(c.name) == cls && listableMethod(m) && keeps(member, m.name)
       }
       require(hits.nonEmpty, s"kept name $cls.$member matches no compiled member")
       hits.foreach { case (c, m) => method(c, m) }
