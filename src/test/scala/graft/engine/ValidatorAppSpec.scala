@@ -98,7 +98,7 @@ class ValidatorAppSpec extends SparkTestBase {
       s"validate_persist + core_persist scans: $scans")
   }
 
-  test("delta run: core_persist reads the cached core, per the run's metrics rows") {
+  test("delta run: core_persist reads the cached core, per the metrics rows") {
     val (tmp, _) = fullRun(1200L)
     val coreDir = new java.io.File(s"$tmp/out/core").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("run="))
