@@ -125,31 +125,38 @@ object Ranking {
     * one-pass top-terms design for 10^12-doc corpora where even the
     * term-keyed exchange of [[docFrequencies]] is unwelcome:
     *
-    *  1. Misra–Gries sketch pass ([[graft.functions.HeavyHittersAgg]]):
-    *     bounded ≤k-entry state per task, map-side combined, ONE exchange
-    *     of k-entry summaries;
-    *  2. candidate collect — ≤k rows to the driver (the same bounded
-    *     scalar-collect budget as BPE's per-round argmax);
+    *  1. frequent-items sketch pass ([[graft.stats.FreqSketchAgg]], the
+    *     DataSketches Misra–Gries `ItemsSketch`): ≤ `maxMapSize` counters
+    *     per task, map-side combined, ONE exchange of fixed-size blobs;
+    *  2. candidates — every term whose upper bound reaches `minCount`
+    *     (NO_FALSE_NEGATIVES), ≤ 0.75·maxMapSize strings on the driver;
     *  3. exact-count verify restricted to the candidates: a map-side
-    *     `isin` filter (k string literals), then a ≤k-group aggregation.
+    *     `isin` filter, then a ≤ candidates-group aggregation.
     *
-    * PROVABLY exact for `minCount > N/(k+1)` (the Misra–Gries
-    * completeness bound, which survives merging — Agarwal et al.,
-    * "Mergeable Summaries"): every term at that frequency is guaranteed
-    * into the candidate set, and the verify pass reports true counts —
-    * the Bloom-decontamination discipline (approximate prefilter, exact
-    * verify, exact result, hash-oracled as q_heavy_hitters).
+    * PROVABLY exact when `minCount` exceeds the merged sketch's
+    * `getMaximumError` (the Misra–Gries completeness bound survives
+    * merging — Agarwal et al., "Mergeable Summaries"): every term at that
+    * frequency is among the candidates, and the verify pass reports true
+    * counts (hash-oracled as q_heavy_hitters). A `minCount` at or under
+    * the error is refused, since the candidates could miss a term; a
+    * larger `maxMapSize` (a power of 2) lowers the error.
     */
-  def heavyHitterTerms(docs: DataFrame, minCount: Long, k: Int = 256,
+  def heavyHitterTerms(docs: DataFrame, minCount: Long, maxMapSize: Int = 1024,
                        text: String = "text"): DataFrame = {
+    import org.apache.datasketches.frequencies.ErrorType
     val terms = docs.select(
         explode(split(TextAnalysis.canonicalText(col(text)), " ")).as("term"))
       .filter(col("term") =!= "")
-    val sketch = terms.agg(
-        graft.functions.HeavyHittersAgg.heavyHitters(col("term"), k).as("hh"))
-      .collect()(0).getSeq[org.apache.spark.sql.Row](0)
-    val cands = sketch.map(_.getString(0))
-    terms.filter(col("term").isin(cands: _*))
+    val sketch = graft.stats.FreqStats.sketchOf(terms.agg(
+        graft.stats.FreqSketchAgg.freq_sketch(col("term"), maxMapSize))
+      .collect()(0).getAs[Array[Byte]](0))
+    require(minCount > sketch.getMaximumError,
+      s"heavyHitterTerms: minCount=$minCount is not above the sketch's maximum " +
+        s"error ${sketch.getMaximumError} (maxMapSize=$maxMapSize), so the " +
+        "candidates could miss a term; raise minCount or use a larger maxMapSize")
+    val cands = sketch.getFrequentItems(minCount - 1, ErrorType.NO_FALSE_NEGATIVES)
+      .map(_.getItem)
+    terms.filter(col("term").isin(cands.toIndexedSeq: _*))
       .groupBy(col("term")).agg(count(lit(1)).as("n"))
       .filter(col("n") >= minCount)
   }

@@ -123,7 +123,7 @@ object Sampling {
     * `row_number() OVER (PARTITION BY stratum ORDER BY key DESC)` window
     * would sort a hot stratum's whole projection in one task (the
     * capPerDomain hazard), so the winners come from the bounded
-    * [[graft.functions.TopKByScoreAgg]] heap (≤k (id, key) pairs per
+    * [[graft.functions.TopK.topKByScore]] heap (≤k (id, key) pairs per
     * state, map-side combined). Deterministic: A-ES keys are pure
     * functions of (key, weight), ties break on the smaller id. Rows with
     * non-positive weight are dropped (null A-ES key), as in
@@ -134,8 +134,7 @@ object Sampling {
     df.withColumn("ares_key", aresKey(col(key), col(weight)))
       .filter(col("ares_key").isNotNull)
       .groupBy(col(stratum))
-      .agg(graft.functions.TopKByScoreAgg
-        .topKByScore(col("ares_key"), col(key), k).as("__top"))
+      .agg(graft.functions.TopK.topKByScore(col("ares_key"), col(key), k).as("__top"))
       .select(col(stratum), explode(col("__top")).as("__r"))
       .select(col(stratum), col("__r.id").as(key), col("__r.score").as("ares_key"))
 

@@ -274,8 +274,7 @@ object Similarity {
     val winners = assigned
       .select(col("cluster").as("__div_c"), col(id).cast("long").as("__div_i"))
       .groupBy("__div_c")
-      .agg(graft.functions.KSmallestLongsAgg
-        .kSmallest(col("__div_i"), perCluster).as("keep"))
+      .agg(graft.functions.TopK.kSmallest(col("__div_i"), perCluster).as("keep"))
       .select(col("__div_c"), explode(col("keep")).as("__div_i"))
     assigned.join(winners,
       assigned("cluster") === winners("__div_c") &&

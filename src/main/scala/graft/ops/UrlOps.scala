@@ -170,8 +170,8 @@ object UrlOps {
     * Scale shape — skew-immune: registrable domains are the canonical hot
     * key (wordpress.com), and a window rank would sort a mega-domain's
     * whole projection in ONE task. Instead the winners come from a bounded
-    * k-smallest `TypedImperativeAggregate`
-    * ([[graft.functions.KSmallestLongsAgg]]): every map task contributes
+    * k-smallest aggregate ([[graft.functions.TopK.kSmallest]], Catalyst's
+    * `CollectTopK`): every map task contributes
     * ≤ k candidates per domain to the one domain-keyed exchange, the merged
     * state is ≤ k longs, and no per-domain sort of the full row set exists
     * anywhere in the plan (plan-asserted: no WindowExec). Losers (over-cap
@@ -184,7 +184,7 @@ object UrlOps {
     val dom = urlMentions(docs, id, text)
       .filter(col("url_idx") === 0).select(col(id), col("domain"))
     val winners = dom.groupBy(col("domain"))
-      .agg(graft.functions.KSmallestLongsAgg.kSmallest(col(id), k).as("keep"))
+      .agg(graft.functions.TopK.kSmallest(col(id), k).as("keep"))
       .select(explode(col("keep")).as(id))
     val losers = dom.select(col(id).cast("long").as(id))
       .join(winners, Seq(id), "left_anti")

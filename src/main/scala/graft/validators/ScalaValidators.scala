@@ -129,7 +129,7 @@ object ScalaValidators {
     true
   }
 
-  /** EXACT hand evaluation of LanguageRegex
+  /** EXACT hand evaluation of the xsd:language pattern
     * (`^[a-zA-Z]{1,8}(-[a-zA-Z0-9]{1,8})*$`) under `find()` — full
     * equivalence, no fallback needed (ScalaValidatorParitySpec fuzzes it
     * against the pattern). Without MULTILINE, `$` also matches before ONE
@@ -173,7 +173,6 @@ object ScalaValidators {
   private val numericRx = rx(XsdValidators.NumericRegex)
   private val integerRx = rx(XsdValidators.IntegerRegex)
   private val hexRx = rx(XsdValidators.HexBinaryRegex)
-  private val languageRx = rx(XsdValidators.LanguageRegex)
   private val nameRx = rx(XsdValidators.NameRegex)
   private val ncNameRx = rx(XsdValidators.NCNameRegex)
   private val nmtokenRx = rx(XsdValidators.NmtokenRegex)

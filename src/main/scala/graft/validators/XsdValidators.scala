@@ -53,7 +53,6 @@ object XsdValidators {
 
   val IntegerRegex: String = """^[+-]?\d+$"""
   val HexBinaryRegex: String = "^([0-9a-fA-F]{2})+$"
-  val LanguageRegex: String = "^[a-zA-Z]{1,8}(-[a-zA-Z0-9]{1,8})*$"
   // [a-zA-z] ranges kept verbatim from Check.php:447,455,463.
   val NameRegex: String = """^[a-zA-Z_:]{1}[a-zA-z0-9_:\-\.]*$"""
   val NCNameRegex: String = """^[a-zA-Z_]{1}[a-zA-z0-9_\-\.]*$"""

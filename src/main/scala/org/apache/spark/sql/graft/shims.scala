@@ -2,6 +2,7 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.aggregate.CollectTopK
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Bridge between graft's custom Catalyst expressions and the public Column
@@ -13,6 +14,13 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object shims {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** Catalyst's bounded top-k collect (`collect_top_k`, not SQL-registered):
+    * the `num` largest values of `c` per group, descending, or with
+    * `reverse` the `num` smallest, ascending. NULL inputs are skipped.
+    */
+  def collectTopK(c: Column, num: Int, reverse: Boolean): Column =
+    column(new CollectTopK(expression(c), num, reverse).toAggregateExpression())
 
   /** Drain the shared listener bus — QueryExecutionListener events ride it
     * asynchronously, so a scan-count audit must flush before reading its

@@ -89,17 +89,17 @@ class FuzzRobustnessSpec extends SparkTestBase {
     rows.foreach(r => assert(r.isNullAt(0), s"adversarial payload parsed: $r"))
   }
 
-  test("TopKByScoreAgg: NaN scores never occupy a slot and never perturb the result") {
+  test("TopK.topKByScore: NaN scores never occupy a slot and never perturb the result") {
     val session = spark
     import session.implicits._
-    // NaN rows FIRST in arrival order — pre-fix they were admitted while
-    // the buffer was under k and could never be displaced (`>` vs NaN is
-    // always false), stealing top-k slots arrival-order-dependently.
+    // NaN rows FIRST in arrival order: a heap that admitted them while
+    // under k and never displaced them (`>` vs NaN is always false) would
+    // steal top-k slots arrival-order-dependently.
     val rows = Seq.tabulate(5)(i => (0, 1000L + i, Double.NaN)) ++
       Seq.tabulate(20)(i => (0, i.toLong, i.toDouble))
     val got = rows.toDF("g", "id", "s").repartition(1) // arrival order preserved
       .groupBy("g")
-      .agg(graft.functions.TopKByScoreAgg.topKByScore(col("s"), col("id"), 6).as("t"))
+      .agg(graft.functions.TopK.topKByScore(col("s"), col("id"), 6).as("t"))
       .collect()(0).getSeq[org.apache.spark.sql.Row](1)
       .map(x => (x.getLong(0), x.getDouble(1)))
     assert(got == Seq.tabulate(20)(i => (i.toLong, i.toDouble))
@@ -296,7 +296,7 @@ class FuzzRobustnessSpec extends SparkTestBase {
     assert(got(6) == "&lt;still&gt;")  // amp-last chain: one decode layer
   }
 
-  test("KSmallestLongsAgg: equals sorted.take(k) per group over random multisets and partitionings") {
+  test("TopK.kSmallest: equals sorted.take(k) per group over random multisets and partitionings") {
     val session = spark
     import session.implicits._
     val rows = genCases(for {
@@ -305,7 +305,7 @@ class FuzzRobustnessSpec extends SparkTestBase {
     } yield (g, v), 900)
     val got = rows.toDF("g", "v").repartition(17)
       .groupBy("g")
-      .agg(graft.functions.KSmallestLongsAgg.kSmallest(col("v"), 7).as("ks"))
+      .agg(graft.functions.TopK.kSmallest(col("v"), 7).as("ks"))
       .collect().map(r => r.getInt(0) -> r.getSeq[Long](1)).toMap
     rows.groupBy(_._1).foreach { case (g, vs) =>
       val exp = vs.map(_._2).sorted.take(7)
@@ -313,7 +313,7 @@ class FuzzRobustnessSpec extends SparkTestBase {
     }
   }
 
-  test("TopKByScoreAgg: equals the (score desc, id asc) window top-k per group over random data") {
+  test("TopK.topKByScore: equals the (score desc, id asc) window top-k per group over random data") {
     val session = spark
     import session.implicits._
     val rows = genCases(for {
@@ -323,7 +323,7 @@ class FuzzRobustnessSpec extends SparkTestBase {
     } yield (g, id, s), 800).distinct
     val got = rows.toDF("g", "id", "s").repartition(13)
       .groupBy("g")
-      .agg(graft.functions.TopKByScoreAgg.topKByScore(col("s"), col("id"), 6).as("t"))
+      .agg(graft.functions.TopK.topKByScore(col("s"), col("id"), 6).as("t"))
       .collect().map(r => r.getInt(0) ->
         r.getSeq[org.apache.spark.sql.Row](1).map(x => (x.getLong(0), x.getDouble(1)))).toMap
     rows.groupBy(_._1).foreach { case (g, vs) =>
@@ -331,6 +331,41 @@ class FuzzRobustnessSpec extends SparkTestBase {
         .sortBy { case (id, s) => (-s, id) }.take(6)
       assert(got(g) == exp, s"group $g: ${got(g)} != $exp")
     }
+  }
+
+  test("TopK.topKByScore: signed zeros, NaN and NULL rows match the (score desc, id) window top-k") {
+    val session = spark
+    import session.implicits._
+    import org.apache.spark.sql.expressions.Window
+    // zeros dominate so the k-th slot usually falls among -0.0/0.0 ties,
+    // which a `score DESC, id` sort breaks on id alone
+    val rows = genCases(for {
+      g <- Gen.chooseNum(0, 4)
+      id <- Gen.frequency(9 -> Gen.chooseNum(0L, 300L).map(Option(_)), 1 -> Gen.const(None))
+      s <- Gen.frequency(
+        4 -> Gen.const(Some(-0.0)), 4 -> Gen.const(Some(0.0)),
+        1 -> Gen.const(Some(Double.NaN)), 1 -> Gen.const(None),
+        1 -> Gen.chooseNum(-3.0, 3.0).map(Option(_)))
+    } yield (g, id, s), 400)
+    val df = rows.toDF("g", "id", "s").repartition(7)
+    val got = df.groupBy("g")
+      .agg(graft.functions.TopK.topKByScore(col("s"), col("id"), 6).as("t"))
+      .collect().map(r => r.getInt(0) ->
+        r.getSeq[org.apache.spark.sql.Row](1).map(x => (x.getLong(0), x.getDouble(1)))).toMap
+    val exp = df.filter(col("id").isNotNull && col("s").isNotNull && !isnan(col("s")))
+      .withColumn("rk", row_number().over(
+        Window.partitionBy("g").orderBy(col("s").desc, col("id"))))
+      .filter(col("rk") <= 6).orderBy("g", "rk").collect()
+      .groupBy(_.getInt(0)).map { case (g, rs) =>
+        g -> rs.toSeq.map(r => (r.getLong(1), r.getDouble(2))) }
+    assert(got.keySet == exp.keySet, s"groups ${got.keySet} != ${exp.keySet}")
+    // not vacuous: some group ranks a -0.0 row above a 0.0 row (smaller id)
+    def negZero(s: Double) = s == 0.0 && 1.0 / s < 0
+    assert(exp.values.exists { e =>
+      val n = e.indexWhere(p => negZero(p._2))
+      n >= 0 && e.drop(n).exists(p => p._2 == 0.0 && !negZero(p._2))
+    }, s"no -0.0 ahead of 0.0 in $exp")
+    exp.foreach { case (g, e) => assert(got(g) == e, s"group $g: ${got(g)} != $e") }
   }
 
   test("weightedTopKPerStratum: agg path equals the window-rank selection per stratum") {
@@ -356,27 +391,31 @@ class FuzzRobustnessSpec extends SparkTestBase {
     val plan = Sampling.weightedTopKPerStratum(docs, "doc_id", "w", "lang", 11)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Window"), s"window leaked:\n$plan")
-    assert(plan.contains("top_k_by_score"), plan)
+    assert(plan.contains("collect_top_k"), plan)
   }
 
-  test("HeavyHittersAgg: MG guarantee holds over random skewed streams and partitionings") {
+  test("freq_sketch: no-false-negatives guarantee holds over random skewed streams and partitionings") {
     val session = spark
     import session.implicits._
-    val k = 8
+    import org.apache.datasketches.frequencies.ErrorType
+    val maxMapSize = 8
     val items = genCases(Gen.frequency(
       5 -> Gen.const("heavy0"), 3 -> Gen.const("heavy1"),
       4 -> Gen.chooseNum(0, 400).map(i => s"tail$i")), 1200)
-    val hh = items.toDF("term").repartition(11)
-      .agg(graft.functions.HeavyHittersAgg.heavyHitters(col("term"), k).as("h"))
-      .collect()(0).getSeq[org.apache.spark.sql.Row](0)
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(hh.size <= k)
+    val sk = graft.stats.FreqStats.sketchOf(items.toDF("term").repartition(11)
+      .agg(graft.stats.FreqSketchAgg.freq_sketch(col("term"), maxMapSize))
+      .collect()(0).getAs[Array[Byte]](0))
+    assert(sk.getNumActiveItems <= maxMapSize * 3 / 4)
+    val bound = sk.getMaximumError
+    assert(bound > 0L, "the stream must overflow the counter map")
+    val hh = sk.getFrequentItems(ErrorType.NO_FALSE_NEGATIVES)
+      .map(r => r.getItem -> (r.getLowerBound, r.getUpperBound)).toMap
     val truth = items.groupBy(identity).view.mapValues(_.size.toLong).toMap
-    val bound = items.size.toLong / (k + 1)
     truth.filter(_._2 > bound).foreach { case (item, n) =>
       assert(hh.contains(item), s"$item (n=$n > bound=$bound) missing from $hh")
-      assert(hh(item) <= n && hh(item) >= n - bound,
-        s"$item est ${hh(item)} outside [${n - bound}, $n]")
+      val (lb, ub) = hh(item)
+      assert(lb <= n && n <= ub && ub - lb <= bound,
+        s"$item bounds [$lb, $ub] miss $n or exceed $bound")
     }
   }
 }

@@ -70,36 +70,34 @@ class RankingSpec extends SparkTestBase {
     import session.implicits._
     // 3 heavy terms (600/500/450 occurrences) in a sea of 2000 singletons,
     // spread over 16 partitions so the sketch actually MERGES partials;
-    // N = 3550, k = 16 → completeness bound N/(k+1) ≈ 209
+    // N = 3550, maxMapSize = 64 → error bound ε·N = 3.5/64·N ≈ 194
     val words = Seq.fill(600)("alpha") ++ Seq.fill(500)("beta") ++
       Seq.fill(450)("gamma") ++ (0 until 2000).map(i => s"noise$i")
     val docs = words.grouped(25).zipWithIndex
       .map { case (ws, i) => (i.toLong, ws.mkString(" ")) }.toSeq
       .toDF("doc_id", "text").repartition(16)
-    val got = Ranking.heavyHitterTerms(docs, minCount = 300L, k = 16)
+    val got = Ranking.heavyHitterTerms(docs, minCount = 300L, maxMapSize = 64)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got == Map("alpha" -> 600L, "beta" -> 500L, "gamma" -> 450L),
       s"got $got")
-    // counts are TRUE counts (verify pass), not MG underestimates
+    // counts are TRUE counts (verify pass), not sketch estimates
     assert(got.values.sum == 1550L)
     // raising the threshold past a heavy term's count drops exactly it
-    val strict = Ranking.heavyHitterTerms(docs, minCount = 460L, k = 16)
+    val strict = Ranking.heavyHitterTerms(docs, minCount = 460L, maxMapSize = 64)
       .collect().map(_.getString(0)).toSet
     assert(strict == Set("alpha", "beta"), s"got $strict")
   }
 
-  test("HeavyHittersAgg: MG guarantee — every >N/(k+1) item present, estimates within the bound") {
+  test("heavyHitterTerms: refuses a minCount at or below the sketch's maximum error") {
     val session = spark
     import session.implicits._
-    val items = (Seq.fill(120)("hot") ++ (0 until 200).map(i => s"cold$i"))
-    val df = items.toDF("term").repartition(8)
-    val hh = df.agg(graft.functions.HeavyHittersAgg.heavyHitters(col("term"), 4).as("h"))
-      .collect()(0).getSeq[org.apache.spark.sql.Row](0)
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(hh.size <= 4)
-    // N = 320, k = 4 → bound 64; "hot" (120) must be present with an
-    // estimate within [120 - 64, 120]
-    assert(hh.contains("hot"), s"got $hh")
-    assert(hh("hot") <= 120L && hh("hot") >= 120L - 64L, s"got ${hh("hot")}")
+    // 300 distinct terms overflow an 8-counter map, so the sketch's
+    // maximum error is positive and a term seen once could be missed
+    val docs = (0 until 30).map(d => (d.toLong, (0 until 10).map(i => s"t${d * 10 + i}").mkString(" ")))
+      .toDF("doc_id", "text").repartition(4)
+    val e = intercept[IllegalArgumentException](
+      Ranking.heavyHitterTerms(docs, minCount = 1L, maxMapSize = 8))
+    assert(e.getMessage.contains("maximum error") && e.getMessage.contains("maxMapSize=8"),
+      e.getMessage)
   }
 }

@@ -45,6 +45,6 @@ class SamplingPlanSpec extends SparkTestBase {
     // corpus side reaches the semi-join without an exchange)
     val shuffles = p.collect { case e: ShuffleExchangeExec => e }
     assert(shuffles.size <= 1, s"${shuffles.size} shuffles:\n$p")
-    assert(p.toString.contains("k_smallest"), p.toString)
+    assert(p.toString.contains("collect_top_k"), p.toString)
   }
 }

@@ -155,7 +155,7 @@ class UrlOpsSpec extends SparkTestBase {
     // the skew guarantee is structural: no per-domain window sort anywhere
     val plan = UrlOps.capPerDomain(docs, k = 7).queryExecution.executedPlan.toString
     assert(!plan.contains("Window"), s"window leaked into the capped plan:\n$plan")
-    assert(plan.contains("k_smallest"), s"bounded aggregate missing:\n$plan")
+    assert(plan.contains("collect_top_k"), s"bounded aggregate missing:\n$plan")
   }
 
   test("filterBlockedDomains: drops docs with ANY blocked mention, keeps the rest; blocklist side broadcast") {

@@ -52,6 +52,8 @@ object XsdColumnOracle {
   def base64Binary(c: Column): Column =
     c.rlike(Base64ShapeRegex) && base64(unbase64(c)) === c
 
+  /** xsd:language; the engine evaluates it by hand (`languageExact`). */
+  val LanguageRegex: String = "^[a-zA-Z]{1,8}(-[a-zA-Z0-9]{1,8})*$"
   def language(c: Column): Column = c.rlike(LanguageRegex)
   def nameT(c: Column): Column = c.rlike(NameRegex)
   def ncName(c: Column): Column = c.rlike(NCNameRegex)
